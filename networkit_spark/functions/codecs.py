@@ -43,6 +43,8 @@ def decode_bmp(payload: bytes) -> np.ndarray:
     if bpp != 24 or compression != 0:
         raise ValueError(f"unsupported BMP variant (bpp={bpp}, "
                          f"compression={compression}); only raw 24-bit")
+    if width <= 0 or height == 0:
+        raise ValueError("corrupt BMP dimensions")
     top_down = height < 0
     height = abs(height)
     stride = (width * 3 + 3) // 4 * 4

@@ -25,8 +25,8 @@ the same update rule, which is fully deterministic — strictly stronger for
 a distributed engine — and is asserted the way the reference asserts
 (tests/test_labelprop.py). Synchronous LP can 2-cycle on symmetric
 structures (e.g. a single edge), which the default max_iterations bounds;
-the async-within-partition Arrow kernel planned for the gather-scatter path
-removes the oscillation the same way the reference's asynchrony does.
+operators/labelprop_async.py removes the oscillation the same way the
+reference's asynchrony does.
 
 Spark plan per superstep:
     msgs     = labels ⋈ sym_edges on src → (dst, label, weight)
@@ -34,11 +34,14 @@ Spark plan per superstep:
     heaviest = groupBy(id) struct-max of (weight, -label)    [hash-agg argmax
                = the reference's max-weight-then-smallest-label tie-break,
                no sort-based window]
+The label frame is broadcast when it fits spark.sql.autoBroadcastJoinThreshold
+(`_broadcast_labels`); otherwise each aggregation exchanges on its own key,
+which measured fastest at RMAT 2^24 (510.5 s, against 745.9 s for one
+nid exchange and 838.6 s for a forced broadcast; BASELINE.md).
 """
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, functions as F
@@ -46,6 +49,9 @@ from pyspark.storagelevel import StorageLevel
 
 from networkit_spark.graph import Graph
 from networkit_spark.plans.iterative import Checkpointer, truncate
+from networkit_spark.session import size_bytes
+
+_LABEL_ROW_BYTES = 24  # Spark's (id, label) row estimate: 8 B + two longs
 
 
 @dataclass
@@ -53,8 +59,7 @@ class PLPResult:
     labels: DataFrame  # (id: long, label: long)
     iterations: int
     # Per-sweep dicts {"iteration": k, "updated": n}. In fixed-iteration
-    # mode (threshold < 0) the per-sweep count job is skipped — and with
-    # checkpoint_every > 1 whole sweeps are fused into one job — so
+    # mode (threshold < 0) the per-sweep count job is skipped, so
     # "updated" is the integer sentinel -1 (count not measured), never
     # None: consumers summing/thresholding the counts stay type-safe.
     history: list = field(default_factory=list)
@@ -69,7 +74,6 @@ class PLPResult:
 def _heaviest_labels(labels: DataFrame, sym: DataFrame,
                      active: DataFrame | None = None,
                      broadcast_labels: bool = False,
-                     repartition_nid: int | None = None,
                      weighted: bool = True) -> DataFrame:
     """One synchronous sweep: (id, heaviest) for every node with ≥1 neighbor.
 
@@ -85,10 +89,8 @@ def _heaviest_labels(labels: DataFrame, sym: DataFrame,
       adds NO exchange, and with `sym` persisted hash-partitioned by
       dst the messages are BORN clustered on nid — both aggregations
       run partition-locally.  Zero m-row shuffle per sweep.
-    - else repartition_nid=N exchanges the messages ONCE on hash(nid);
-      hash(nid) satisfies the clustering of BOTH downstream groupings
-      ((nid,label) ⊇ nid and (nid)), so neither aggregation adds an
-      exchange: one m-row shuffle per sweep instead of two."""
+    - else the two aggregations exchange on (nid, label), then nid;
+      partial aggregation compresses the messages once labels repeat."""
     lbl = F.broadcast(labels) if broadcast_labels else labels
     # Unweighted graphs: every weight is defaultEdgeWeight=1.0, so the
     # message drops the weight column (-33% exchange bytes) and the
@@ -98,8 +100,6 @@ def _heaviest_labels(labels: DataFrame, sym: DataFrame,
     msgs = lbl.join(sym, lbl.id == sym.src).select(*msg_cols)
     if active is not None:
         msgs = msgs.join(active.select(F.col("id").alias("nid")), "nid", "left_semi")
-    if repartition_nid:
-        msgs = msgs.repartition(repartition_nid, "nid")
     agg = F.sum("weight") if weighted else F.count(F.lit(1)).cast("double")
     lw = msgs.groupBy("nid", "label").agg(agg.alias("w"))
     # argmax(w desc, label asc) as a lexicographic struct-max: a pure hash
@@ -117,6 +117,13 @@ def _heaviest_labels(labels: DataFrame, sym: DataFrame,
     )
 
 
+def _broadcast_labels(spark, n: int) -> bool:
+    """True when an n-row label frame fits the session's broadcast
+    threshold (spark.sql.autoBroadcastJoinThreshold; -1 never broadcasts)."""
+    limit = size_bytes(spark.conf.get("spark.sql.autoBroadcastJoinThreshold"))
+    return n * _LABEL_ROW_BYTES <= limit
+
+
 def label_propagation(
     graph: Graph,
     update_threshold: int | None = None,
@@ -125,18 +132,9 @@ def label_propagation(
     checkpointer: Checkpointer | None = None,
     resume: bool = False,
     use_active_set: bool = True,
-    checkpoint_every: int = 1,
 ) -> PLPResult:
     """Synchronous PLP. use_active_set=False forces a full sweep every
-    superstep (identical labels; used by the SQL-oracle-mirrored queries).
-
-    checkpoint_every fuses that many FIXED-MODE sweeps (threshold < 0,
-    no active set — the mode with no per-sweep convergence read) into
-    one Spark job before materializing, like pagerank_fixed: identical
-    labels, one job + one lineage truncation instead of one per sweep.
-    Each unfused sweep references the previous state twice (message agg
-    + merge join), so plan size grows ~2^k with the fusion depth — keep
-    it ≤ ~4; values > 4 are clamped."""
+    superstep (identical labels; used by the SQL-oracle-mirrored queries)."""
     spark = graph.edges.sparkSession
     ckpt = checkpointer or Checkpointer(spark, None, algorithm="plp")
     num = graph.num_partitions or spark.sparkContext.defaultParallelism
@@ -148,16 +146,8 @@ def label_propagation(
     # Regime pick (see _heaviest_labels): when the label frame is small
     # enough to broadcast every sweep, persist the edges partitioned by
     # DST so message aggregation never exchanges an edge-sized table; at
-    # web scale (n beyond broadcast reach) fall back to src partitioning
-    # + one nid exchange per sweep.
-    broadcast_mode = n <= int(os.environ.get("NKS_PLP_BROADCAST_N", "8000000"))
-    # Large-regime exchange strategy (A/B-able, see BENCH_r5_10x plp rows):
-    # 1 → repartition raw messages ONCE on nid (both aggs then local;
-    # no map-side combine), 0 → let the two aggregations exchange
-    # ((nid,label) then nid; partial aggregation compresses sweeps where
-    # labels have coalesced). Bytes are within noise of each other at
-    # 2^24; the combine-friendly form wins once labels repeat.
-    single_exchange = os.environ.get("NKS_PLP_NID_EXCHANGE", "0") == "1"
+    # web scale (n beyond broadcast reach) fall back to src partitioning.
+    broadcast_mode = _broadcast_labels(spark, n)
     part_key = "dst" if broadcast_mode else "src"
     # Self-loops participate in the label weighing (reference forNeighborsOf
     # yields them), so keep them in the message table. Unweighted graphs
@@ -196,8 +186,6 @@ def label_propagation(
         heaviest = _heaviest_labels(
             labels, sym, active_set,
             broadcast_labels=broadcast_mode,
-            repartition_nid=num if (single_exchange and not broadcast_mode)
-            else None,
             weighted=graph.weighted,
         )
 
@@ -241,18 +229,6 @@ def label_propagation(
             merged = merged.withColumn("active", F.lit(True))
 
         iterations += 1
-        fused = (
-            threshold < 0
-            and not use_active_set
-            and iterations % max(1, min(checkpoint_every, 4)) != 0
-            and iterations < max_iterations
-        )
-        if fused:
-            # Fixed-mode fusion: defer materialization, let the next
-            # sweep stack onto this one's plan (same labels, fewer jobs).
-            history.append({"iteration": iterations, "updated": -1})
-            state = merged
-            continue
         snap = ckpt.save(merged, iterations, None)
         if threshold < 0:
             # Fixed-iteration mode: the loop never stops on the update
@@ -280,11 +256,5 @@ def label_propagation_fixed(graph: Graph, n_iter: int) -> DataFrame:
         update_threshold=-1,  # never stop on threshold
         max_iterations=n_iter,
         use_active_set=False,
-        # Measured at sf0.1 (materialized seed state): per-sweep
-        # materialization beats fusing — each unfused sweep references
-        # the previous state twice, so a fused job recomputes more than
-        # the saved materialization costs. Fusion stays available for
-        # workloads where materialization dominates (wide states).
-        checkpoint_every=1,
     )
     return res.labels

@@ -9,8 +9,42 @@ you'd also set on a real cluster (AQE, Arrow, skew-join handling). On a
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
+
+_FALLBACK_DRIVER_MEMORY = "4g"  # hosts without /proc/meminfo
+_SIZE = re.compile(r"\s*(-?\d+)\s*([kmgtp]?)(b?)\s*", re.IGNORECASE)
+_SHIFT = {"": 0, "k": 10, "m": 20, "g": 30, "t": 40, "p": 50}
+
+
+def size_bytes(text: str, bare_unit: str = "b") -> int:
+    """A Spark size string ('10485760b', '1g', '512m', '-1') in bytes.
+    A number with no suffix is in `bare_unit`: Spark reads bare memory
+    settings (spark.driver.memory, ...) as MiB, bare thresholds as bytes."""
+    m = _SIZE.fullmatch(text)
+    if m is None:
+        raise ValueError(f"not a Spark size: {text!r}")
+    num, unit, b = m.groups()
+    if not unit and not b:
+        unit = bare_unit.lower().rstrip("b")
+    return int(num) << _SHIFT[unit.lower()]
+
+
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """Half the host's MemTotal, in MiB: the other half stays for the
+    Python workers (every applyInPandas/mapInPandas kernel runs there) and
+    the page cache. Spark reads spark.driver.memory only when the JVM
+    starts, so the default has to be right at the first launch."""
+    try:
+        with open(meminfo) as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    kib = int(line.split()[1])
+                    return f"{max(1024, kib // 2048)}m"
+    except OSError:
+        pass
+    return _FALLBACK_DRIVER_MEMORY
 
 
 def get_spark(
@@ -24,6 +58,7 @@ def get_spark(
     cores: local parallelism (defaults to $SPARK_GRAFT_CPUS or '*').
     shuffle_partitions: defaults to max(cores, 8) locally; on a real
       cluster set ~2-3x total executor cores.
+    The driver heap is $SPARK_DRIVER_MEM, else default_driver_memory().
     """
     if cores is None:
         env = os.environ.get("SPARK_GRAFT_CPUS")
@@ -45,7 +80,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory())
         .config("spark.ui.enabled", "false")
         # Iterative DataFrame programs checkpoint every superstep; keep the
         # shuffle service from retaining stale state.

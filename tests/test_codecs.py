@@ -64,6 +64,14 @@ def test_bmp_rejects():
         codecs.decode_bmp(codecs.encode_bmp(img)[:-3])
 
 
+@pytest.mark.parametrize("width, height", [(0, 2), (-2, 2), (2, 0)])
+def test_bmp_rejects_corrupt_dimensions(width, height):
+    raw = bytearray(codecs.encode_bmp(_img(2, 2)))
+    struct.pack_into("<ii", raw, 18, width, height)
+    with pytest.raises(ValueError, match="corrupt BMP dimensions"):
+        codecs.decode_bmp(bytes(raw))
+
+
 # ------------------------------------------------------------------ PNM
 
 

@@ -1,5 +1,5 @@
 """Connected components: reference fixtures (ConnectedComponentsGTest),
-BFS oracle agreement, and checkpoint/resume."""
+BFS oracle agreement, checkpoint/resume, and the pointer-doubling shortcut."""
 
 import numpy as np
 import pytest
@@ -175,30 +175,16 @@ def test_twophase_directed_and_isolated(spark):
     assert labels == {0: 0, 1: 0, 2: 0, 3: 3, 4: 3, 5: 5}
 
 
-def test_coarsen_after_matches_plain(spark):
-    """coarsen_after (ParallelConnectedComponents.cpp:65-76 analog) must
-    reach the same min-id fixed point as the plain loop — on the fixture,
-    an ER graph, and a chain that actually triggers ≥1 contraction.
-    (Pointer doubling stays ON: on path graphs hash-min labels without
-    doubling are all-distinct shifts, so contraction barely shrinks —
-    coarsening composes with the shortcut, it doesn't replace it.)"""
-    g = Graph.from_pairs(spark, F1_EDGES, directed=False, n=F1_N)
-    oracle = components_oracle(F1_N, F1_EDGES)
-    res = connected_components(g, coarsen_after=2)
-    labels = {r["id"]: r["label"] for r in res.labels.collect()}
-    assert labels == oracle
-
-    edges = erdos_renyi(80, 0.05, seed=13)
-    ge = Graph.from_pairs(spark, edges, directed=False, n=80)
-    want = components_oracle(80, edges)
-    got = {r["id"]: r["label"]
-           for r in connected_components(ge, coarsen_after=1).labels.collect()}
-    assert got == want
-
-    n = 120
-    chain = [(i, i + 1) for i in range(n - 1)]
-    gc = Graph.from_pairs(spark, chain, directed=False, n=n)
-    res = connected_components(gc, coarsen_after=2)
-    labels = {r["id"]: r["label"] for r in res.labels.collect()}
+def test_cc_shortcut_fewer_supersteps_on_chain(spark):
+    """Path graph P_65: plain hash-min needs ~diameter supersteps; pointer
+    doubling needs O(log)."""
+    edges = [(i, i + 1) for i in range(64)]
+    g = Graph.from_pairs(spark, edges, directed=False, n=65)
+    fast = connected_components(g, shortcut=True)
+    assert fast.number_of_components() == 1
+    labels = {r["id"]: r["label"] for r in fast.labels.collect()}
     assert set(labels.values()) == {0}
-    assert any("coarsened_to" in h for h in res.history), res.history
+    slow = connected_components(g, shortcut=False)
+    assert slow.number_of_components() == 1
+    assert fast.iterations < slow.iterations
+    assert fast.iterations <= 10

@@ -115,3 +115,33 @@ def test_checkpoint_resume_plp(spark, tmp_path):
     resumed = label_propagation(g, checkpointer=ck2, resume=True)
     got = {r["id"]: r["label"] for r in resumed.labels.collect()}
     assert got == straight
+
+
+@pytest.mark.parametrize("use_active_set", [True, False])
+def test_non_broadcast_regime_matches_broadcast(spark, use_active_set):
+    """With spark.sql.autoBroadcastJoinThreshold=-1 the label frame is never
+    broadcast (edges partitioned by src, both aggregations exchange): the
+    labels equal the broadcast regime's and the oracle's."""
+    from networkit_spark.operators.labelprop import _broadcast_labels
+
+    cliques, _ = planted_cliques(100, 20)
+    cases = [(100, cliques), (50, erdos_renyi(50, 0.1, seed=7))]
+
+    def run(n, edges):
+        g = Graph.from_pairs(spark, edges, directed=False, n=n)
+        res = label_propagation(g, max_iterations=10, use_active_set=use_active_set)
+        return {r["id"]: r["label"] for r in res.labels.collect()}
+
+    assert _broadcast_labels(spark, 100)
+    broadcast = [run(n, edges) for n, edges in cases]
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        assert not _broadcast_labels(spark, 100)
+        shuffled = [run(n, edges) for n, edges in cases]
+    finally:
+        spark.conf.set(key, old)
+    for (n, edges), b, s in zip(cases, broadcast, shuffled):
+        assert s == b
+        assert s == plp_oracle(n, [(u, v, 1.0) for u, v in edges], max_iterations=10)

@@ -106,32 +106,41 @@ def test_extract_largest_component(spark):
     assert sorted(r["id"] for r in compacted.vertices().collect()) == list(range(7))
 
 
-def test_partition_vs_join_methods_identical(spark):
-    """The partition-local color-triple plan (r5 default) must agree with
-    the join plan exactly — enumeration, corner counts, edge scores,
-    totals — across several p values including p larger than the vertex
-    color diversity."""
+def test_partition_plan_vs_oracle(spark):
+    """The partition-local color-triple plan against brute force at
+    several p, including p larger than the vertex color diversity:
+    the triangle set, per-vertex counts, per-edge scores and the total."""
     from networkit_spark.operators.triangles import (
         triangle_edge_scores, triangles)
 
     edges = erdos_renyi(60, 0.15, seed=11)
     g = Graph.from_pairs(spark, edges, directed=False, n=60)
-    tj = sorted(map(tuple, triangles(g, method="join").collect()))
+    oracle = triangles_oracle(60, edges)
+    assert oracle["total"] > 0
     for p in (3, 4, 7):
-        tp = sorted(map(tuple, triangles(g, method="partition", p=p).collect()))
-        assert tp == tj, p
-    cj = {r["id"]: r["triangles"]
-          for r in triangle_counts(g, method="join").collect()}
-    cp = {r["id"]: r["triangles"]
-          for r in triangle_counts(g, method="partition").collect()}
-    assert cj == cp
-    ej = {(r["u"], r["v"]): r["triangles"]
-          for r in triangle_edge_scores(g, method="join").collect()}
-    ep = {(r["u"], r["v"]): r["triangles"]
-          for r in triangle_edge_scores(g, method="partition").collect()}
-    assert ej == ep
-    assert (total_triangles(g, method="join")
-            == total_triangles(g, method="partition") == len(tj))
+        rows = triangles(g, p=p).collect()
+        assert all(r["b"] < r["c"] for r in rows), p
+        assert sorted(tuple(sorted(r)) for r in rows) == oracle["triangles"], p
+        got = {r["id"]: r["triangles"] for r in triangle_counts(g, p=p).collect()}
+        assert got == oracle["per_node"], p
+        got = {(r["u"], r["v"]): r["triangles"]
+               for r in triangle_edge_scores(g, p=p).collect()}
+        assert got == oracle["per_edge"], p
+        assert total_triangles(g, p=p) == oracle["total"], p
+
+
+def test_default_p_from_parallelism_and_memory():
+    """Small m on 4 slots keeps the parallelism rule's p = 3 (C(5,3) = 10
+    >= 2 x 4 subproblems); a large m raises p until a 6m/p² subproblem x
+    32 B fits the per-task budget, and no further."""
+    from networkit_spark.operators.triangles import _tri_default_p
+
+    budget = 256 << 20
+    assert _tri_default_p(10_000, 4, budget) == 3
+    m = 1_000_000_000
+    p = _tri_default_p(m, 4, budget)
+    assert 6 * m / p**2 * 32 <= budget < 6 * m / (p - 1) ** 2 * 32
+    assert p == 27
 
 
 def test_partition_kernel_chunking(monkeypatch):
