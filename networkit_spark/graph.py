@@ -32,8 +32,6 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-import pandas as pd
-
 from pyspark.sql import DataFrame, functions as F
 
 EDGE_COLS = ("src", "dst", "weight")
@@ -105,12 +103,7 @@ class Graph:
         """Tiny-fixture constructor: pairs = [(u, v[, w]), ...]; n adds
         vertices 0..n-1 explicitly (isolated nodes included)."""
         rows = [(int(p[0]), int(p[1]), float(p[2]) if len(p) > 2 else 1.0) for p in pairs]
-        # Built from pandas, the edges are a local relation the JVM scans
-        # itself; from a Python list they would be a Python RDD that every
-        # job re-reads through a Python worker (~4x the job latency).
-        pdf = pd.DataFrame(rows, columns=["src", "dst", "weight"]).astype(
-            {"src": "int64", "dst": "int64", "weight": "float64"})
-        e = spark.createDataFrame(pdf, "src long, dst long, weight double")
+        e = spark.createDataFrame(rows, "src long, dst long, weight double")
         v = spark.range(n).withColumnRenamed("id", "id") if n is not None else None
         return cls.from_edges(e, directed=directed, weighted=weighted, vertices=v)
 

@@ -94,11 +94,8 @@ def connected_components(
     the fixed point (min id per component) is unchanged because the
     label-of-label is always an id inside the same component.
 
-    High-diameter graphs at scale should use
-    `connected_components_twophase`: the reference's coarsen-and-recurse
-    move (ParallelConnectedComponents.cpp:65-76) on top of hash-min ran
-    out of scratch disk at RMAT 2^24 where two-phase completed
-    (BASELINE.md)."""
+    High-diameter graphs at scale: use `connected_components_twophase`
+    (module docstring)."""
     spark = graph.edges.sparkSession
     ckpt = checkpointer or Checkpointer(spark, None, algorithm="connected_components")
     sym = graph.symmetrized_edges().select("src", "dst")

@@ -34,10 +34,11 @@ Spark plan per superstep:
     heaviest = groupBy(id) struct-max of (weight, -label)    [hash-agg argmax
                = the reference's max-weight-then-smallest-label tie-break,
                no sort-based window]
-The label frame is broadcast when it fits spark.sql.autoBroadcastJoinThreshold
-(`_broadcast_labels`); otherwise each aggregation exchanges on its own key,
-which measured fastest at RMAT 2^24 (510.5 s, against 745.9 s for one
-nid exchange and 838.6 s for a forced broadcast; BASELINE.md).
+The label frame is broadcast up to 8M vertices, a bound that scales with
+spark.sql.autoBroadcastJoinThreshold (`_broadcast_labels`); beyond it each
+aggregation exchanges on its own key, which measured fastest at RMAT 2^24
+(510.5 s, against 745.9 s for one nid exchange and 838.6 s for a forced
+broadcast; BASELINE.md).
 """
 
 from __future__ import annotations
@@ -51,7 +52,12 @@ from networkit_spark.graph import Graph
 from networkit_spark.plans.iterative import Checkpointer, truncate
 from networkit_spark.session import size_bytes
 
-_LABEL_ROW_BYTES = 24  # Spark's (id, label) row estimate: 8 B + two longs
+# Label rows broadcast per byte of spark.sql.autoBroadcastJoinThreshold,
+# as a ratio (not a measured row size): the 10 MiB default admits 8M
+# vertices. Broadcast measured faster at RMAT 2^20 (547k vertices) and
+# slower at 2^24 (BASELINE.md); the crossover between is unmeasured.
+_BROADCAST_ROWS = 8_000_000
+_BROADCAST_AT = 10 << 20
 
 
 @dataclass
@@ -119,9 +125,10 @@ def _heaviest_labels(labels: DataFrame, sym: DataFrame,
 
 def _broadcast_labels(spark, n: int) -> bool:
     """True when an n-row label frame fits the session's broadcast
-    threshold (spark.sql.autoBroadcastJoinThreshold; -1 never broadcasts)."""
+    threshold (spark.sql.autoBroadcastJoinThreshold, scaled so the 10 MiB
+    default admits 8M rows; -1 never broadcasts)."""
     limit = size_bytes(spark.conf.get("spark.sql.autoBroadcastJoinThreshold"))
-    return n * _LABEL_ROW_BYTES <= limit
+    return n * _BROADCAST_AT <= limit * _BROADCAST_ROWS
 
 
 def label_propagation(
@@ -165,9 +172,9 @@ def label_propagation(
     else:
         labels = vertices.select("id", F.col("id").alias("label"))
     # Materialize the seed state ONCE: the vertex set is often DERIVED
-    # (distinct over the symmetrized edge table) and the sweep plan
-    # references the previous state several times — unmaterialized, a
-    # fused multi-sweep job re-runs that distinct per reference.
+    # (distinct over the symmetrized edge table) and the first sweep
+    # references the state twice (message join and merge join) —
+    # unmaterialized, each reference re-runs that distinct.
     state = truncate(labels.withColumn("active", F.lit(True)))
     init_snap = state
 

@@ -34,7 +34,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from networkit_spark.graph import Graph
-from networkit_spark.session import size_bytes
+from networkit_spark.session import host_memory_bytes, size_bytes
 
 
 def _oriented_edges(graph: Graph) -> tuple[DataFrame, DataFrame]:
@@ -87,13 +87,15 @@ def _oriented_edges(graph: Graph) -> tuple[DataFrame, DataFrame]:
 # count.  At RMAT 2^21 the former join plan shuffled 35 GiB of wedges
 # (BENCH_r4_10x.json); p=6 replication of the ~17M oriented edges is
 # ~0.5 GiB.  Per-subproblem edge count concentrates around 6m/p², so p
-# is the memory lever: `_tri_default_p` picks p with 6m/p² × ~32B within
-# the per-task memory, parallelism = C(p+2,3) tasks.  (Classic MapReduce
-# triangle partitioning — Suri & Vassilvitskii WWW'11 / PTE KDD'16 —
-# re-expressed as one crossJoin + groupBy().applyInPandas.)
+# is the memory lever: `_tri_default_p` picks p with 6m/p² × ~32B (an
+# estimate) within the per-task memory, parallelism = C(p+2,3) tasks.
+# (Classic MapReduce triangle partitioning — Suri & Vassilvitskii WWW'11 /
+# PTE KDD'16 — re-expressed as one crossJoin + groupBy().applyInPandas.)
 
 _TRI_CHUNK_PAIRS = 1 << 23  # wedge pairs materialized per numpy chunk
-_TRI_EDGE_BYTES = 32  # subproblem memory per edge (lo, hi, colors, keys)
+# Subproblem memory per edge: an estimate from the kernel's per-edge
+# arrays (lo, hi, colors, keys), not a measurement.
+_TRI_EDGE_BYTES = 32
 
 
 def _tri_default_p(m: int, parallelism: int, task_bytes: int) -> int:
@@ -109,16 +111,33 @@ def _tri_default_p(m: int, parallelism: int, task_bytes: int) -> int:
 
 
 def _task_memory_bytes(spark) -> int:
-    """Memory one applyInPandas task may use: the Python worker memory
-    (spark.executor.pyspark.memory) if set, else the executor heap (the
-    driver's in local mode), split over the executor's task slots."""
+    """Memory one applyInPandas task may use, split over the task slots.
+    The kernel runs in a Python worker, so this is the Python worker limit
+    (spark.executor.pyspark.memory) if set. Without one, a local session's
+    workers share what the host has beside the driver heap; on a cluster
+    the executor heap stands in for the (unlimited) worker memory."""
     sc = spark.sparkContext
     conf = sc.getConf()
     local = sc.master.startswith("local")
-    mem = conf.get("spark.executor.pyspark.memory") or conf.get(
-        "spark.driver.memory" if local else "spark.executor.memory", "1g")
     slots = sc.defaultParallelism if local else int(conf.get("spark.executor.cores", "1"))
-    return size_bytes(mem, "m") // max(1, slots)
+    worker = conf.get("spark.executor.pyspark.memory")
+    if worker or not local:
+        mem = size_bytes(worker or conf.get("spark.executor.memory", "1g"), "m")
+    else:
+        heap = size_bytes(conf.get("spark.driver.memory", "1g"), "m")
+        mem = max(heap, (host_memory_bytes() or 2 * heap) - heap)
+    return mem // max(1, slots)
+
+
+def _persisted_edge_bound(graph: Graph) -> int:
+    """Upper bound on the simple edge count if the edge table is persisted
+    (the count reads the cache), else 0: counting an unpersisted table
+    re-runs its whole lineage (dedup, repartition shuffles) once more."""
+    level = graph.edges.storageLevel
+    if not (level.useMemory or level.useDisk):
+        return 0
+    arcs = graph.edges.count()
+    return arcs if graph.directed else (arcs + 1) // 2
 
 
 def _replicated_edges(graph: Graph, p: int, seed: int = 0x7161) -> DataFrame:
@@ -372,12 +391,8 @@ def _edge_kernel(key, pdf):
 def _partitioned(graph: Graph, kernel, schema: str, p: int | None) -> DataFrame:
     if p is None:
         spark = graph.edges.sparkSession
-        # Upper bound on the simple edge count, counted over the JVM RDD:
-        # one job, where DataFrame.count() under AQE runs two (the
-        # partial-count shuffle stage, then the final aggregate).
-        arcs = graph.edges._jdf.queryExecution().toRdd().count()
-        m = arcs if graph.directed else (arcs + 1) // 2
-        p = _tri_default_p(m, spark.sparkContext.defaultParallelism,
+        p = _tri_default_p(_persisted_edge_bound(graph),
+                           spark.sparkContext.defaultParallelism,
                            _task_memory_bytes(spark))
     rep = _replicated_edges(graph, p)
     return rep.groupBy("t1", "t2", "t3").applyInPandas(kernel, schema)
@@ -390,8 +405,9 @@ def triangles(graph: Graph, p: int | None = None) -> DataFrame:
     One p·m-row shuffle, then each subproblem enumerates its wedges and
     closure in numpy with zero further exchange (module banner above
     `_replicated_edges`). p (the number of colors) defaults to
-    `_tri_default_p`: enough subproblems for the cluster's parallelism,
-    and small enough subproblems for the per-task memory."""
+    `_tri_default_p`: enough subproblems for the cluster's parallelism
+    and, when the edge table is persisted, small enough subproblems for
+    the per-task memory."""
     return _partitioned(graph, _tri_kernel, "a long, b long, c long", p)
 
 

@@ -31,20 +31,27 @@ def size_bytes(text: str, bare_unit: str = "b") -> int:
     return int(num) << _SHIFT[unit.lower()]
 
 
+def host_memory_bytes(meminfo: str = "/proc/meminfo") -> int | None:
+    """The host's MemTotal in bytes, or None without /proc/meminfo."""
+    try:
+        with open(meminfo) as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    return int(line.split()[1]) << 10
+    except OSError:
+        pass
+    return None
+
+
 def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
     """Half the host's MemTotal, in MiB: the other half stays for the
     Python workers (every applyInPandas/mapInPandas kernel runs there) and
     the page cache. Spark reads spark.driver.memory only when the JVM
     starts, so the default has to be right at the first launch."""
-    try:
-        with open(meminfo) as f:
-            for line in f:
-                if line.startswith("MemTotal:"):
-                    kib = int(line.split()[1])
-                    return f"{max(1024, kib // 2048)}m"
-    except OSError:
-        pass
-    return _FALLBACK_DRIVER_MEMORY
+    total = host_memory_bytes(meminfo)
+    if total is None:
+        return _FALLBACK_DRIVER_MEMORY
+    return f"{max(1024, total >> 21)}m"
 
 
 def get_spark(

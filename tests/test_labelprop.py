@@ -133,8 +133,11 @@ def test_non_broadcast_regime_matches_broadcast(spark, use_active_set):
         return {r["id"]: r["label"] for r in res.labels.collect()}
 
     assert _broadcast_labels(spark, 100)
-    broadcast = [run(n, edges) for n, edges in cases]
     key = "spark.sql.autoBroadcastJoinThreshold"
+    if spark.conf.get(key) == "10485760b":  # Spark's default: 8M rows
+        assert _broadcast_labels(spark, 8_000_000)
+        assert not _broadcast_labels(spark, 8_000_001)
+    broadcast = [run(n, edges) for n, edges in cases]
     old = spark.conf.get(key)
     spark.conf.set(key, "-1")
     try:

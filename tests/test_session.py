@@ -3,12 +3,13 @@ and the Spark size strings the engine reads from the session config."""
 
 import pytest
 
-from networkit_spark.session import default_driver_memory, size_bytes
+from networkit_spark.session import default_driver_memory, host_memory_bytes, size_bytes
 
 
 def test_driver_memory_is_half_of_memtotal(tmp_path):
     meminfo = tmp_path / "meminfo"
     meminfo.write_text("MemTotal:       16318268 kB\nMemFree:        14000000 kB\n")
+    assert host_memory_bytes(str(meminfo)) == 16318268 << 10
     assert default_driver_memory(str(meminfo)) == "7967m"
 
 
@@ -16,6 +17,7 @@ def test_driver_memory_floor_and_fallback(tmp_path):
     meminfo = tmp_path / "meminfo"
     meminfo.write_text("MemTotal:         524288 kB\n")
     assert default_driver_memory(str(meminfo)) == "1024m"
+    assert host_memory_bytes(str(tmp_path / "missing")) is None
     assert default_driver_memory(str(tmp_path / "missing")) == "4g"
 
 

@@ -143,6 +143,32 @@ def test_default_p_from_parallelism_and_memory():
     assert p == 27
 
 
+def test_default_p_memory_rule_on_persisted_edges(spark, monkeypatch):
+    """Unpersisted edges are not counted, so p follows parallelism alone;
+    persisted edges are counted from the cache and a small per-task budget
+    raises p. The result matches brute force either way."""
+    from networkit_spark.operators import triangles as tri
+
+    edges = erdos_renyi(60, 0.15, seed=11)
+    g = Graph.from_pairs(spark, edges, directed=False, n=60)
+    oracle = triangles_oracle(60, edges)["total"]
+    chosen = []
+    replicate = tri._replicated_edges
+    monkeypatch.setattr(tri, "_replicated_edges",
+                        lambda graph, p: chosen.append(p) or replicate(graph, p))
+    monkeypatch.setattr(tri, "_task_memory_bytes", lambda s: 1024)
+    par = spark.sparkContext.defaultParallelism
+    assert total_triangles(g) == oracle
+    assert chosen[-1] == tri._tri_default_p(0, par, 1024)
+    g.edges.persist()
+    try:
+        assert tri._persisted_edge_bound(g) == len(edges)
+        assert total_triangles(g) == oracle
+        assert chosen[-1] == tri._tri_default_p(len(edges), par, 1024) > chosen[0]
+    finally:
+        g.edges.unpersist()
+
+
 def test_partition_kernel_chunking(monkeypatch):
     """Drive the numpy subproblem kernel directly (no Spark) with the
     wedge chunker forced down to tiny chunks, so chunk boundaries inside
