@@ -31,6 +31,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, functions as F
 
+from networkit_spark.session import local_frame
+
 _SPARK_TYPES = {int: "long", float: "double", str: "string"}
 
 
@@ -69,8 +71,8 @@ class _Attribute:
         else:
             row = [(int(key[0]), int(key[1]), value)]
         schema = ", ".join(f"{c} long" for c in self.key_cols)
-        new = spark.createDataFrame(
-            row, f"{schema}, value {_spark_type(self.of_type)}"
+        new = local_frame(
+            spark, row, f"{schema}, value {_spark_type(self.of_type)}"
         )
         self.values = self.values.filter(~self._key_filter(key)).unionByName(new)
 
@@ -116,8 +118,8 @@ class AttributeStore:
         if name in self.node:
             raise ValueError(f"node attribute '{name}' already attached")
         spark = graph.edges.sparkSession
-        empty = spark.createDataFrame(
-            [], f"id long, value {_spark_type(of_type)}"
+        empty = local_frame(
+            spark, [], f"id long, value {_spark_type(of_type)}"
         )
         att = NodeAttribute(name, of_type, ("id",), empty)
         self.node[name] = att
@@ -127,8 +129,8 @@ class AttributeStore:
         if name in self.edge:
             raise ValueError(f"edge attribute '{name}' already attached")
         spark = graph.edges.sparkSession
-        empty = spark.createDataFrame(
-            [], f"src long, dst long, value {_spark_type(of_type)}"
+        empty = local_frame(
+            spark, [], f"src long, dst long, value {_spark_type(of_type)}"
         )
         att = EdgeAttribute(name, of_type, ("src", "dst"), empty)
         self.edge[name] = att

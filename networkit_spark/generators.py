@@ -11,6 +11,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from networkit_spark.session import local_frame
+
 
 def _h(seed: int, *cols) -> F.Column:
     """Deterministic uniform 64-bit hash of (seed, *cols), non-negative."""
@@ -708,8 +710,8 @@ def dorogovtsev_mendes(spark: SparkSession, n: int, seed: int = 42) -> DataFrame
 
     if n < 3:
         raise ValueError("DorogovtsevMendes needs n >= 3")
-    tri = spark.createDataFrame(
-        [(0, 1, 1.0), (0, 2, 1.0), (1, 2, 1.0)], "src long, dst long, weight double"
+    tri = local_frame(
+        spark, [(0, 1, 1.0), (0, 2, 1.0), (1, 2, 1.0)], "src long, dst long, weight double"
     )
     if n == 3:
         return tri
@@ -775,8 +777,8 @@ def chung_lu(spark: SparkSession, weights: list[float], seed: int = 42) -> DataF
     blocks) — test-scale here, like erdos_renyi."""
     n = len(weights)
     s = float(sum(weights))
-    wdf = spark.createDataFrame(
-        [(i, float(w)) for i, w in enumerate(weights)], "id long, w double"
+    wdf = local_frame(
+        spark, [(i, float(w)) for i, w in enumerate(weights)], "id long, w double"
     )
     pairs = (
         spark.range(n * n)
@@ -799,11 +801,11 @@ def stochastic_blockmodel(spark: SparkSession, n: int, k: int,
                           seed: int = 42) -> DataFrame:
     """StochasticBlockmodel.cpp: edge {u,v} with probability
     probs[block(u)][block(v)] — hash-threshold over the pair scan."""
-    mdf = spark.createDataFrame(
-        [(i, int(b)) for i, b in enumerate(membership)], "id long, blk int"
+    mdf = local_frame(
+        spark, [(i, int(b)) for i, b in enumerate(membership)], "id long, blk int"
     )
-    pdf = spark.createDataFrame(
-        [(a, b, float(probs[a][b])) for a in range(k) for b in range(k)],
+    pdf = local_frame(
+        spark, [(a, b, float(probs[a][b])) for a in range(k) for b in range(k)],
         "ba int, bb int, p double",
     )
     scale = 1_000_000_000
@@ -1352,8 +1354,8 @@ def dynamic_forest_fire_events(
             adj.setdefault(v, set()).add(w)
         adj.setdefault(v, set())
         rows.append((t, 1 << 20, "TIME_STEP", None, None, None))
-    return spark.createDataFrame(
-        rows, "step long, seq long, type string, u long, v long, weight double"
+    return local_frame(
+        spark, rows, "step long, seq long, type string, u long, v long, weight double"
     )
 
 
@@ -1500,8 +1502,8 @@ def dynamic_pubweb_events(
 
     pts.unpersist()
     edges.unpersist()
-    return spark.createDataFrame(
-        rows, "step long, seq long, type string, u long, v long, weight double"
+    return local_frame(
+        spark, rows, "step long, seq long, type string, u long, v long, weight double"
     )
 
 
@@ -1532,6 +1534,8 @@ def dynamic_hyperbolic_events(
     distributed (hyperbolic_edges_from_points); only the bounded event
     rows are collected — the stream is the sequential deliverable."""
     import math as _math
+
+    from networkit_spark.plans.iterative import truncate
 
     if gamma <= 2.0:
         raise ValueError("gamma must be > 2 (finite mean degree)")
@@ -1586,13 +1590,13 @@ def dynamic_hyperbolic_events(
             .when(phi2 > two_pi, phi2 - F.floor(phi2 / two_pi) * two_pi)
             .otherwise(phi2)
         )
-        pts2 = pts.select(
+        pts2 = truncate(pts.select(
             "id",
             F.when(wig, phi3).otherwise(F.col("theta")).alias("theta"),
             F.when(wig, newr).otherwise(F.col("r")).alias("r"),
             "am",
             F.when(wig, rm2).otherwise(F.col("rm")).alias("rm"),
-        ).localCheckpoint()
+        ))
         edges2 = hyperbolic_edges_from_points(pts2, R).persist()
         removed = edges.join(edges2, ["src", "dst"], "left_anti")
         added = edges2.join(edges, ["src", "dst"], "left_anti")
@@ -1611,6 +1615,6 @@ def dynamic_hyperbolic_events(
 
     pts.unpersist()
     edges.unpersist()
-    return spark.createDataFrame(
-        rows, "step long, seq long, type string, u long, v long, weight double"
+    return local_frame(
+        spark, rows, "step long, seq long, type string, u long, v long, weight double"
     )

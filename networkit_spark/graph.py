@@ -34,6 +34,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, functions as F
 
+from networkit_spark.session import local_frame
+
 EDGE_COLS = ("src", "dst", "weight")
 
 
@@ -103,7 +105,7 @@ class Graph:
         """Tiny-fixture constructor: pairs = [(u, v[, w]), ...]; n adds
         vertices 0..n-1 explicitly (isolated nodes included)."""
         rows = [(int(p[0]), int(p[1]), float(p[2]) if len(p) > 2 else 1.0) for p in pairs]
-        e = spark.createDataFrame(rows, "src long, dst long, weight double")
+        e = local_frame(spark, rows, "src long, dst long, weight double")
         v = spark.range(n).withColumnRenamed("id", "id") if n is not None else None
         return cls.from_edges(e, directed=directed, weighted=weighted, vertices=v)
 

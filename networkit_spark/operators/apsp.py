@@ -42,7 +42,8 @@ from pyspark.storagelevel import StorageLevel
 
 from networkit_spark.graph import Graph
 from networkit_spark.operators.distances import multi_source_bfs, _all_sources
-from networkit_spark.plans.iterative import truncate
+from networkit_spark.plans.iterative import materialize, truncate
+from networkit_spark.session import local_frame
 
 
 def _source_df(graph: Graph, sources) -> DataFrame:
@@ -51,7 +52,7 @@ def _source_df(graph: Graph, sources) -> DataFrame:
     if isinstance(sources, DataFrame):
         return sources.select(F.col("s").cast("long").alias("s")).distinct()
     spark = graph.edges.sparkSession
-    return spark.createDataFrame([(int(s),) for s in sources], "s long")
+    return local_frame(spark, [(int(s),) for s in sources], "s long")
 
 
 def _weighted_arcs(graph: Graph) -> DataFrame:
@@ -104,8 +105,8 @@ def multi_source_bellman_ford(
             .filter(F.col("old").isNull() | (F.col("dist") < F.col("old")))
             .select("s", "id", "dist")
         )
-        improved = truncate(improved, release=frontier)
-        if improved.limit(1).count() == 0:
+        improved, seen = materialize(improved, release=frontier)
+        if seen["rows"] == 0:
             improved.unpersist()
             break
         merged = (
@@ -143,7 +144,7 @@ def spsp(
         t = targets.select(F.col("t").cast("long").alias("id")).distinct()
     else:
         spark = graph.edges.sparkSession
-        t = spark.createDataFrame([(int(x),) for x in targets], "id long")
+        t = local_frame(spark, [(int(x),) for x in targets], "id long")
     return dists.join(F.broadcast(t), "id", "left_semi")
 
 
@@ -162,7 +163,7 @@ def multi_target_bfs(graph: Graph, source: int, targets) -> DataFrame:
     if isinstance(targets, DataFrame):
         tgt = targets.select(F.col("t").cast("long").alias("id")).distinct()
     else:
-        tgt = spark.createDataFrame([(int(x),) for x in targets], "id long")
+        tgt = local_frame(spark, [(int(x),) for x in targets], "id long")
     tgt = tgt.persist(StorageLevel.MEMORY_AND_DISK)
     n_targets = tgt.count()
 
@@ -173,7 +174,7 @@ def multi_target_bfs(graph: Graph, source: int, targets) -> DataFrame:
     arcs.count()
 
     state = truncate(
-        spark.createDataFrame([(int(source), 0.0)], "id long, dist double")
+        local_frame(spark, [(int(source), 0.0)], "id long, dist double")
     )
     frontier = state
     while True:
@@ -191,8 +192,8 @@ def multi_target_bfs(graph: Graph, source: int, targets) -> DataFrame:
             .filter(F.col("old").isNull() | (F.col("dist") < F.col("old")))
             .select("id", "dist")
         )
-        improved = truncate(improved, release=frontier)
-        if improved.limit(1).count() == 0:
+        improved, seen = materialize(improved, release=frontier)
+        if seen["rows"] == 0:
             improved.unpersist()
             break
         state = truncate(
@@ -218,7 +219,7 @@ def multi_target_bfs(graph: Graph, source: int, targets) -> DataFrame:
             .alias("dist"),
         )
     )
-    out = out.localCheckpoint()
+    out = truncate(out)
     for df in (state, frontier):
         try:
             df.unpersist()
@@ -263,7 +264,7 @@ def bidirectional_bfs(graph: Graph, source: int, target: int) -> int | None:
 
     def _ball(node):
         return truncate(
-            spark.createDataFrame([(int(node), 0)], "id long, d int")
+            local_frame(spark, [(int(node), 0)], "id long, d int")
         )
 
     vis = {"s": _ball(source), "t": _ball(target)}
@@ -331,7 +332,7 @@ def dijkstra_within(
     if isinstance(sources, DataFrame):
         src = sources.select(F.col("s").cast("long").alias("id")).distinct()
     else:
-        src = spark.createDataFrame([(int(s),) for s in sources], "id long")
+        src = local_frame(spark, [(int(s),) for s in sources], "id long")
     if excluded is not None:
         excl = excluded.select(F.col("id").cast("long")).distinct()
         excl = excl.persist(StorageLevel.MEMORY_AND_DISK)
@@ -363,8 +364,8 @@ def dijkstra_within(
             .filter(F.col("old").isNull() | (F.col("dist") < F.col("old")))
             .select("id", "dist")
         )
-        improved = truncate(improved, release=frontier)
-        if improved.limit(1).count() == 0:
+        improved, seen = materialize(improved, release=frontier)
+        if seen["rows"] == 0:
             improved.unpersist()
             break
         state = truncate(
@@ -414,7 +415,7 @@ def bidirectional_dijkstra(
 
     def _ball(node):
         return truncate(
-            spark.createDataFrame([(int(node), 0.0)], "id long, dist double")
+            local_frame(spark, [(int(node), 0.0)], "id long, dist double")
         )
 
     state = {"s": _ball(source), "t": _ball(target)}

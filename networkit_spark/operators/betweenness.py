@@ -38,7 +38,8 @@ from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.storagelevel import StorageLevel
 
 from networkit_spark.graph import Graph
-from networkit_spark.plans.iterative import truncate
+from networkit_spark.plans.iterative import materialize, truncate
+from networkit_spark.session import local_frame
 
 
 def _forward_sssp(graph: Graph, sources: DataFrame):
@@ -75,8 +76,8 @@ def _forward_sssp(graph: Graph, sources: DataFrame):
             .withColumn("dist", F.lit(depth).cast("long"))
             .select("s", "id", "dist", "sigma")
         )
-        nxt = truncate(nxt)
-        if nxt.limit(1).count() == 0:
+        nxt, seen = materialize(nxt)
+        if seen["rows"] == 0:
             break
         visited = visited.unionByName(nxt)
         frontier = nxt
@@ -264,8 +265,8 @@ def adaptive_betweenness(
         batch = [r["s"] for r in ordered[used: used + batch_size]]
         used += len(batch)
         rounds += 1
-        srcs = graph.edges.sparkSession.createDataFrame(
-            [(s,) for s in batch], "s long"
+        srcs = local_frame(
+            graph.edges.sparkSession, [(s,) for s in batch], "s long"
         )
         raw = _dependency_scores(graph, srcs, distance_weighted=True)
         if raw_cum is None:
@@ -418,7 +419,7 @@ def approx_betweenness_rk(
             (F.count("*") / F.lit(float(r))).alias("score")
         )
     else:
-        scored = spark.createDataFrame([], "id long, score double")
+        scored = local_frame(spark, [], "id long, score double")
     return (
         graph.vertices()
         .join(scored, "id", "left")
@@ -538,7 +539,7 @@ def approx_group_betweenness(
         hyper = hyper.distinct().persist(StorageLevel.MEMORY_AND_DISK)
         hyper.count()
     else:
-        hyper = spark.createDataFrame([], "i long, node long")
+        hyper = local_frame(spark, [], "i long, node long")
 
     group: list[int] = []
     uncovered = hyper
@@ -564,6 +565,6 @@ def approx_group_betweenness(
         uncovered = uncovered.join(covered_ids, "i", "left_anti")
         uncovered = truncate(uncovered)
     hyper.unpersist()
-    return spark.createDataFrame(
-        [(j + 1, g) for j, g in enumerate(group)], "ord int, id long"
+    return local_frame(
+        spark, [(j + 1, g) for j, g in enumerate(group)], "ord int, id long"
     )

@@ -47,6 +47,7 @@ from pyspark.storagelevel import StorageLevel
 
 from networkit_spark.graph import Graph
 from networkit_spark.plans.iterative import truncate
+from networkit_spark.session import local_frame
 
 _A, _B, _C, _D = 2654435761, 40503, 97, 1000003
 _M = 1_000_000_007
@@ -204,7 +205,7 @@ def commute_time_distance(
             cells.append((s, j, 1.0))
             cells.append((t, j, -1.0))
         b = (
-            spark.createDataFrame(cells, "id long, j int, v double")
+            local_frame(spark, cells, "id long, j int, v double")
             .groupBy("id", "j").agg(F.sum("v").alias("b"))
         )
         x = _solve_cg_block(arcs, verts, b, k, tol=tol)
@@ -218,7 +219,7 @@ def commute_time_distance(
                 (s, t, math.sqrt(abs(vals[(s, j)] - vals[(t, j)]) * vol))
             )
     arcs.unpersist()
-    return spark.createDataFrame(rows, "s long, t long, ctd double")
+    return local_frame(spark, rows, "s long, t long, ctd double")
 
 
 def ctd_embedding(
@@ -273,8 +274,8 @@ def ctd_embedding(
 
 def ctd_approx_pairs(emb: DataFrame, vol: float, pairs: list) -> DataFrame:
     spark = emb.sparkSession
-    p = spark.createDataFrame(
-        [(int(s), int(t)) for s, t in pairs], "s long, t long"
+    p = local_frame(
+        spark, [(int(s), int(t)) for s, t in pairs], "s long, t long"
     )
     es = emb.select(F.col("id").alias("s"), F.col("vec").alias("vs"))
     et = emb.select(F.col("id").alias("t"), F.col("vec").alias("vt"))

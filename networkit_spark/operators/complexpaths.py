@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.storagelevel import StorageLevel
 
 from networkit_spark.graph import Graph
+from networkit_spark.session import local_frame
 
 
 def _seeds(graph: Graph, seed: int, threshold: int) -> list[int]:
@@ -80,8 +81,8 @@ def complex_paths_graph(
     arcs = graph.edges.select("src", "dst").persist(StorageLevel.MEMORY_AND_DISK)
     arcs.count()
     seeds = _seeds(graph, int(seed), threshold)
-    q = spark.createDataFrame(
-        [(s, 0) for s in seeds], "id long, round int"
+    q = local_frame(
+        spark, [(s, 0) for s in seeds], "id long, round int"
     ).persist()
     n_q = q.count()
     for rnd in range(1, max_rounds + 1):
@@ -150,12 +151,12 @@ def complex_path_lengths(
             directed=False,
         )
         spark = graph.edges.sparkSession
-        src_df = spark.createDataFrame([(int(s),)], "s long")
+        src_df = local_frame(spark, [(int(s),)], "s long")
         d = multi_source_bfs(cg, src_df)
         total = d.agg(F.sum("dist")).first()[0] or 0
         rows.append((int(s), float(total) / n))
     spark = graph.edges.sparkSession
-    out = spark.createDataFrame(rows, "id long, plci double")
+    out = local_frame(spark, rows, "id long, plci double")
     if normalized:
         mm = out.agg(
             F.min("plci").alias("lo"), F.max("plci").alias("hi")

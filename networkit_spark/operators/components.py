@@ -45,7 +45,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.storagelevel import StorageLevel
 
 from networkit_spark.graph import Graph
-from networkit_spark.plans.iterative import Checkpointer, truncate
+from networkit_spark.plans.iterative import Checkpointer
 
 
 @dataclass
@@ -114,12 +114,10 @@ def connected_components(
     state = labels.withColumn("changed", F.lit(True))
 
     iterations = 0
-    history: list[dict] = []
     if resume:
         latest = ckpt.latest()
         if latest is not None:
             iterations, state, _ = latest
-            history = [m["metrics"] for m in ckpt.history()]
 
     n_changed = -1
     while n_changed != 0 and (max_iterations is None or iterations < max_iterations):
@@ -158,14 +156,13 @@ def connected_components(
             )
         )
         iterations += 1
-        snap = ckpt.save(merged, iterations, None)
-        n_changed = snap.filter("changed").count()
-        history.append({"iteration": iterations, "changed": int(n_changed)})
-        state = snap
+        state = ckpt.save(merged, iterations, {"changed": F.count_if("changed")})
+        n_changed = ckpt.records[-1]["changed"]
 
     sym.unpersist()
     return ComponentsResult(
-        labels=state.select("id", "label"), iterations=iterations, history=history
+        labels=state.select("id", "label"), iterations=iterations,
+        history=ckpt.log(iterations),
     )
 
 
@@ -232,8 +229,10 @@ def connected_components_twophase(
         )
         .distinct()
     )
-    edges = truncate(und)
-    n_edges = edges.count()
+    # Round r's edge set is snapshot r; its record's `rows` is the edge count.
+    ckpt = Checkpointer(graph.edges.sparkSession, None, algorithm="connected_components_twophase")
+    edges = ckpt.save(und, 0)
+    n_edges = ckpt.records[-1]["rows"]
 
     def _is_star_forest(e: DataFrame, n_e: int) -> bool:
         """u>v-oriented edge set is a min-rooted star forest ⟺ every u
@@ -260,7 +259,6 @@ def connected_components_twophase(
 
     rounds = 0
     prev_n = -1
-    history: list[dict] = []
     # The star-forest check only RUNS once the edge count has stabilized
     # (n_edges == prev_n): the count is constant at the fixed point, so
     # termination is unchanged, and the early rounds — where the edge
@@ -271,16 +269,13 @@ def connected_components_twophase(
         arcs = edges.unionByName(
             edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
         )
-        new_edges = truncate(_small_star(_large_star(arcs)))
         rounds += 1
-        n_new = new_edges.count()
-        history.append({"iteration": rounds, "edges": int(n_new)})
-        edges.unpersist()
-        edges, n_edges, prev_n = new_edges, n_new, n_edges
+        edges = ckpt.save(_small_star(_large_star(arcs)), rounds)
+        n_edges, prev_n = ckpt.records[-1]["rows"], n_edges
 
     labels = (
         graph.vertices()
         .join(edges.select(F.col("u").alias("id"), F.col("v").alias("root")), "id", "left")
         .select("id", F.coalesce("root", F.col("id")).alias("label"))
     )
-    return ComponentsResult(labels=labels, iterations=rounds, history=history)
+    return ComponentsResult(labels=labels, iterations=rounds, history=ckpt.log(rounds))

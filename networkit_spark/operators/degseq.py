@@ -48,6 +48,7 @@ from networkit_spark.plans.ranking import (
     global_prefix_sums,
     global_ranks_score_desc,
 )
+from networkit_spark.session import local_frame
 
 
 def is_realizable(deg: DataFrame) -> bool:
@@ -168,8 +169,8 @@ def havel_hakimi(
     ids = [r["id"] for r in rows]
     seq = [int(r["deg"]) for r in rows]
     edges = _havel_hakimi_edges(seq, ignore=ignore_if_not_realizable)
-    return spark.createDataFrame(
-        [(ids[a], ids[b], 1.0) for a, b in edges],
+    return local_frame(
+        spark, [(ids[a], ids[b], 1.0) for a, b in edges],
         "src long, dst long, weight double",
     )
 
@@ -214,7 +215,7 @@ def configuration_model(
         )
     )
     accepted = truncate(
-        spark.createDataFrame([], "u long, v long")
+        local_frame(spark, [], "u long, v long")
     )
     prev_count = None
     for rnd in range(max_rounds):

@@ -42,7 +42,8 @@ from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.storagelevel import StorageLevel
 
 from networkit_spark.graph import Graph
-from networkit_spark.plans.iterative import truncate
+from networkit_spark.plans.iterative import materialize, truncate
+from networkit_spark.session import local_frame
 
 
 # --------------------------------------------------------- multi-source BFS
@@ -81,8 +82,8 @@ def multi_source_bfs(
             .join(visited.select("s", "id"), ["s", "id"], "left_anti")
             .withColumn("dist", F.lit(depth).cast("long"))
         )
-        nxt = truncate(nxt)
-        if nxt.limit(1).count() == 0:
+        nxt, seen = materialize(nxt)
+        if seen["rows"] == 0:
             break
         visited = visited.unionByName(nxt)
         frontier = nxt
@@ -197,9 +198,9 @@ def diameter_double_sweep(graph: Graph) -> int:
     if first is None:
         return 0
     spark = graph.edges.sparkSession
-    d1 = multi_source_bfs(graph, spark.createDataFrame([(int(first),)], "s long"))
+    d1 = multi_source_bfs(graph, local_frame(spark, [(int(first),)], "s long"))
     far = d1.orderBy(F.desc("dist"), F.asc("id")).first()
-    d2 = multi_source_bfs(graph, spark.createDataFrame([(int(far["id"]),)], "s long"))
+    d2 = multi_source_bfs(graph, local_frame(spark, [(int(far["id"]),)], "s long"))
     return int(d2.agg(F.max("dist")).first()[0])
 
 
@@ -215,7 +216,7 @@ def _require_connected_undirected(graph: Graph, what: str):
     if first is None:
         return
     reached = multi_source_bfs(
-        graph, spark.createDataFrame([(int(first),)], "s long")
+        graph, local_frame(spark, [(int(first),)], "s long")
     ).count()
     if reached < graph.num_vertices():
         raise ValueError(f"{what} requires a connected graph")

@@ -55,7 +55,7 @@ from pyspark.storagelevel import StorageLevel
 
 from networkit_spark.graph import Graph
 from networkit_spark.operators.apsp import apsp
-from networkit_spark.plans.iterative import truncate
+from networkit_spark.plans.iterative import materialize, truncate
 
 
 def apsp_state(graph: Graph, sources: DataFrame | None = None) -> DataFrame:
@@ -185,8 +185,8 @@ def update_apsp(
             .filter(F.col("old").isNull() | (F.col("dist") < F.col("old")))
             .select("s", "t", "dist")
         )
-        improved = truncate(improved)
-        if improved.limit(1).count() == 0:
+        improved, seen = materialize(improved)
+        if seen["rows"] == 0:
             improved.unpersist()
             break
         merged = (

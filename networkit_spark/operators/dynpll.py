@@ -54,7 +54,8 @@ from networkit_spark.operators.pll import (
     pll_query,
     pruned_landmark_labeling,
 )
-from networkit_spark.plans.iterative import truncate
+from networkit_spark.plans.iterative import materialize, truncate
+from networkit_spark.session import local_frame
 
 
 @dataclass
@@ -134,9 +135,9 @@ def _dyn_pruned_bfs(
             .agg(F.min("level").alias("level"))
             .join(visited, ["rank", "id"], "left_anti")
         )
-        nxt = truncate(nxt)
+        nxt, seen = materialize(nxt)
         keep.extend((alive, nxt))
-        if nxt.limit(1).count() == 0:
+        if seen["rows"] == 0:
             break
         visited = visited.unionByName(nxt.select("rank", "id"))
         frontier = nxt
@@ -268,6 +269,6 @@ def _orient(spark, edges: list, directed: bool) -> DataFrame:
     rows = list(edges)
     if not directed:
         rows = rows + [(v, u) for u, v in rows]
-    return spark.createDataFrame(
-        [(u, v, 1.0) for u, v in rows], "src long, dst long, weight double"
+    return local_frame(
+        spark, [(u, v, 1.0) for u, v in rows], "src long, dst long, weight double"
     )

@@ -51,7 +51,8 @@ from pyspark.sql.types import DecimalType
 from pyspark.storagelevel import StorageLevel
 
 from networkit_spark.graph import Graph
-from networkit_spark.plans.iterative import truncate
+from networkit_spark.plans.iterative import materialize, truncate
+from networkit_spark.session import local_frame
 
 _DEC = DecimalType(38, 0)
 
@@ -112,7 +113,7 @@ def sssp_state(graph: Graph, source: int) -> DataFrame:
     from networkit_spark.operators.distances import multi_source_bfs
 
     spark = graph.edges.sparkSession
-    srcs = spark.createDataFrame([(int(source),)], "s long")
+    srcs = local_frame(spark, [(int(source),)], "s long")
     if graph.weighted:
         d = multi_source_bellman_ford(graph, srcs)
     else:
@@ -214,7 +215,7 @@ def update_sssp(
     dists = truncate(state.select("id", "dist"))
     d_of = dists.select(F.col("id").alias("x"), F.col("dist").alias("dx"))
 
-    touched = [spark.createDataFrame([], "id long")]
+    touched = [local_frame(spark, [], "id long")]
 
     # ---- phase 1: deletions (affected cone + boundary re-derivation)
     if removed is not None:
@@ -249,8 +250,8 @@ def update_sssp(
                 .select(F.col("dst").alias("id")).distinct()
                 .join(cone, "id", "left_anti")
             )
-            nxt = truncate(nxt)
-            if nxt.limit(1).count() == 0:
+            nxt, seen = materialize(nxt)
+            if seen["rows"] == 0:
                 nxt.unpersist()
                 break
             cone = truncate(cone.unionByName(nxt), release=cone)
@@ -358,8 +359,8 @@ def update_sssp(
             .select(F.col("dst").alias("id")).distinct()
             .join(cone, "id", "left_anti")
         )
-        nxt = truncate(nxt)
-        if nxt.limit(1).count() == 0:
+        nxt, seen = materialize(nxt)
+        if seen["rows"] == 0:
             nxt.unpersist()
             break
         cone = truncate(cone.unionByName(nxt), release=cone)

@@ -40,6 +40,7 @@ from networkit_spark.operators.commutetime import (
     _solve_cg_block,
     ctd_embedding,
 )
+from networkit_spark.session import local_frame
 
 # Exact modes solve one linear system per edge/vertex (reference
 # parity); cap the block width so a mistaken large-graph call fails
@@ -69,13 +70,13 @@ def spanning_edge_centrality(graph: Graph, tol: float = 1e-9) -> DataFrame:
         cells.append((u, j, 1.0))
         cells.append((v, j, -1.0))
     b = (
-        spark.createDataFrame(cells, "id long, j int, v double")
+        local_frame(spark, cells, "id long, j int, v double")
         .groupBy("id", "j").agg(F.sum("v").alias("b"))
     )
     x = _solve_cg_block(arcs, verts, b, m, tol=tol)
     arcs.unpersist()
-    edge_map = spark.createDataFrame(
-        [(j, u, v) for j, (u, v) in enumerate(und)], "j int, u long, v long"
+    edge_map = local_frame(
+        spark, [(j, u, v) for j, (u, v) in enumerate(und)], "j int, u long, v long"
     )
     xu = x.select(F.col("id").alias("u"), "j", F.col("x").alias("xu"))
     xv = x.select(F.col("id").alias("v"), "j", F.col("x").alias("xv"))
@@ -115,8 +116,8 @@ def _diag_lplus(graph: Graph, tol: float) -> DataFrame:
             f"({n} > {_EXACT_CAP}); use electrical_closeness_approx"
         )
     spark = graph.edges.sparkSession
-    sys_map = spark.createDataFrame(
-        [(j, u) for j, u in enumerate(ids)], "j int, u long"
+    sys_map = local_frame(
+        spark, [(j, u) for j, u in enumerate(ids)], "j int, u long"
     )
     b = (
         verts.crossJoin(sys_map)
@@ -173,11 +174,11 @@ def forest_centrality(graph: Graph, tol: float = 1e-9) -> DataFrame:
             f"({n} > {_EXACT_CAP})"
         )
     spark = graph.edges.sparkSession
-    sys_map = spark.createDataFrame(
-        [(j, u) for j, u in enumerate(ids)], "j int, u long"
+    sys_map = local_frame(
+        spark, [(j, u) for j, u in enumerate(ids)], "j int, u long"
     )
-    b = spark.createDataFrame(
-        [(u, j, 1.0) for j, u in enumerate(ids)], "id long, j int, b double"
+    b = local_frame(
+        spark, [(u, j, 1.0) for j, u in enumerate(ids)], "id long, j int, b double"
     )
     x = _solve_cg_block(arcs, verts, b, n, tol=tol, shift=1.0)
     arcs.unpersist()

@@ -39,7 +39,8 @@ from pyspark.storagelevel import StorageLevel
 
 from networkit_spark.graph import Graph
 from networkit_spark.plans import local_guard
-from networkit_spark.plans.iterative import truncate
+from networkit_spark.plans.iterative import materialize, truncate
+from networkit_spark.session import local_frame
 
 
 @dataclass
@@ -86,9 +87,9 @@ def max_flow(
 
     def _flow_df():
         if not flow:
-            return spark.createDataFrame([], "fu long, fv long, f double")
-        return spark.createDataFrame(
-            [(int(u), int(v), float(x)) for (u, v), x in flow.items()],
+            return local_frame(spark, [], "fu long, fv long, f double")
+        return local_frame(
+            spark, [(int(u), int(v), float(x)) for (u, v), x in flow.items()],
             "fu long, fv long, f double",
         )
 
@@ -127,8 +128,8 @@ def max_flow(
     def _bfs(residual: DataFrame):
         """Frontier BFS carrying (gain, pred); returns (pred_map for the
         path via point lookups, gain_at_sink, visited_df)."""
-        visited = spark.createDataFrame(
-            [(int(source), None, inf)], "id long, pred long, gain double"
+        visited = local_frame(
+            spark, [(int(source), None, inf)], "id long, pred long, gain double"
         )
         visited = truncate(visited)
         frontier = visited
@@ -157,13 +158,14 @@ def max_flow(
                     F.col("b.ngain").alias("gain"),
                 )
             )
-            nxt = truncate(nxt)
-            if nxt.limit(1).count() == 0:
+            nxt, seen = materialize(
+                nxt, {"hit": F.max(F.when(F.col("id") == sink, F.col("gain")))}
+            )
+            if seen["rows"] == 0:
                 return None, 0.0, visited
-            hit = nxt.filter(F.col("id") == sink).first()
             new_visited = truncate(visited.unionByName(nxt), release=visited)
-            if hit is not None:
-                return new_visited, float(hit["gain"]), new_visited
+            if seen["hit"] is not None:
+                return new_visited, float(seen["hit"]), new_visited
             visited = new_visited
             frontier = nxt
 
@@ -239,7 +241,7 @@ def cut_clustering(graph: Graph, alpha: float) -> DataFrame:
         base.unionByName(sink_arcs),
         directed=False,
         weighted=True,
-        vertices=v.unionByName(spark.createDataFrame([(t,)], "id long")),
+        vertices=v.unionByName(local_frame(spark, [(t,)], "id long")),
     )
     deg_rows = (
         graph.symmetrized_edges()
@@ -259,8 +261,8 @@ def cut_clustering(graph: Graph, alpha: float) -> DataFrame:
         res = max_flow(aug, int(u), t)
         for row in res.source_set.collect():
             labels[row["id"]] = u
-    return spark.createDataFrame(
-        [(int(k), int(lb)) for k, lb in labels.items()], "id long, label long"
+    return local_frame(
+        spark, [(int(k), int(lb)) for k, lb in labels.items()], "id long, label long"
     )
 
 
@@ -402,8 +404,8 @@ def cut_clustering_hierarchy(graph: Graph) -> dict:
 
     recursion(lower, dict(lower_clusters), upper, dict(upper_clusters))
     return {
-        alpha: spark.createDataFrame(
-            [(int(u), int(lb)) for u, lb in labels.items()], "id long, label long"
+        alpha: local_frame(
+            spark, [(int(u), int(lb)) for u, lb in labels.items()], "id long, label long"
         )
         for alpha, labels in sorted(result.items())
     }

@@ -46,6 +46,7 @@ from networkit_spark.graph import Graph
 from networkit_spark.operators.embedding import WALK_HASH_M, _A, _B, _C, _D
 from networkit_spark.plans.iterative import truncate
 from networkit_spark.plans.ranking import global_row_numbers
+from networkit_spark.session import local_frame
 
 # step is folded into the seed term with its own odd multiplier so that
 # (fire, node, cand, step) draws never alias across supersteps.
@@ -116,7 +117,7 @@ def _burn_batch(
         .select("fire", "node")
     )
     active = truncate(fires)
-    visited = spark.createDataFrame([], "fire long, node long")
+    visited = local_frame(spark, [], "fire long, node long")
     burns = []
     state = [active, None]  # [active, visited-snapshot] for release
     for step in range(1, max_steps + 1):
@@ -170,8 +171,8 @@ def _burn_batch(
         # the next generation's frontier is the freshly burnt nodes
         active = win.select("fire", F.col("x").alias("node"))
     if not burns:
-        return graph.edges.sparkSession.createDataFrame(
-            [], "u long, v long, burnt long"
+        return local_frame(
+            graph.edges.sparkSession, [], "u long, v long, burnt long"
         )
     allb = burns[0]
     for b in burns[1:]:

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from networkit_spark.graph import Graph
+from networkit_spark.session import local_frame
 
 
 def gce_expand(
@@ -55,7 +56,7 @@ def gce_expand(
         arc table (src ∈ C, dst ∉ C, w) — one pass over the member
         adjacency."""
         mdf = F.broadcast(
-            spark.createDataFrame([(m,) for m in members], "id long")
+            local_frame(spark, [(m,) for m in members], "id long")
         )
         touching = arcs.join(
             mdf.withColumnRenamed("id", "dst"), "dst", "left_semi"
@@ -80,7 +81,7 @@ def gce_expand(
     # undirected edge twice in arcs → /2), cut = Σ w member→outside.
     def _init():
         mdf = F.broadcast(
-            spark.createDataFrame([(m,) for m in members], "id long")
+            local_frame(spark, [(m,) for m in members], "id long")
         )
         both = arcs.join(mdf.withColumnRenamed("id", "src"), "src", "left_semi") \
                    .join(mdf.withColumnRenamed("id", "dst"), "dst", "left_semi")

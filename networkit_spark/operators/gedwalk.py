@@ -49,6 +49,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.storagelevel import StorageLevel
 
 from networkit_spark.graph import Graph
+from networkit_spark.session import local_frame
 
 _MAX_LEVELS = 60
 
@@ -189,7 +190,7 @@ class _Sweeper:
         """computeMarginalGain for a whole candidate batch in one
         multi-candidate sweep: {z: (score(S∪{z}), w(S∪{z}))}."""
         cdf = F.broadcast(
-            self.spark.createDataFrame([(c,) for c in cands], "z long")
+            local_frame(self.spark, [(c,) for c in cands], "z long")
         )
         in_g = (
             (F.col("id").isin(*group) if group else F.lit(False))
@@ -585,8 +586,8 @@ def ged_walk_level_table(
             out_rows.append((i, h, alphas[i] * h))
         for df in persisted:
             df.unpersist()
-        return sw.spark.createDataFrame(
-            out_rows, "level int, hits double, contrib double"
+        return local_frame(
+            sw.spark, out_rows, "level int, hits double, contrib double"
         )
     finally:
         sw.close()

@@ -38,6 +38,8 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.storagelevel import StorageLevel
 
 from networkit_spark.graph import Graph
+from networkit_spark.plans.iterative import truncate
+from networkit_spark.session import local_frame
 
 
 @dataclass
@@ -66,11 +68,10 @@ def group_degree(g: Graph, k: int, count_group_nodes: bool = False) -> GroupDegr
     verts = g.vertices().persist(StorageLevel.MEMORY_AND_DISK)
     penalty = 0 if count_group_nodes else 1
 
-    reachable = verts.filter(F.lit(False)).select("id")
+    reachable = verts.filter(F.lit(False)).select("id").persist(StorageLevel.MEMORY_AND_DISK)
     group: list[tuple[int, int, int]] = []  # (rank, id, gain)
     chosen: list[int] = []
     for rank in range(1, k + 1):
-        reachable = reachable.persist(StorageLevel.MEMORY_AND_DISK)
         # |N_out(u) \ reachable| per candidate
         unreached = (
             arcs.join(reachable, arcs.dst == reachable.id, "left_anti")
@@ -102,20 +103,18 @@ def group_degree(g: Graph, k: int, count_group_nodes: bool = False) -> GroupDegr
         chosen.append(wid)
         group.append((rank, wid, wgain))
         newly = (
-            spark.createDataFrame([(wid,)], "id long")
+            local_frame(spark, [(wid,)], "id long")
             .unionByName(
                 arcs.filter(F.col("src") == wid).select(F.col("dst").alias("id"))
             )
         )
-        nxt = reachable.unionByName(newly).distinct().localCheckpoint(eager=True)
-        reachable.unpersist()
-        reachable = nxt
+        reachable = truncate(reachable.unionByName(newly).distinct(), release=reachable)
 
     n_reachable = reachable.count()
     score = n_reachable if count_group_nodes else n_reachable - k
     arcs.unpersist()
     verts.unpersist()
-    group_df = spark.createDataFrame(group, "rank int, id long, gain long")
+    group_df = local_frame(spark, group, "rank int, id long, gain long")
     return GroupDegreeResult(group=group_df, score=score)
 
 

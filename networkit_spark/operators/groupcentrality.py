@@ -41,6 +41,7 @@ from pyspark.storagelevel import StorageLevel
 
 from networkit_spark.graph import Graph
 from networkit_spark.operators.apsp import apsp
+from networkit_spark.session import local_frame
 
 
 def _dist_table(graph: Graph, max_depth: int | None) -> DataFrame:
@@ -168,8 +169,8 @@ def group_harmonic_closeness(
 def score_of_group_closeness(graph: Graph, members: list[int]) -> float:
     """GroupCloseness.hpp:103-113 scoreOfGroup."""
     dist = apsp(graph)
-    src = graph.edges.sparkSession.createDataFrame(
-        [(int(m),) for m in members], "s long"
+    src = local_frame(
+        graph.edges.sparkSession, [(int(m),) for m in members], "s long"
     )
     dmin = (
         dist.join(F.broadcast(src), "s", "left_semi")
@@ -183,8 +184,8 @@ def score_of_group_closeness(graph: Graph, members: list[int]) -> float:
 def score_of_group_harmonic(graph: Graph, members: list[int]) -> float:
     """GroupHarmonicCloseness.cpp:622-629 scoreOfGroup."""
     dist = apsp(graph)
-    src = graph.edges.sparkSession.createDataFrame(
-        [(int(m),) for m in members], "s long"
+    src = local_frame(
+        graph.edges.sparkSession, [(int(m),) for m in members], "s long"
     )
     dmin = (
         dist.join(F.broadcast(src), "s", "left_semi")
@@ -252,7 +253,7 @@ def group_closeness_local_swaps(
             # side of a left join (basedf), where a baked-in hint is
             # unusable (Spark drops it with a HintErrorLogger warning
             # and silently shuffles).
-            memdf = spark.createDataFrame([(m,) for m in members], "x long")
+            memdf = local_frame(spark, [(m,) for m in members], "x long")
             memd = dist.join(
                 F.broadcast(memdf.withColumnRenamed("x", "s")), "s", "left_semi"
             )
@@ -363,7 +364,7 @@ def group_closeness_local_swaps(
             n_swaps += 1
         # max_swaps exhausted: report the current farness
         memdf = F.broadcast(
-            spark.createDataFrame([(m,) for m in members], "s long")
+            local_frame(spark, [(m,) for m in members], "s long")
         )
         f0 = (
             dist.join(memdf, "s", "left_semi")

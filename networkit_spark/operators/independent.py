@@ -52,6 +52,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 
 from networkit_spark.graph import Graph
 from networkit_spark.plans.iterative import truncate
+from networkit_spark.session import local_frame
 
 M = 1_000_000_007
 
@@ -90,7 +91,7 @@ def luby_independent_set(g: Graph, seed: int = 1, max_rounds: int = 64) -> LubyR
     sym.count()
 
     active = truncate(g.vertices().select("id"))
-    members = spark.createDataFrame([], "id long")
+    members = local_frame(spark, [], "id long")
     rounds = 0
     try:
         while rounds < max_rounds:

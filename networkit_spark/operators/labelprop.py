@@ -64,10 +64,9 @@ _BROADCAST_AT = 10 << 20
 class PLPResult:
     labels: DataFrame  # (id: long, label: long)
     iterations: int
-    # Per-sweep dicts {"iteration": k, "updated": n}. In fixed-iteration
-    # mode (threshold < 0) the per-sweep count job is skipped, so
-    # "updated" is the integer sentinel -1 (count not measured), never
-    # None: consumers summing/thresholding the counts stay type-safe.
+    # Per-sweep records {"iteration": k, "rows": n, "updated": changed},
+    # measured by the action that materializes each sweep (also in
+    # fixed-iteration mode, where the count never stops the loop).
     history: list = field(default_factory=list)
 
     def number_of_communities(self) -> int:
@@ -179,12 +178,10 @@ def label_propagation(
     init_snap = state
 
     iterations = 0
-    history: list[dict] = []
     if resume:
         latest = ckpt.latest()
         if latest is not None:
             iterations, state, _ = latest
-            history = [m["metrics"] for m in ckpt.history()]
 
     n_updated = n  # "all nodes have new labels -> first iteration runs" (PLP.cpp:45)
     while n_updated > threshold and iterations < max_iterations:
@@ -236,21 +233,15 @@ def label_propagation(
             merged = merged.withColumn("active", F.lit(True))
 
         iterations += 1
-        snap = ckpt.save(merged, iterations, None)
-        if threshold < 0:
-            # Fixed-iteration mode: the loop never stops on the update
-            # count, so skip the per-sweep count job entirely.
-            history.append({"iteration": iterations, "updated": -1})
-        else:
-            n_updated = snap.filter("changed").count()
-            history.append({"iteration": iterations, "updated": int(n_updated)})
-        state = snap
+        state = ckpt.save(merged, iterations, {"updated": F.count_if("changed")})
+        n_updated = ckpt.records[-1]["updated"]
 
     sym.unpersist()
     if init_snap is not state:
         init_snap.unpersist()
     return PLPResult(
-        labels=state.select("id", "label"), iterations=iterations, history=history
+        labels=state.select("id", "label"), iterations=iterations,
+        history=ckpt.log(iterations),
     )
 
 

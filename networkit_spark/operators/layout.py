@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame, functions as F
 from networkit_spark.graph import Graph
 from networkit_spark.operators.distances import multi_source_bfs
 from networkit_spark.plans.iterative import truncate
+from networkit_spark.session import local_frame
 
 
 @dataclass
@@ -64,8 +65,8 @@ def pivot_distance_matrix(
     )
     if not pivots:
         raise ValueError("no pivots selected — lower pivot_modulus")
-    sources = graph.edges.sparkSession.createDataFrame(
-        [(p,) for p in pivots], "s long"
+    sources = local_frame(
+        graph.edges.sparkSession, [(p,) for p in pivots], "s long"
     )
     dists = multi_source_bfs(graph, sources)
     reached = dists.select("id").distinct().count()
@@ -147,7 +148,7 @@ def pivot_mds(
     vrows = [
         (int(j), int(d), float(V[j, d])) for j in range(k) for d in range(dim)
     ]
-    vdf = F.broadcast(spark.createDataFrame(vrows, "j int, d int, vv double"))
+    vdf = F.broadcast(local_frame(spark, vrows, "j int, d int, vv double"))
     coords = (
         centered.join(vdf, "j")
         .groupBy("id", "d")

@@ -49,6 +49,7 @@ from networkit_spark.operators.coarsening import coarsen, prolong
 from networkit_spark.operators.plm import _local_louvain, _move_phase, _node_volumes
 from networkit_spark.plans import local_guard
 from networkit_spark.plans.iterative import truncate
+from networkit_spark.session import local_frame
 
 
 @dataclass
@@ -245,8 +246,8 @@ def leiden(
         node_ids = [r["id"] for r in graph.vertices().collect()]
         label = _local_leiden(arcs, node_ids, gamma, max_iter)
         spark = graph.edges.sparkSession
-        labels_df = spark.createDataFrame(
-            [(int(u), int(l)) for u, l in sorted(label.items())],
+        labels_df = local_frame(
+            spark, [(int(u), int(l)) for u, l in sorted(label.items())],
             "id long, label long",
         )
         if _depth == 0:

@@ -41,7 +41,8 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.storagelevel import StorageLevel
 
 from networkit_spark.graph import Graph
-from networkit_spark.plans.iterative import Checkpointer, truncate
+from networkit_spark.plans.iterative import Checkpointer, materialize, truncate
+from networkit_spark.session import local_frame
 
 
 def _q(w, c, alpha: float):
@@ -77,13 +78,13 @@ def lfm_cover(
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
 
-    cover = spark.createDataFrame([], "community long, id long")
-    covered = spark.createDataFrame([], "id long")
+    cover = local_frame(spark, [], "community long, id long")
+    covered = local_frame(spark, [], "id long")
     rounds = 0
     while rounds < max_rounds:
         rounds += 1
-        uncovered = truncate(graph.vertices().join(covered, "id", "left_anti"))
-        if uncovered.limit(1).count() == 0:
+        uncovered, seen = materialize(graph.vertices().join(covered, "id", "left_anti"))
+        if seen["rows"] == 0:
             break
         # seed batch: uncovered local id-minima among uncovered neighbors
         unc_edges = (

@@ -47,6 +47,7 @@ from networkit_spark.plans.ranking import (
     global_prefix_sums,
     global_ranks_score_desc,
 )
+from networkit_spark.session import local_frame
 
 
 def _canonical_undirected(graph: Graph) -> DataFrame:
@@ -171,12 +172,12 @@ def evaluation_points(
     cum = global_prefix_sums(labeled, "r", "pos", out_col="tp")
     # ranks cover [0, n); the grid's largest entry is always exactly n
     # (i = T−1 ⇒ ceil(n·1.0)) — its TP is the total positive count
-    thr = spark.createDataFrame([(int(t),) for t in grid if t < n], "t long")
+    thr = local_frame(spark, [(int(t),) for t in grid if t < n], "t long")
     stats = (
         cum.select(F.col("r").alias("t"), F.col("tp").cast("long").alias("tp"))
         .join(F.broadcast(thr), "t")
         .unionByName(
-            spark.createDataFrame([(int(n), int(num_pos))], "t long, tp long")
+            local_frame(spark, [(int(n), int(num_pos))], "t long, tp long")
         )
         .withColumn("fp", F.col("t") - F.col("tp"))
     )

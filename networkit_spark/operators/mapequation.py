@@ -49,7 +49,7 @@ from pyspark.storagelevel import StorageLevel
 from networkit_spark.graph import Graph
 from networkit_spark.operators.coarsening import coarsen, prolong
 from networkit_spark.operators.plm import _node_volumes
-from networkit_spark.plans.iterative import truncate
+from networkit_spark.plans.iterative import materialize, truncate
 
 
 @dataclass
@@ -211,15 +211,15 @@ def _move_phase(
             F.coalesce("gate", F.lit(False)).alias("moved"),
             F.col("new_label").isNotNull().alias("improvable"),
         )
-        merged = merged.localCheckpoint(eager=False).persist()
-        counts = merged.agg(
-            F.count_if("moved").alias("nm"), F.count_if("improvable").alias("ni")
-        ).first()
-        state.unpersist()
+        merged, counts = materialize(
+            merged,
+            {"nm": F.count_if("moved"), "ni": F.count_if("improvable")},
+            release=state,
+        )
         aff.unpersist()
         comm.unpersist()
-        n_moved, n_improvable = int(counts["nm"]), int(counts["ni"])
-        state = merged.select("id", "label", "vol", "loop")
+        n_moved, n_improvable = counts["nm"], counts["ni"]
+        state = merged  # whole frame, so the next release frees it
         moves_history.append(n_moved)
         if n_moved > 0:
             change = True

@@ -23,7 +23,8 @@ from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.storagelevel import StorageLevel
 
 from networkit_spark.graph import Graph
-from networkit_spark.plans.iterative import truncate
+from networkit_spark.plans.iterative import materialize, truncate
+from networkit_spark.session import local_frame
 
 
 def local_max_matching(graph: Graph, max_rounds: int = 64) -> DataFrame:
@@ -66,8 +67,8 @@ def local_max_matching(graph: Graph, max_rounds: int = 64) -> DataFrame:
             .filter("sides = 2")
             .select("u", "v", "weight")
         )
-        mutual = truncate(mutual)
-        if mutual.limit(1).count() == 0:
+        mutual, seen = materialize(mutual)
+        if seen["rows"] == 0:
             break
         matched_pieces.append(mutual)
 
@@ -82,7 +83,7 @@ def local_max_matching(graph: Graph, max_rounds: int = 64) -> DataFrame:
         )
 
     if not matched_pieces:
-        return spark.createDataFrame([], "u long, v long, weight double")
+        return local_frame(spark, [], "u long, v long, weight double")
     out = matched_pieces[0]
     for p in matched_pieces[1:]:
         out = out.unionByName(p)
@@ -162,8 +163,8 @@ def suitor_matching(graph: Graph, max_rounds: int = 256) -> DataFrame:
                 F.col("pick.weight").alias("w"),
             )
         )
-        proposals = truncate(proposals)
-        if proposals.limit(1).count() == 0:
+        proposals, seen = materialize(proposals)
+        if seen["rows"] == 0:
             break
         # targets accept their best incoming proposal
         accepted = (
@@ -326,8 +327,8 @@ def b_suitor_matching(
             .filter("sides = 2")
             .select("u", "v", "weight")
         )
-        mutual = truncate(mutual)
-        if mutual.limit(1).count() == 0:
+        mutual, seen = materialize(mutual)
+        if seen["rows"] == 0:
             mutual.unpersist()
             break
         matched_pieces.append(mutual)
@@ -352,7 +353,7 @@ def b_suitor_matching(
     residual.unpersist()
     live.unpersist()
     if not matched_pieces:
-        return spark.createDataFrame([], "u long, v long, weight double")
+        return local_frame(spark, [], "u long, v long, weight double")
     out = matched_pieces[0]
     for p in matched_pieces[1:]:
         out = out.unionByName(p)

@@ -75,6 +75,7 @@ from pyspark.storagelevel import StorageLevel
 from networkit_spark.graph import Graph
 from networkit_spark.operators.commutetime import _solve_cg_block
 from networkit_spark.plans.iterative import truncate
+from networkit_spark.session import local_frame
 
 _CLAMP = 1e-5
 
@@ -157,7 +158,7 @@ def random_sphere_init(graph: Graph, dim: int = 2, seed: int = 1) -> DataFrame:
     deg = graph.out_degrees()
     center = deg.orderBy(F.col("degree").desc(), F.col("id")).first()
     spark = graph.edges.sparkSession
-    src = spark.createDataFrame([(int(center["id"]),)], "s long")
+    src = local_frame(spark, [(int(center["id"]),)], "s long")
     dist = multi_source_bfs(graph, src).select("id", "dist")
     comps = [
         (F.pmod(F.xxhash64("id", F.lit(seed), F.lit(jj)), F.lit(2_000_003))

@@ -29,6 +29,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from networkit_spark.session import local_frame
+
 MEDIA_SCHEMA = (
     "media_id long, kind string, payload binary, "
     "meta struct<width:int, height:int, n_frames:int, sample_rate:int>"
@@ -235,4 +237,4 @@ def synthetic_media(spark, n: int = 64, seed: int = 42) -> DataFrame:
             ]
             payload = codecs.encode_frames(frames)
         rows.append((i, kind, payload, (w, h, n_frames, rate)))
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
+    return local_frame(spark, rows, MEDIA_SCHEMA)

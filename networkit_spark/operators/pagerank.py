@@ -23,8 +23,9 @@ Spark plan (per superstep, one shuffle pipeline, Catalyst-optimized):
              → groupBy(dst).agg(sum(score·frac))              [partial+final agg]
   new      = vertices ⟕ contribs  (missing → 0)
              [⨯ 1-row sink-mass agg, broadcast-nested-loop — no driver collect]
-  checkpointed with old score as a column so the convergence norm is a cheap
-  scan of the materialized snapshot (no extra shuffle/join).
+  checkpointed with old score as a column; the convergence norm is an
+  aggregate of the same action that materializes the superstep
+  (Checkpointer.save measures), so no job re-reads the snapshot.
 
 The weight/deg division is folded into the edge table ONCE before the loop
 (`edges_norm(src, dst, frac)`), persisted hash-partitioned on src — this
@@ -188,15 +189,13 @@ def pagerank(
         checkpoint_every = 1
 
     iterations = 0
-    history: list[dict] = []
     ranks = vertices.select("id", F.lit(1.0 / n).alias("score"))
 
     if resume:
         latest = ckpt.latest()
         if latest is not None:
-            iterations, snap, meta = latest
+            iterations, snap, _ = latest
             ranks = snap.select("id", "score")
-            history = [m["metrics"] for m in ckpt.history()]
 
     converged = False
     hit_tol = False
@@ -243,23 +242,19 @@ def pagerank(
             # Deferred lineage truncation: let Catalyst fuse checkpoint_every
             # supersteps into one lazy plan (one job instead of k) — the plan
             # depth stays bounded at ~3·checkpoint_every operators.
-            history.append({"iteration": iterations})
             converged = iterations >= max_iter
             if iterations % checkpoint_every == 0 or converged:
                 snap = ckpt.save(new, iterations, None)
             else:
                 snap = new
         else:
-            # Materialize the superstep (lineage truncation / durable
-            # snapshot), then compute the convergence norm as a cheap scan
-            # of the snapshot.
-            snap = ckpt.save(new, iterations, None)
-            diff_row = snap.select(
-                F.sqrt(F.sum(F.pow(F.col("score") - F.col("old_score"), 2))).alias("l2"),
-                F.sum(F.abs(F.col("score") - F.col("old_score"))).alias("l1"),
-            ).first()
-            diff = diff_row["l2"] if norm == "l2" else diff_row["l1"]
-            history.append({"iteration": iterations, "diff": float(diff)})
+            # The action that materializes the superstep also measures the
+            # convergence norm.
+            delta = F.col("score") - F.col("old_score")
+            snap = ckpt.save(new, iterations, {
+                "diff": F.sqrt(F.sum(F.pow(delta, 2))) if norm == "l2"
+                else F.sum(F.abs(delta))})
+            diff = ckpt.records[-1]["diff"]
             # Reference order (PageRank.cpp:53-63): maxIterations first, then tol.
             hit_tol = diff <= tol
             converged = iterations >= max_iter or hit_tol
@@ -288,7 +283,7 @@ def pagerank(
         iterations=iterations,
         n=n,
         converged=hit_tol,
-        history=history,
+        history=ckpt.log(iterations),
     )
 
 

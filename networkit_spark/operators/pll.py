@@ -37,8 +37,9 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.storagelevel import StorageLevel
 
 from networkit_spark.graph import Graph
-from networkit_spark.plans.iterative import truncate
+from networkit_spark.plans.iterative import materialize, truncate
 from networkit_spark.plans.ranking import global_ranks_score_desc
+from networkit_spark.session import local_frame
 
 
 def _landmark_ranks(graph: Graph) -> DataFrame:
@@ -131,9 +132,9 @@ def _pruned_batch_bfs(
             .join(visited, ["rank", "id"], "left_anti")
             .withColumn("level", F.lit(level).cast("long"))
         )
-        nxt = truncate(nxt)
+        nxt, seen = materialize(nxt)
         keep.extend((alive, nxt))
-        if nxt.limit(1).count() == 0:
+        if seen["rows"] == 0:
             break
         visited = visited.unionByName(nxt.select("rank", "id"))
         frontier = nxt
@@ -176,7 +177,7 @@ def pruned_landmark_labeling(
         ).select("rank", F.col("id").alias("root"))
 
     if not graph.directed:
-        labels = truncate(spark.createDataFrame([], "id long, hub long, dist long"))
+        labels = truncate(local_frame(spark, [], "id long, hub long, dist long"))
         for b0 in range(0, n, batch_size):
             batch, snapshots = _pruned_batch_bfs(fwd, labels, labels, _roots(b0))
             labels = truncate(labels.unionByName(batch), release=labels)
@@ -190,8 +191,8 @@ def pruned_landmark_labeling(
     # d(r→h) + d(h→w) ≤ level; PrunedLandmarkLabeling.cpp:86-95 runs the
     # reverse sweep per landmark for the same reason).
     rev = fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    labels_out = truncate(spark.createDataFrame([], "id long, hub long, dist long"))
-    labels_in = truncate(spark.createDataFrame([], "id long, hub long, dist long"))
+    labels_out = truncate(local_frame(spark, [], "id long, hub long, dist long"))
+    labels_in = truncate(local_frame(spark, [], "id long, hub long, dist long"))
     for b0 in range(0, n, batch_size):
         roots = _roots(b0)
         batch_out, snaps_f = _pruned_batch_bfs(fwd, labels_in, labels_out, roots)

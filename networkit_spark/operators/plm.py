@@ -80,7 +80,8 @@ from pyspark.storagelevel import StorageLevel
 
 from networkit_spark.graph import Graph
 from networkit_spark.plans import local_guard
-from networkit_spark.plans.iterative import truncate
+from networkit_spark.plans.iterative import materialize, truncate
+from networkit_spark.session import local_frame
 
 # Move-gate density: in sweep t a node may apply its best move iff
 # xxhash64(id, t) mod _GATE_MOD != 0 (p = 7/8). See the module docstring.
@@ -331,21 +332,22 @@ def _move_phase(
         )
         if _dbg and sweep == 0 and _os.environ.get("PLM_EXPLAIN"):
             merged.explain("formatted")
-        # Inline truncate: the checkpoint is LAZY, so the convergence-
-        # counter aggregation below is the one job that computes the
-        # sweep, truncates lineage, and populates the cache. (A plain
-        # persist would preserve the merge join's partitioning/ordering
-        # for the next sweep — but un-truncated per-sweep plans grow
+        # One job computes the sweep, truncates lineage, populates the
+        # cache and counts the convergence counters. (A plain persist
+        # would preserve the merge join's partitioning/ordering for the
+        # next sweep — but un-truncated per-sweep plans grow
         # exponentially in analysis cost; measured: 4 plain-persist
         # sweeps ran 8× slower than 4 checkpointed ones. The checkpoint
         # costs one 20k-row exchange + sort per sweep instead.)
-        merged = merged.localCheckpoint(eager=False).persist()
-        counts = merged.agg(
-            F.count_if("moved").alias("nm"), F.count_if("improvable").alias("ni")
-        ).first()
-        state.unpersist()
-        n_moved, n_improvable = int(counts["nm"]), int(counts["ni"])
-        state = merged.select("id", "label", "vol")
+        merged, counts = materialize(
+            merged,
+            {"nm": F.count_if("moved"), "ni": F.count_if("improvable")},
+            release=state,
+        )
+        n_moved, n_improvable = counts["nm"], counts["ni"]
+        # The whole materialized frame stays the state (every use selects
+        # its columns), so the next sweep's release really frees it.
+        state = merged
         moves_history.append(n_moved)
         if _dbg:
             tracker = spark.sparkContext.statusTracker()
@@ -528,17 +530,8 @@ def plm(
                 refine,
             )
             result = {u: sub[c] for u, c in base.items()}
-        import pandas as pd
-
-        items = sorted(result.items())
-        labels_df = spark.createDataFrame(
-            pd.DataFrame(
-                {
-                    "id": [int(u) for u, _ in items],
-                    "label": [int(l) for _, l in items],
-                }
-            ),
-            schema="id long, label long",
+        labels_df = local_frame(
+            spark, [(int(u), int(l)) for u, l in sorted(result.items())], "id long, label long"
         )
         return PLMResult(labels=labels_df, levels=1, sweeps=[["local"]])
 

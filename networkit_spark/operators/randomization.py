@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, Window, functions as F
 from networkit_spark.graph import Graph
 from networkit_spark.operators.embedding import WALK_HASH_M, _A, _B, _C, _D
 from networkit_spark.plans.iterative import truncate
+from networkit_spark.session import local_frame
 
 
 def _mix(*cols):
@@ -412,8 +413,8 @@ def curveball(graph: Graph, trades: list, seed: int = 1) -> Graph:
         used.update((u, v))
         batches[-1].append((u, v))
     for rnd, batch in enumerate(b for b in batches if b):
-        wide = spark.createDataFrame(
-            [(i, min(u, v), max(u, v)) for i, (u, v) in enumerate(batch)],
+        wide = local_frame(
+            spark, [(i, min(u, v), max(u, v)) for i, (u, v) in enumerate(batch)],
             "pid long, id0 long, id1 long",
         )
         edges = truncate(

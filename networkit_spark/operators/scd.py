@@ -39,6 +39,7 @@ from pyspark.storagelevel import StorageLevel
 
 from networkit_spark.graph import Graph
 from networkit_spark.plans.iterative import truncate
+from networkit_spark.session import local_frame
 
 
 def _volumes(graph: Graph) -> DataFrame:
@@ -82,8 +83,8 @@ def approximate_pagerank(
 
     init = 1.0 / len(seeds)
     state = truncate(
-        spark.createDataFrame(
-            [(int(s), 0.0, init) for s in sorted(set(seeds))],
+        local_frame(
+            spark, [(int(s), 0.0, init) for s in sorted(set(seeds))],
             "id long, p double, res double",
         )
         .join(vols, "id")

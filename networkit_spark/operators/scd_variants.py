@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame, functions as F
 from networkit_spark.graph import Graph
 from networkit_spark.operators.clique import _bron_kerbosch_pivot
 from networkit_spark.plans import local_guard
+from networkit_spark.session import local_frame
 
 
 def _ieee_div(a: float, b: float) -> float:
@@ -82,7 +83,7 @@ class LocalAdjacencyCache:
         todo = sorted({int(n) for n in nodes} - self._adj.keys())
         if not todo:
             return
-        batch = self._spark.createDataFrame([(n,) for n in todo], "src long")
+        batch = local_frame(self._spark, [(n,) for n in todo], "src long")
         pull = self._arcs.join(F.broadcast(batch), "src", "left_semi")
         if self._max_local_arcs:
             n_new = pull.count()

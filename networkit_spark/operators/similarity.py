@@ -38,6 +38,8 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from networkit_spark.session import local_frame
+
 N_PLANES = 8
 
 
@@ -121,7 +123,7 @@ def brute_force_topk(queries: DataFrame, corpus: DataFrame, k: int = 5,
     spark = corpus.sparkSession
     qrows = queries.select("vec_id", vec_col).collect()
     if not qrows:
-        return spark.createDataFrame([], "query_id long, neighbor_id long, sim double")
+        return local_frame(spark, [], "query_id long, neighbor_id long, sim double")
     q_ids = np.array([r[0] for r in qrows], dtype=np.int64)
     Q = np.array([list(r[1]) for r in qrows], dtype=np.float64)
     qn = np.sqrt((Q * Q).sum(axis=1))

@@ -23,7 +23,8 @@ from pyspark.storagelevel import StorageLevel
 
 from networkit_spark.graph import Graph
 from networkit_spark.operators.traversal import bfs_distances
-from networkit_spark.plans.iterative import truncate
+from networkit_spark.plans.iterative import materialize, truncate
+from networkit_spark.session import local_frame
 
 
 def all_simple_paths(graph: Graph, source: int, target: int,
@@ -54,10 +55,10 @@ def all_simple_paths(graph: Graph, source: int, target: int,
         F.col("id").alias("dst"), F.col("distance").alias("togo")
     )
 
-    frontier = truncate(spark.createDataFrame(
-        [(int(source), [int(source)])], "cur long, path array<long>"
+    frontier = truncate(local_frame(
+        spark, [(int(source), [int(source)])], "cur long, path array<long>"
     ))
-    done = spark.createDataFrame([], "path array<long>")
+    done = local_frame(spark, [], "path array<long>")
     for step in range(1, cutoff + 1):
         ext = (
             frontier.join(sym, frontier.cur == sym.src)
@@ -74,9 +75,9 @@ def all_simple_paths(graph: Graph, source: int, target: int,
             ),
             release=done,
         )
-        frontier = truncate(ext.filter(F.col("cur") != target),
+        frontier, seen = materialize(ext.filter(F.col("cur") != target),
                             release=frontier)
-        if frontier.limit(1).count() == 0:
+        if seen["rows"] == 0:
             break
     sym.unpersist()
     return done

@@ -40,6 +40,7 @@ from pyspark.storagelevel import StorageLevel
 
 from networkit_spark.graph import Graph
 from networkit_spark.plans.iterative import truncate
+from networkit_spark.session import local_frame
 
 M = 1_000_000_007
 
@@ -124,6 +125,6 @@ def epidemic_seir(
             censuses.append((zero, t, s, census.get(s, 0)))
     sym.unpersist()
     state.unpersist()
-    return spark.createDataFrame(
-        censuses, "zero long, t int, state int, population long"
+    return local_frame(
+        spark, censuses, "zero long, t int, state int, population long"
     )

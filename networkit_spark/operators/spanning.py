@@ -29,7 +29,8 @@ from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.storagelevel import StorageLevel
 
 from networkit_spark.graph import Graph
-from networkit_spark.plans.iterative import truncate
+from networkit_spark.plans.iterative import materialize, truncate
+from networkit_spark.session import local_frame
 
 
 def _simple_weighted_undirected(graph: Graph) -> DataFrame:
@@ -134,7 +135,7 @@ def maximum_spanning_forest(
 
     und.unpersist()
     if not forest_pieces:
-        return spark.createDataFrame([], "u long, v long, weight double")
+        return local_frame(spark, [], "u long, v long, weight double")
     out = forest_pieces[0]
     for p in forest_pieces[1:]:
         out = out.unionByName(p)
@@ -290,7 +291,7 @@ def union_maximum_spanning_forest(
     ).collect()[0]
     if stats["m"] == 0:
         und.unpersist()
-        return spark.createDataFrame([], "u long, v long, weight double")
+        return local_frame(spark, [], "u long, v long, weight double")
     if stats["nlvl"] == stats["m"]:
         # every weight unique -> the max forest is unique -> UMSF == MSF
         out = maximum_spanning_forest(g)
@@ -320,8 +321,8 @@ def union_maximum_spanning_forest(
             .join(lv, "v")
             .filter(F.col("cu") != F.col("cv"))
         )
-        lvl = truncate(lvl)
-        if lvl.limit(1).count() == 0:
+        lvl, seen = materialize(lvl)
+        if seen["rows"] == 0:
             continue  # level fully inside existing components
         member_pieces.append(lvl.select("u", "v", "weight"))
         comp_graph = Graph.from_edges(
@@ -340,7 +341,7 @@ def union_maximum_spanning_forest(
 
     und.unpersist()
     if not member_pieces:
-        return spark.createDataFrame([], "u long, v long, weight double")
+        return local_frame(spark, [], "u long, v long, weight double")
     out = member_pieces[0]
     for p in member_pieces[1:]:
         out = out.unionByName(p)

@@ -52,6 +52,7 @@ from pyspark.storagelevel import StorageLevel
 
 from networkit_spark.graph import Graph
 from networkit_spark.plans.iterative import truncate
+from networkit_spark.session import local_frame
 
 _SCALE = 1_000_000_007
 
@@ -68,7 +69,7 @@ def _by_jj(mat: np.ndarray, spark):
     """k×k numpy matrix → broadcast DataFrame (l, j, g)."""
     k = mat.shape[0]
     rows = [(int(l), int(j), float(mat[l, j])) for l in range(k) for j in range(k)]
-    return F.broadcast(spark.createDataFrame(rows, "l int, j int, g double"))
+    return F.broadcast(local_frame(spark, rows, "l int, j int, g double"))
 
 
 def _gram(a: DataFrame, b: DataFrame) -> np.ndarray:
@@ -304,4 +305,4 @@ def spectral_coloring(graph: Graph, k: int | None = None) -> DataFrame:
     rows = [
         (int(v), int(c)) for c, vs in colors.items() for v in vs
     ]
-    return spark.createDataFrame(rows, "id long, color long")
+    return local_frame(spark, rows, "id long, color long")

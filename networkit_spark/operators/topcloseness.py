@@ -47,6 +47,7 @@ from pyspark.storagelevel import StorageLevel
 
 from networkit_spark.graph import Graph
 from networkit_spark.plans.iterative import Checkpointer, truncate
+from networkit_spark.session import local_frame
 
 
 def _degree_bounds(graph: Graph, n: int, harmonic: bool) -> DataFrame:
@@ -116,14 +117,14 @@ def top_closeness(
 
     if harmonic:
         rows = [(s, float(v)) for s, v in exact.items()]
-        df = spark.createDataFrame(rows, "id long, score double")
+        df = local_frame(spark, rows, "id long, score double")
         return (
             df.withColumn("score", F.round("score", 9))
             .orderBy(F.col("score").desc(), F.col("id").asc())
             .limit(k)
         )
     rows = [(s, float(v)) for s, v in exact.items()]
-    df = spark.createDataFrame(rows, "id long, far double")
+    df = local_frame(spark, rows, "id long, far double")
     return (
         df.orderBy(F.col("far").asc(), F.col("id").asc())
         .limit(k)
@@ -134,7 +135,7 @@ def top_closeness(
 def _sweep(spark, sym, cand, n, harmonic, exact, threshold, better):
     """One synchronous multi-source BFS over `cand`, cutting by bound."""
     ckpt = Checkpointer(spark, None, algorithm="topcloseness")
-    seed = spark.createDataFrame([(int(s),) for s in cand], "s long")
+    seed = local_frame(spark, [(int(s),) for s in cand], "s long")
     visited = truncate(seed.select("s", F.col("s").alias("id")))
     frontier = visited
     stats = {int(s): [0.0, 1] for s in cand}  # s -> [sum, seen] (self seen)

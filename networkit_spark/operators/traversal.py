@@ -19,6 +19,7 @@ from pyspark.storagelevel import StorageLevel
 
 from networkit_spark.graph import Graph
 from networkit_spark.plans.iterative import Checkpointer, truncate
+from networkit_spark.session import local_frame
 
 
 def bfs_distances(graph: Graph, source: int, max_iterations: int | None = None) -> DataFrame:
@@ -31,7 +32,7 @@ def bfs_distances(graph: Graph, source: int, max_iterations: int | None = None) 
         sym = graph.symmetrized_edges().select("src", "dst")
     sym = sym.persist(StorageLevel.MEMORY_AND_DISK)
 
-    visited = spark.createDataFrame([(source, 0)], "id long, distance long")
+    visited = local_frame(spark, [(source, 0)], "id long, distance long")
     frontier = visited
     depth = 0
     while max_iterations is None or depth < max_iterations:
@@ -62,7 +63,7 @@ def shortest_paths(graph: Graph, source: int,
     edges = graph.symmetrized_edges() if not graph.directed else graph.edges
     edges = edges.persist(StorageLevel.MEMORY_AND_DISK)
 
-    dist = spark.createDataFrame([(source, 0.0)], "id long, distance double")
+    dist = local_frame(spark, [(source, 0.0)], "id long, distance double")
     changed, it = 1, 0
     while changed and (max_iterations is None or it < max_iterations):
         it += 1
@@ -225,8 +226,8 @@ def dfs_from(graph: Graph, source: int, max_local_nodes: int = 5_000_000) -> Dat
                 stack.append(v)
                 marked.add(v)
     spark = graph.edges.sparkSession
-    return spark.createDataFrame(
-        [(int(u), int(i)) for i, u in enumerate(order)], "id long, dfs_order long"
+    return local_frame(
+        spark, [(int(u), int(i)) for i, u in enumerate(order)], "id long, dfs_order long"
     )
 
 
@@ -266,7 +267,7 @@ def dfs_edges_from(graph: Graph, source: int, max_local_nodes: int = 5_000_000) 
                 stack.append(v)
                 marked.add(v)
     spark = graph.edges.sparkSession
-    return spark.createDataFrame(
-        [(int(u), int(v), int(i)) for i, (u, v) in enumerate(edges)],
+    return local_frame(
+        spark, [(int(u), int(v), int(i)) for i, (u, v) in enumerate(edges)],
         "src long, dst long, visit_order long",
     )

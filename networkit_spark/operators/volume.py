@@ -35,6 +35,7 @@ from networkit_spark.operators.distances import (
     _require_connected_undirected,
 )
 from networkit_spark.plans.ranking import global_ranks_score_desc
+from networkit_spark.session import local_frame
 
 
 def volume(
@@ -51,7 +52,7 @@ def volume(
     rmax = max(rs)
     dists = multi_source_bfs(graph, seeds, max_depth=int(rmax))
     spark = graph.edges.sparkSession
-    rs_df = spark.createDataFrame([(float(r),) for r in rs], "r double")
+    rs_df = local_frame(spark, [(float(r),) for r in rs], "r double")
     return (
         dists.crossJoin(F.broadcast(rs_df))
         .filter(F.col("dist") <= F.col("r"))
@@ -83,7 +84,7 @@ def neighborhood_function_heuristic(
         step = n / n_samples
         picks = [int(i * step) for i in range(n_samples)]
         spark = graph.edges.sparkSession
-        pick_df = spark.createDataFrame([(p,) for p in picks], "pos long")
+        pick_df = local_frame(spark, [(p,) for p in picks], "pos long")
         seeds = ranked.join(F.broadcast(pick_df.distinct()), "pos") \
             .select(F.col("id").alias("s"))
     elif strategy == "random":
@@ -109,8 +110,8 @@ def neighborhood_function_heuristic(
         est = int(hist.get(h, 0) * norm + 0.5)
         result[h - 1] = est + result[h - 2]
     spark = graph.edges.sparkSession
-    return spark.createDataFrame(
-        [(h + 1, int(v)) for h, v in enumerate(result)], "h long, nf long"
+    return local_frame(
+        spark, [(h + 1, int(v)) for h, v in enumerate(result)], "h long, nf long"
     )
 
 

@@ -34,6 +34,7 @@ from networkit_spark.functions.text import (
     token_stats,
 )
 from networkit_spark.oracles import CC_ITERS, DAMP, PLP_ITERS, PR_ITERS
+from networkit_spark.session import local_frame
 from networkit_spark.sources.tables import derive_web_edges, load_table
 
 
@@ -444,7 +445,7 @@ def q_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     g = _undirected_graph(spark, sf_dir)
     first = g.vertices().agg(F.min("id")).first()[0]
-    src = spark.createDataFrame([(int(first),)], "s long")
+    src = local_frame(spark, [(int(first),)], "s long")
     return multi_source_bfs(g, src).select("id", "dist")
 
 
@@ -562,8 +563,8 @@ def _community_summary(
     labels.select("id", "label").write.mode("overwrite").parquet(path)
     persisted = spark.read.parquet(path)
     return (
-        spark.createDataFrame(
-            [
+        local_frame(
+            spark, [
                 (
                     persisted.count(),
                     persisted.select("label").distinct().count(),
@@ -650,7 +651,7 @@ def q_nominal_assortativity(spark: SparkSession, sf_dir: str, modulus: int = 7) 
     g = _undirected_graph(spark, sf_dir)
     labels = g.vertices().select("id", (F.col("id") % modulus).alias("label"))
     r = nominal_assortativity(g, labels)
-    return spark.createDataFrame([(r,)], "r double").select(
+    return local_frame(spark, [(r,)], "r double").select(
         F.round("r", 6).alias("r")
     )
 
@@ -782,8 +783,8 @@ def q_matching_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         .count()
         == 0
     )
-    return spark.createDataFrame(
-        [(n_matched, is_matching, edges_real, is_maximal)],
+    return local_frame(
+        spark, [(n_matched, is_matching, edges_real, is_maximal)],
         "n_matched long, is_matching boolean, edges_real boolean, is_maximal boolean",
     )
 
@@ -1203,8 +1204,8 @@ def q_partition_eval_mod7(spark: SparkSession, sf_dir: str) -> DataFrame:
             round(stab.weighted_average, 9),
         )
     ]
-    return spark.createDataFrame(
-        row,
+    return local_frame(
+        spark, row,
         "edge_cut double, hub_dominance double, intra_density double, "
         "intra_density_global double, iic double, iie double, "
         "fragmentation double, stable_fraction double",
@@ -1230,8 +1231,8 @@ def q_partition_compare(spark: SparkSession, sf_dir: str) -> DataFrame:
             cells,
         )
     ]
-    return spark.createDataFrame(
-        row,
+    return local_frame(
+        spark, row,
         "rand_node double, rand_graph double, jaccard double, "
         "adjusted_rand double, n_cells long",
     )
@@ -1268,7 +1269,7 @@ def q_stream_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
         itc(ev.filter(F.col("batch") == b).select("src", "dst"), b)
         rows.append((b, itc.total))
     ev.unpersist()
-    return spark.createDataFrame(rows, "batch long, n_triangles long")
+    return local_frame(spark, rows, "batch long, n_triangles long")
 
 
 QUERIES.update({"stream_triangles": q_stream_triangles})
@@ -1668,11 +1669,11 @@ def q_planarity_cases(spark: SparkSession, sf_dir: str) -> DataFrame:
         + [(k4[a], k4[b]) for a in range(4) for b in range(a + 1, 4)]
     )
     gc = Graph.from_edges(
-        spark.createDataFrame(
-            [(u, v, 1.0) for u, v in edges], "src long, dst long, weight double"
+        local_frame(
+            spark, [(u, v, 1.0) for u, v in edges], "src long, dst long, weight double"
         ),
         directed=False,
-        vertices=spark.createDataFrame([(i,) for i in low], "id long"),
+        vertices=local_frame(spark, [(i,) for i in low], "id long"),
     )
     return (
         block_planarity(gc)
@@ -1734,8 +1735,8 @@ def q_conductance_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     g = _undirected_graph(spark, sf_dir)
     labels = g.vertices().select("id", (F.col("id") % 2).alias("label"))
-    return spark.createDataFrame(
-        [(round(conductance(g, labels), 9),)], "conductance double"
+    return local_frame(
+        spark, [(round(conductance(g, labels), 9),)], "conductance double"
     )
 
 
@@ -1752,8 +1753,8 @@ def q_sampled_rand_mod(spark: SparkSession, sf_dir: str) -> DataFrame:
     eta = g.vertices().select("id", (F.col("id") % 4).alias("label"))
     nr = sampled_node_structural_rand(g, zeta, eta, max_samples=500, seed=1)
     gr = sampled_graph_structural_rand(g, zeta, eta, max_samples=500, seed=1)
-    return spark.createDataFrame(
-        [(round(nr, 9), round(gr, 9))], "node_rand double, graph_rand double"
+    return local_frame(
+        spark, [(round(nr, 9), round(gr, 9))], "node_rand double, graph_rand double"
     )
 
 
@@ -1867,7 +1868,7 @@ def q_st_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
         d = bidirectional_bfs(g, int(s), int(t))
         if d is not None:
             rows.append((int(s), int(t), int(d)))
-    return spark.createDataFrame(rows, "s long, t long, dist long")
+    return local_frame(spark, rows, "s long, t long, dist long")
 
 
 def q_st_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1895,7 +1896,7 @@ def q_st_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
         d = bidirectional_dijkstra(wg, int(s), int(t))
         if d is not None:
             rows.append((int(s), int(t), round(float(d), 9)))
-    return spark.createDataFrame(rows, "s long, t long, dist double")
+    return local_frame(spark, rows, "s long, t long, dist double")
 
 
 QUERIES.update({
@@ -1990,8 +1991,8 @@ def q_dynpll_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("id").alias("hi"),
         F.min(F.when(F.col("id") >= 300, F.col("id"))).alias("mid"),
     ).first()
-    added = spark.createDataFrame(
-        [(int(a["lo"]), int(a["hi"])), (int(a["lo"]), int(a["mid"]))],
+    added = local_frame(
+        spark, [(int(a["lo"]), int(a["hi"])), (int(a["lo"]), int(a["mid"]))],
         "src long, dst long",
     )
     _, idx1 = update_pll(sg, idx, added)
@@ -2033,8 +2034,8 @@ def q_dyn_betweenness_one_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).first()
     x = int(a["x"])
     st = one_node_state(sg, x)
-    added = spark.createDataFrame(
-        [(int(a["lo"]), int(a["hi"])), (int(a["lo"]), int(a["mid"]))],
+    added = local_frame(
+        spark, [(int(a["lo"]), int(a["hi"])), (int(a["lo"]), int(a["mid"]))],
         "src long, dst long",
     )
     _, st1 = update_one_node(sg, st, x, added)
@@ -2063,7 +2064,7 @@ def q_dynbfs_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     p2 = (a["ge0"], a["le0"])
     pairs = [(min(a["lo"], a["hi"]), max(a["lo"], a["hi"])),
              (min(p2), max(p2))]
-    added = spark.createDataFrame(pairs, "src long, dst long")
+    added = local_frame(spark, pairs, "src long, dst long")
     removed = g.edges.filter(
         (F.col("src") < F.col("dst"))
         & (F.pmod(F.col("src") * 13 + F.col("dst") * 7, F.lit(11)) == 0)
@@ -2095,7 +2096,7 @@ def q_dynapsp_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min(F.when(F.col("id") >= 300, F.col("id"))).alias("mid"),
     ).first()
     pairs = [(int(a["lo"]), int(a["hi"])), (int(a["lo"]), int(a["mid"]))]
-    added = spark.createDataFrame(pairs, "src long, dst long")
+    added = local_frame(spark, pairs, "src long, dst long")
     st = apsp_state(g, sources=srcs.select(F.col("id").alias("s")))
     _, st2 = update_apsp(g, st, added)
     return st2.select("s", "t", F.col("dist").cast("long").alias("dist"))
@@ -2258,8 +2259,8 @@ def q_group_closeness_4(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     g = _undirected_graph(spark, sf_dir)
     members, score = group_closeness(g, 4)
-    return spark.createDataFrame(
-        [(i + 1, m, round(score, 9)) for i, m in enumerate(members)],
+    return local_frame(
+        spark, [(i + 1, m, round(score, 9)) for i, m in enumerate(members)],
         "ord int, id long, score double",
     )
 
@@ -2273,8 +2274,8 @@ def q_group_harmonic_4(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     g = _undirected_graph(spark, sf_dir)
     members, score = group_harmonic_closeness(g, 4)
-    return spark.createDataFrame(
-        [(i + 1, m, round(score, 9)) for i, m in enumerate(members)],
+    return local_frame(
+        spark, [(i + 1, m, round(score, 9)) for i, m in enumerate(members)],
         "ord int, id long, score double",
     )
 
@@ -2476,8 +2477,8 @@ def q_group_closeness_swaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     members, n_swaps, farness = group_closeness_local_swaps(
         g, init, max_swaps=3
     )
-    return spark.createDataFrame(
-        [(m, n_swaps, farness) for m in members],
+    return local_frame(
+        spark, [(m, n_swaps, farness) for m in members],
         "id long, n_swaps int, farness long",
     )
 
@@ -2607,8 +2608,8 @@ def q_b_matching_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.round(F.sum("weight"), 6).alias("tw"))
         .collect()[0]["tw"]
     )
-    return spark.createDataFrame(
-        [(n_matched, capacity_ok, edges_real, is_maximal, float(total_w or 0.0))],
+    return local_frame(
+        spark, [(n_matched, capacity_ok, edges_real, is_maximal, float(total_w or 0.0))],
         "n_matched long, capacity_ok boolean, edges_real boolean, "
         "is_maximal boolean, total_w double",
     )

@@ -10,8 +10,12 @@ from __future__ import annotations
 
 import os
 import re
+from collections.abc import Iterator
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType, _make_type_verifier, _parse_datatype_string
 
 _FALLBACK_DRIVER_MEMORY = "4g"  # hosts without /proc/meminfo
 _SIZE = re.compile(r"\s*(-?\d+)\s*([kmgtp]?)(b?)\s*", re.IGNORECASE)
@@ -99,3 +103,47 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def _temporal(t: pa.DataType) -> bool:
+    return pa.types.is_temporal(t) or any(_temporal(t.field(i).type) for i in range(t.num_fields))
+
+
+def _arrow_table(rows, struct) -> pa.Table | None:
+    """`rows` as an Arrow table in `struct`, or None where createDataFrame
+    has to convert them: rows that are not plain tuples, values its type
+    check refuses, and temporal columns (the two read naive datetimes in
+    different zones)."""
+    if not (isinstance(struct, StructType) and isinstance(rows, (list, tuple))
+            and all(type(r) in (tuple, list) for r in rows)):
+        return None
+    try:
+        arrow = to_arrow_schema(struct)
+        if any(_temporal(f.type) for f in arrow):
+            return None
+        verify = _make_type_verifier(struct)
+        for r in rows:
+            verify(r)
+        columns = list(zip(*rows)) if rows else [()] * len(arrow)
+        return pa.Table.from_arrays(
+            [pa.array(c, type=f.type) for c, f in zip(columns, arrow)], schema=arrow
+        )
+    except (pa.ArrowException, TypeError, ValueError):
+        return None
+
+
+def local_frame(spark: SparkSession, rows, schema=None) -> DataFrame:
+    """`spark.createDataFrame(rows, schema)`, held as a local relation.
+
+    createDataFrame backs a frame over a Python list with a Python RDD that
+    every job re-reads through a Python worker (~4x the job latency of a
+    local relation on small frames); Arrow hands the rows to the JVM once.
+    Rows Arrow cannot take as they are go through createDataFrame itself,
+    with its conversions and errors."""
+    struct = _parse_datatype_string(schema) if isinstance(schema, str) else schema
+    if isinstance(rows, Iterator):
+        rows = list(rows)
+    table = _arrow_table(rows, struct)
+    if table is None:
+        return spark.createDataFrame(rows, schema)
+    return spark.createDataFrame(table, struct)

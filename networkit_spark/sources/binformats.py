@@ -42,6 +42,7 @@ import numpy as np
 from pyspark.sql import SparkSession, functions as F
 
 from networkit_spark.graph import Graph
+from networkit_spark.session import local_frame
 
 _GT_MAGIC = bytes([0xE2, 0x9B, 0xBE, 0x20, 0x67, 0x74])
 
@@ -99,10 +100,10 @@ def read_graphtool(spark: SparkSession, path: str) -> Graph:
         pdf = pd.DataFrame(
             {"src": np.concatenate(srcs), "dst": np.concatenate(dsts)}
         )
-        edges = spark.createDataFrame(pdf).dropDuplicates(["src", "dst"]) \
+        edges = local_frame(spark, pdf).dropDuplicates(["src", "dst"]) \
             .withColumn("weight", F.lit(1.0))
     else:
-        edges = spark.createDataFrame([], "src long, dst long, weight double")
+        edges = local_frame(spark, [], "src long, dst long, weight double")
     return Graph.from_edges(
         edges, directed=directed, vertices=spark.range(n).select("id")
     )
@@ -195,8 +196,8 @@ def read_rb(spark: SparkSession, path: str) -> Graph:
     for col in range(n_cols):
         for idx in range(int(pointers[col]), int(pointers[col + 1])):
             rows.append((int(rowindex[idx]), col, float(values[idx])))
-    edges = spark.createDataFrame(rows, "src long, dst long, weight double") \
-        if rows else spark.createDataFrame([], "src long, dst long, weight double")
+    edges = local_frame(spark, rows, "src long, dst long, weight double") \
+        if rows else local_frame(spark, [], "src long, dst long, weight double")
     return Graph.from_edges(
         edges,
         directed=not symmetric,
@@ -252,11 +253,11 @@ def read_thrill(spark: SparkSession, paths, n: int = 0) -> Graph:
             "Maximum read node id larger than number of nodes read."
         )
     edges = (
-        spark.createDataFrame(
-            list(zip(srcs, dsts)), "src long, dst long"
+        local_frame(
+            spark, list(zip(srcs, dsts)), "src long, dst long"
         ).withColumn("weight", F.lit(1.0))
         if srcs
-        else spark.createDataFrame([], "src long, dst long, weight double")
+        else local_frame(spark, [], "src long, dst long, weight double")
     )
     return Graph.from_edges(
         edges, directed=False, vertices=spark.range(n_final).select("id")
@@ -312,9 +313,8 @@ def read_binary_partition(spark: SparkSession, path: str, width: int = 4):
     labels = np.frombuffer(buf, dtype=f"<u{width}").astype("int64")
     import pandas as pd
 
-    return spark.createDataFrame(
-        pd.DataFrame({"id": np.arange(len(labels), dtype="int64"),
-                      "label": labels})
+    return local_frame(
+        spark, pd.DataFrame({"id": np.arange(len(labels), dtype="int64"), "label": labels})
     )
 
 
@@ -372,7 +372,7 @@ def read_binary_edgelist_partition(
         on="id",
         how="left",
     )
-    return spark.createDataFrame(out, schema="id long, label long")
+    return local_frame(spark, out, schema="id long, label long")
 
 
 def write_binary_edgelist_partition(
@@ -421,8 +421,8 @@ def read_raster(
                 if npts > 0:
                     cells.append((row, col, npts))
     if not cells:
-        return spark.createDataFrame([], "x double, y double")
-    cdf = spark.createDataFrame(cells, "row long, col long, npts long")
+        return local_frame(spark, [], "x double, y double")
+    cdf = local_frame(spark, cells, "row long, col long, npts long")
     denom = float(1 << 53)
     pts = cdf.select(
         "row", "col",

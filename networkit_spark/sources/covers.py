@@ -25,6 +25,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from networkit_spark.session import local_frame
+
 
 def read_cover(spark: SparkSession, path: str) -> DataFrame:
     """(id, c) membership rows — CoverReader semantics."""
@@ -160,8 +162,8 @@ def read_dgs(spark: SparkSession, path: str) -> DataFrame:
                     (step, seq, typ, nid(a), nid(b), wval(parts[2]))
                 )
                 seq += 1
-    return spark.createDataFrame(
-        rows,
+    return local_frame(
+        spark, rows,
         "step long, seq long, type string, u long, v long, weight double",
     )
 

@@ -32,6 +32,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 
 from networkit_spark.graph import Graph
+from networkit_spark.session import local_frame
 
 
 class DibapResult:
@@ -86,7 +87,7 @@ def read_dibap(spark: SparkSession, path: str) -> DibapResult:
             continue
         seen[(u, t)] = True
         rows.append((u, t, float(w)))
-    edges = spark.createDataFrame(rows, "src long, dst long, weight double")
+    edges = local_frame(spark, rows, "src long, dst long, weight double")
     vertices = spark.range(v).select("id")
     g = Graph.from_edges(
         edges, directed=False, weighted=dew > 0, vertices=vertices
@@ -95,8 +96,8 @@ def read_dibap(spark: SparkSession, path: str) -> DibapResult:
     coords = None
     if xy is not None:
         pts = xy.reshape(v, dxy)
-        coords = spark.createDataFrame(
-            [(i, [float(c) for c in pts[i]]) for i in range(v)],
+        coords = local_frame(
+            spark, [(i, [float(c) for c in pts[i]]) for i in range(v)],
             "id long, pos array<double>",
         )
     return DibapResult(g, coords)

@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from networkit_spark.graph import Graph
+from networkit_spark.session import local_frame
 
 
 def read_edge_list(
@@ -237,8 +238,8 @@ def write_metis(graph: Graph, path: str, weighted: bool | None = None):
         .select("cs", F.coalesce("line", F.lit("")).alias("value"))
     )
     spark = graph.edges.sparkSession
-    header = spark.createDataFrame(
-        [(-1, f"{n} {m} {int(bool(weighted))}")], "cs long, value string"
+    header = local_frame(
+        spark, [(-1, f"{n} {m} {int(bool(weighted))}")], "cs long, value string"
     )
     header.unionByName(body).orderBy("cs").coalesce(1).select("value").write.mode(
         "overwrite"
@@ -261,8 +262,8 @@ def write_snap(graph: Graph, path: str):
             .distinct()
         )
     spark = graph.edges.sparkSession
-    header = spark.createDataFrame(
-        [(-1, -1, f"p {n} {m} u u 0")], "src long, dst long, value string"
+    header = local_frame(
+        spark, [(-1, -1, f"p {n} {m} u u 0")], "src long, dst long, value string"
     )
     body = e.select(
         "src", "dst", F.concat_ws(" ", F.col("src").cast("string"), F.col("dst").cast("string")).alias("value")

@@ -38,6 +38,7 @@ import xml.etree.ElementTree as ET
 from pyspark.sql import DataFrame, SparkSession
 
 from networkit_spark.graph import Graph
+from networkit_spark.session import local_frame
 
 
 def _local(tag: str) -> str:
@@ -90,8 +91,8 @@ def read_gexf(spark: SparkSession, path: str) -> Graph:
              float(w) if w is not None else 1.0)
         )
 
-    edges = spark.createDataFrame(arcs or [], "src long, dst long, weight double")
-    vertices = spark.createDataFrame([(i,) for i in range(len(mapping))], "id long")
+    edges = local_frame(spark, arcs or [], "src long, dst long, weight double")
+    vertices = local_frame(spark, [(i,) for i in range(len(mapping))], "id long")
     return Graph.from_edges(
         edges, directed=directed, weighted=weighted, vertices=vertices
     )
@@ -160,14 +161,14 @@ def read_gexf_events(spark: SparkSession, path: str) -> tuple[Graph, DataFrame]:
                 initial_arcs.append((u, v, wf))
             events.extend((t, op + "e", u, v, wf) for t, op in ops)
 
-    edges = spark.createDataFrame(
-        initial_arcs or [], "src long, dst long, weight double"
+    edges = local_frame(
+        spark, initial_arcs or [], "src long, dst long, weight double"
     )
-    vertices = spark.createDataFrame([(i,) for i in sorted(initial_nodes)], "id long")
+    vertices = local_frame(spark, [(i,) for i in sorted(initial_nodes)], "id long")
     g = Graph.from_edges(edges, directed=directed, weighted=weighted,
                          vertices=vertices)
-    ev = spark.createDataFrame(
-        sorted(events), "time double, kind string, u long, v long, w double"
+    ev = local_frame(
+        spark, sorted(events), "time double, kind string, u long, v long, w double"
     )
     return g, ev
 

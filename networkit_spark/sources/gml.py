@@ -32,6 +32,7 @@ import re
 from pyspark.sql import SparkSession
 
 from networkit_spark.graph import Graph
+from networkit_spark.session import local_frame
 
 _BLOCK_RE = re.compile(r"\b(node|edge)\s*\[(.*?)\]", re.DOTALL)
 _KV_RE = re.compile(r"(\w+)\s+(\"[^\"]*\"|\S+)")
@@ -76,11 +77,11 @@ def read_gml(spark: SparkSession, path: str) -> Graph:
         seen.add(key)
         pairs.append((u, v, 1.0))
 
-    edges = spark.createDataFrame(
-        pairs or [], "src long, dst long, weight double"
+    edges = local_frame(
+        spark, pairs or [], "src long, dst long, weight double"
     )
-    vertices = spark.createDataFrame(
-        [(i,) for i in range(len(gml_nodes))], "id long"
+    vertices = local_frame(
+        spark, [(i,) for i in range(len(gml_nodes))], "id long"
     )
     return Graph.from_edges(edges, directed=directed, vertices=vertices)
 

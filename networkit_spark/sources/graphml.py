@@ -25,6 +25,7 @@ import xml.etree.ElementTree as ET
 from pyspark.sql import SparkSession
 
 from networkit_spark.graph import Graph
+from networkit_spark.session import local_frame
 
 
 def _local(tag: str) -> str:
@@ -69,11 +70,11 @@ def read_graphml(spark: SparkSession, path: str) -> Graph:
                 )
         break  # reference reads the first <graph>
 
-    edges = spark.createDataFrame(
-        arcs or [], "src long, dst long, weight double"
+    edges = local_frame(
+        spark, arcs or [], "src long, dst long, weight double"
     )
-    vertices = spark.createDataFrame(
-        [(i,) for i in range(len(node_map))], "id long"
+    vertices = local_frame(
+        spark, [(i,) for i in range(len(node_map))], "id long"
     )
     return Graph.from_edges(
         edges,

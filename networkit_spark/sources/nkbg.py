@@ -57,6 +57,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from networkit_spark.graph import Graph
 from networkit_spark.plans.local_guard import guard_local_collect, log_local_tail
+from networkit_spark.session import local_frame
 
 _MAGIC_V2 = b"nkbg002\x00"
 _MAGIC_V3 = b"nkbg003\x00"
@@ -346,8 +347,8 @@ def _half_edges_df(spark: SparkSession, path: str, hdr: dict, specs: list[dict],
 
     spec_rows = [(s["chunk"], s["first"], s["last"], s["adj_start"], s["adj_end"],
                   s["w_start"], s["w_end"], s["id_start"], s["id_end"]) for s in specs]
-    spec_df = spark.createDataFrame(
-        spec_rows,
+    spec_df = local_frame(
+        spark, spec_rows,
         "chunk long, first long, last long, adj_start long, adj_end long, "
         "w_start long, w_end long, id_start long, id_end long",
     ).repartition(len(spec_rows), "chunk")
@@ -398,7 +399,7 @@ def read_networkit_binary(spark: SparkSession, path: str) -> Graph:
     deleted = _deleted_nodes(path, hdr)
     vertices = spark.range(hdr["nodes"]).select(F.col("id").cast("long").alias("id"))
     if len(deleted):
-        deleted_df = spark.createDataFrame([(int(u),) for u in deleted], "id long")
+        deleted_df = local_frame(spark, [(int(u),) for u in deleted], "id long")
         vertices = vertices.join(F.broadcast(deleted_df), "id", "left_anti")
     return Graph.from_edges(
         edges,

@@ -54,3 +54,14 @@ def erdos_renyi(n: int, p: float, seed: int = 42):
 
     rng = random.Random(seed)
     return [(u, v) for u in range(n) for v in range(u + 1, n) if rng.random() < p]
+
+
+def assert_same_history(got: list[dict], want: list[dict], rtol: float = 1e-9):
+    """Per-superstep records agree: same iterations and keys, values within
+    rtol (a resumed run sums in another order than an uninterrupted one)."""
+    import math
+
+    assert [sorted(r) for r in got] == [sorted(r) for r in want], (got, want)
+    for g, w in zip(got, want):
+        for key, value in w.items():
+            assert math.isclose(g[key], value, rel_tol=rtol, abs_tol=0.0), (key, g, w)

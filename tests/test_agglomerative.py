@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from networkit_spark.graph import Graph
 from networkit_spark.operators.agglomerative import parallel_agglomerative
 from networkit_spark.operators.quality import modularity
+from networkit_spark.session import local_frame
 
 
 def _labels(spark, edges, nodes=None):
@@ -17,7 +18,7 @@ def _labels(spark, edges, nodes=None):
                          directed=False)
     if nodes:
         g = g.add_nodes(
-            spark.createDataFrame([(int(x),) for x in nodes], "id long"))
+            local_frame(spark, [(int(x),) for x in nodes], "id long"))
     lab = {r["id"]: r["label"] for r in parallel_agglomerative(g).collect()}
     return g, lab
 
@@ -38,7 +39,7 @@ def test_planted_cliques(spark):
     c2 = {lab[i] for i in range(10, 14)}
     assert len(c1) == 1 and len(c2) == 1
     assert c1.isdisjoint(c2)
-    ldf = spark.createDataFrame(list(lab.items()), "id long, label long")
+    ldf = local_frame(spark, list(lab.items()), "id long, label long")
     assert modularity(g, ldf) > 0.3
 
 

@@ -12,6 +12,7 @@ from networkit_spark.operators.distances import (
     algebraic_distance_edge_scores,
     algebraic_distance_loads,
 )
+from networkit_spark.session import local_frame
 
 # weighted undirected graph: two tight pairs bridged weakly + isolated 9
 EDGES = [(0, 1, 4.0), (1, 2, 4.0), (2, 3, 0.5), (3, 4, 4.0), (4, 5, 4.0)]
@@ -49,8 +50,8 @@ def _oracle_loads(num_systems, num_iters, omega, seed=1):
 
 @pytest.fixture(scope="module")
 def g(spark):
-    e = spark.createDataFrame(EDGES, "src long, dst long, weight double")
-    v = spark.createDataFrame([(u,) for u in NODES], "id long")
+    e = local_frame(spark, EDGES, "src long, dst long, weight double")
+    v = local_frame(spark, [(u,) for u in NODES], "id long")
     return Graph.from_edges(e, directed=False, weighted=True, vertices=v)
 
 

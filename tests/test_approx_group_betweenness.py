@@ -10,6 +10,7 @@ import pytest
 from networkit_spark.generators import erdos_renyi
 from networkit_spark.graph import Graph
 from networkit_spark.operators.betweenness import approx_group_betweenness
+from networkit_spark.session import local_frame
 
 from tests.conftest import spark  # noqa: F401
 
@@ -113,7 +114,7 @@ def test_star_center_chosen_first(spark):  # noqa: F811
     # star + pendant path: the hub lies on (almost) every shortest path
     el = [(0, i) for i in range(1, 8)] + [(7, 8), (8, 9)]
     g = Graph.from_edges(
-        spark.createDataFrame(el, "src long, dst long"), directed=False)
+        local_frame(spark, el, "src long, dst long"), directed=False)
     got = approx_group_betweenness(g, group_size=1, samples=80, seed=2)
     assert got.collect()[0]["id"] == 0
 
@@ -121,7 +122,7 @@ def test_star_center_chosen_first(spark):  # noqa: F811
 def test_contract_raises(spark):  # noqa: F811
     el = [(0, 1), (1, 2)]
     g = Graph.from_edges(
-        spark.createDataFrame(el, "src long, dst long"), directed=False)
+        local_frame(spark, el, "src long, dst long"), directed=False)
     with pytest.raises(ValueError):
         approx_group_betweenness(g, group_size=0)
     with pytest.raises(ValueError):
@@ -129,6 +130,6 @@ def test_contract_raises(spark):  # noqa: F811
     with pytest.raises(ValueError):
         approx_group_betweenness(g, group_size=1, epsilon=0.0)
     gd = Graph.from_edges(
-        spark.createDataFrame(el, "src long, dst long"), directed=True)
+        local_frame(spark, el, "src long, dst long"), directed=True)
     with pytest.raises(ValueError):
         approx_group_betweenness(gd, group_size=1)

@@ -16,6 +16,7 @@ from networkit_spark.operators.apsp import (
     multi_target_bfs,
     spsp,
 )
+from networkit_spark.session import local_frame
 
 from tests.conftest import spark  # noqa: F401
 
@@ -101,7 +102,7 @@ def test_spsp_targets_and_multi_target(spark):  # noqa: F811
 
 def test_negative_cycle_raises(spark):  # noqa: F811
     rows = [(0, 1, 1.0), (1, 2, -3.0), (2, 0, 1.0), (2, 3, 5.0)]
-    edges = spark.createDataFrame(rows, "src long, dst long, weight double")
+    edges = local_frame(spark, rows, "src long, dst long, weight double")
     g = Graph.from_edges(edges, directed=True, weighted=True,
                          vertices=spark.range(4))
     try:
@@ -124,7 +125,7 @@ def test_bidirectional_bfs_parity(spark):  # noqa: F811
 
 def test_bidirectional_bfs_disconnected(spark):  # noqa: F811
     rows = [(0, 1, 1.0), (2, 3, 1.0)]
-    edges = spark.createDataFrame(rows, "src long, dst long, weight double")
+    edges = local_frame(spark, rows, "src long, dst long, weight double")
     g = Graph.from_edges(edges, directed=False, vertices=spark.range(4))
     assert bidirectional_bfs(g, 0, 3) is None
     assert bidirectional_bfs(g, 0, 1) == 1
@@ -135,8 +136,8 @@ def test_reverse_bfs_directed(spark):  # noqa: F811
     from networkit_spark.operators.apsp import reverse_bfs
 
     # path 0 -> 1 -> 2 -> 3: reverse BFS from 3 reaches everyone
-    e = spark.createDataFrame(
-        [(0, 1, 1.0), (1, 2, 1.0), (2, 3, 1.0)],
+    e = local_frame(
+        spark, [(0, 1, 1.0), (1, 2, 1.0), (2, 3, 1.0)],
         "src long, dst long, weight double",
     )
     g = Graph.from_edges(e, directed=True, vertices=spark.range(4))
@@ -178,7 +179,7 @@ def test_bidirectional_dijkstra_disconnected(spark):  # noqa: F811
     from networkit_spark.operators.apsp import bidirectional_dijkstra
 
     rows = [(0, 1, 2.5), (2, 3, 1.5)]
-    edges = spark.createDataFrame(rows, "src long, dst long, weight double")
+    edges = local_frame(spark, rows, "src long, dst long, weight double")
     g = Graph.from_edges(edges, directed=False, weighted=True,
                          vertices=spark.range(4))
     assert bidirectional_dijkstra(g, 0, 3) is None
@@ -214,7 +215,7 @@ def test_dijkstra_within_excluded_and_radius(spark):  # noqa: F811
             if v not in want_all or d < want_all[v]:
                 want_all[v] = d
     for radius in (None, 4.0):
-        excl_df = spark.createDataFrame([(i,) for i in excl], "id long")
+        excl_df = local_frame(spark, [(i,) for i in excl], "id long")
         got = {
             r["id"]: r["dist"]
             for r in dijkstra_within(g, srcs, radius=radius,
@@ -228,11 +229,11 @@ def test_dijkstra_within_excluded_and_radius(spark):  # noqa: F811
 def test_dijkstra_within_excluded_source_dropped(spark):  # noqa: F811
     from networkit_spark.operators.apsp import dijkstra_within
 
-    e = spark.createDataFrame([(0, 1, 1.0), (1, 2, 1.0)],
+    e = local_frame(spark, [(0, 1, 1.0), (1, 2, 1.0)],
                               "src long, dst long, weight double")
     g = Graph.from_edges(e, directed=False, weighted=True,
                          vertices=spark.range(3))
-    excl = spark.createDataFrame([(0,)], "id long")
+    excl = local_frame(spark, [(0,)], "id long")
     got = {r["id"]: r["dist"]
            for r in dijkstra_within(g, [0, 2], excluded=excl).collect()}
     assert got == {2: 0.0, 1: 1.0}

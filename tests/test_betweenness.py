@@ -11,6 +11,7 @@ from networkit_spark.operators.betweenness import (
     betweenness_centrality,
     estimate_betweenness,
 )
+from networkit_spark.session import local_frame
 from tests.fixtures import erdos_renyi
 from tests.oracle.brandes import (
     brandes_oracle,
@@ -71,7 +72,7 @@ def test_estimate_matches_oracle_same_sources(spark):
     edges = erdos_renyi(30, 0.12, seed=4)
     g = Graph.from_pairs(spark, edges, directed=False, n=30)
     srcs = [0, 5, 11, 17, 23]
-    src_df = spark.createDataFrame([(s,) for s in srcs], "s long")
+    src_df = local_frame(spark, [(s,) for s in srcs], "s long")
     for normalized in (False, True):
         got = _scores(
             estimate_betweenness(

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from networkit_spark.graph import Graph
 from networkit_spark.operators.biconnected import biconnected_components
+from networkit_spark.session import local_frame
 
 
 # ------------------------------------------------------------ HT oracle
@@ -69,7 +70,7 @@ def spark_blocks(spark, nodes, edges):
                          directed=False)
     if nodes:
         g = g.add_nodes(
-            spark.createDataFrame([(int(x),) for x in nodes], "id long"))
+            local_frame(spark, [(int(x),) for x in nodes], "id long"))
     res = biconnected_components(g)
     rows = res.edge_blocks.collect()
     by_block = {}
@@ -131,7 +132,7 @@ def test_isolated_and_counts(spark):
     edges = [(0, 1), (1, 2), (0, 2), (2, 3)]
     g = Graph.from_pairs(spark, [(u, v, 1.0) for u, v in edges],
                          directed=False)
-    g = g.add_nodes(g.edges.sparkSession.createDataFrame([(99,)], "id long"))
+    g = g.add_nodes(local_frame(g.edges.sparkSession, [(99,)], "id long"))
     res = biconnected_components(g)
     counts = {
         r["id"]: r["n_blocks"]

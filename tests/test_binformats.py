@@ -10,6 +10,7 @@ from networkit_spark.sources.binformats import (
     read_rb,
     write_graphtool,
 )
+from networkit_spark.session import local_frame
 
 
 def _edge_set(g, directed):
@@ -151,8 +152,8 @@ def test_binary_partition_roundtrip(spark, tmp_path, width):
         write_binary_partition,
     )
 
-    part = spark.createDataFrame(
-        [(0, 5), (1, 5), (2, 9), (3, 0)], "id long, label long"
+    part = local_frame(
+        spark, [(0, 5), (1, 5), (2, 9), (3, 0)], "id long, label long"
     )
     path = str(tmp_path / f"p{width}.bin")
     write_binary_partition(part, path, width=width)
@@ -178,8 +179,8 @@ def test_binary_edgelist_partition_roundtrip(spark, tmp_path):
         write_binary_edgelist_partition,
     )
 
-    part = spark.createDataFrame(
-        [(0, 2), (1, 2), (2, 7)], "id long, label long"
+    part = local_frame(
+        spark, [(0, 2), (1, 2), (2, 7)], "id long, label long"
     )
     path = str(tmp_path / "elp.bin")
     write_binary_edgelist_partition(part, path, first_node=10, width=4)

@@ -15,6 +15,7 @@ from networkit_spark.operators.matching import (
     b_suitor_matching,
     suitor_matching,
 )
+from networkit_spark.session import local_frame
 
 
 def _greedy_b(edges, b):
@@ -115,7 +116,7 @@ def _spark_bsuitor(spark, n, edges, b):
         weighted=True,
     )
     if isinstance(b, dict):
-        bdf = spark.createDataFrame(list(b.items()), "id long, b long")
+        bdf = local_frame(spark, list(b.items()), "id long, b long")
         m = b_suitor_matching(g, bdf)
     else:
         m = b_suitor_matching(g, b)
@@ -185,7 +186,7 @@ def test_bsuitor_missing_b_raises(spark):
         n=3,
         weighted=True,
     )
-    bdf = g.edges.sparkSession.createDataFrame([(0, 1), (1, 1)], "id long, b long")
+    bdf = local_frame(g.edges.sparkSession, [(0, 1), (1, 1)], "id long, b long")
     with pytest.raises(ValueError, match="number of b values"):
         b_suitor_matching(g, bdf)
 
@@ -222,7 +223,7 @@ def test_dynamic_bsuitor_batches_match_greedy_recompute(spark):
         batches.append(batch)
 
     for batch in batches:
-        ev = spark.createDataFrame(batch, "type string, u long, v long, w double")
+        ev = local_frame(spark, batch, "type string, u long, v long, w double")
         g, m = dynamic_b_suitor_matching(g, ev, b=b)
         got = {(r["u"], r["v"]) for r in m.collect()}
         # greedy recompute on the CURRENT edge snapshot of this prefix
@@ -239,8 +240,8 @@ def test_dynamic_bsuitor_rejects_other_events(spark):
     from networkit_spark.operators.matching import dynamic_b_suitor_matching
 
     g = Graph.from_pairs(spark, [(0, 1, 1.0)], directed=False, n=2, weighted=True)
-    ev = g.edges.sparkSession.createDataFrame(
-        [("NODE_ADDITION", 2, 2, 0.0)], "type string, u long, v long, w double"
+    ev = local_frame(
+        g.edges.sparkSession, [("NODE_ADDITION", 2, 2, 0.0)], "type string, u long, v long, w double"
     )
     with pytest.raises(ValueError, match="Edge insertions and removals only"):
         dynamic_b_suitor_matching(g, ev)

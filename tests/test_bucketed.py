@@ -17,6 +17,7 @@ from networkit_spark.sources.bucketed import (
     read_bucketed_graph,
     write_edges_bucketed,
 )
+from networkit_spark.session import local_frame
 from tests.fixtures import erdos_renyi
 
 
@@ -24,8 +25,8 @@ from tests.fixtures import erdos_renyi
 def bucketed_graph(spark, tmp_path):
     # u<v pairs used as directed arcs: plenty of sinks + multi-out nodes
     edges = erdos_renyi(200, 0.05, seed=21)
-    df = spark.createDataFrame(
-        [(u, v, 1.0) for u, v in edges], "src long, dst long, weight double"
+    df = local_frame(
+        spark, [(u, v, 1.0) for u, v in edges], "src long, dst long, weight double"
     )
     name = "bucketed_edges_test"
     write_edges_bucketed(df, name, n_buckets=4, path=str(tmp_path / "tbl"))

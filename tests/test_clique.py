@@ -7,6 +7,7 @@ import random
 
 from networkit_spark.graph import Graph
 from networkit_spark.operators.clique import maximal_cliques
+from networkit_spark.session import local_frame
 
 
 def _brute_force(n, edges):
@@ -28,10 +29,10 @@ def _brute_force(n, edges):
 
 
 def _engine(spark, n, edges):
-    df = spark.createDataFrame(
-        [(u, v, 1.0) for u, v in edges], "src long, dst long, weight double"
+    df = local_frame(
+        spark, [(u, v, 1.0) for u, v in edges], "src long, dst long, weight double"
     )
-    verts = spark.createDataFrame([(v,) for v in range(n)], "id long")
+    verts = local_frame(spark, [(v,) for v in range(n)], "id long")
     g = Graph.from_edges(df, directed=False, vertices=verts)
     rows = maximal_cliques(g).collect()
     return sorted(tuple(r["clique"]) for r in rows)

@@ -14,6 +14,7 @@ from networkit_spark.operators.commutetime import (
     ctd_approx_pairs,
     ctd_embedding,
 )
+from networkit_spark.session import local_frame
 
 from tests.conftest import spark  # noqa: F401
 
@@ -89,7 +90,7 @@ def test_ctd_approximation_error_bound(spark):  # noqa: F811
 
 
 def test_ctd_directed_raises(spark):  # noqa: F811
-    edges = spark.createDataFrame([(0, 1, 1.0)], "src long, dst long, weight double")
+    edges = local_frame(spark, [(0, 1, 1.0)], "src long, dst long, weight double")
     g = Graph.from_edges(edges, directed=True, vertices=spark.range(2))
     try:
         commute_time_distance(g, [(0, 1)])

@@ -7,7 +7,7 @@ import pytest
 from networkit_spark.graph import Graph
 from networkit_spark.operators.components import connected_components
 from networkit_spark.plans.iterative import Checkpointer
-from tests.fixtures import F1_COMPONENTS, F1_EDGES, F1_N, erdos_renyi
+from tests.fixtures import F1_COMPONENTS, F1_EDGES, F1_N, assert_same_history, erdos_renyi
 from tests.oracle.components import components_oracle
 
 
@@ -68,7 +68,8 @@ def test_checkpoint_resume(spark, tmp_path):
     edges = erdos_renyi(40, 0.06, seed=3)
     g = Graph.from_pairs(spark, edges, directed=False, n=40)
 
-    straight = {r["id"]: r["label"] for r in connected_components(g).labels.collect()}
+    full = connected_components(g)
+    straight = {r["id"]: r["label"] for r in full.labels.collect()}
 
     path = str(tmp_path / "cc_ckpt")
     ck1 = Checkpointer(spark, path, algorithm="cc")
@@ -83,6 +84,42 @@ def test_checkpoint_resume(spark, tmp_path):
     # snapshot metadata carries per-partition lineage + iteration metrics
     hist = ck2.history()
     assert hist and all("files" in m for m in hist)
+    assert all(m["metrics"]["rows"] == 40 and "changed" in m["metrics"] for m in hist)
+    assert hist[-1]["metrics"]["changed"] == 0
+    assert [m["metrics"] for m in hist] == resumed.history
+    assert_same_history(resumed.history, full.history)
+
+
+def _cc_snapshot(spark, path):
+    g = Graph.from_pairs(spark, erdos_renyi(30, 0.1, seed=11), directed=False, n=30)
+    connected_components(g, checkpointer=Checkpointer(spark, path, algorithm="cc"),
+                         max_iterations=2)
+    return g
+
+
+def test_resume_refuses_params_mismatch(spark, tmp_path):
+    """A snapshot written under other params is refused, not resumed."""
+    path = str(tmp_path / "cc_params")
+    g = _cc_snapshot(spark, path)
+    ck = Checkpointer(spark, path, algorithm="cc", params={"shortcut": False})
+    with pytest.raises(ValueError, match=r"iter=2: params"):
+        connected_components(g, checkpointer=ck, resume=True)
+    with pytest.raises(ValueError, match=r"iter=2: algorithm"):
+        Checkpointer(spark, path, algorithm="plp").latest()
+
+
+def test_resume_refuses_missing_part_file(spark, tmp_path):
+    """A snapshot missing a part file its meta lists is refused; the
+    older complete snapshot is not silently used instead."""
+    import os
+
+    path = str(tmp_path / "cc_partial")
+    _cc_snapshot(spark, path)
+    it_dir = os.path.join(path, "iter=2")
+    part = sorted(f for f in os.listdir(it_dir) if f.endswith(".parquet"))[0]
+    os.remove(os.path.join(it_dir, part))
+    with pytest.raises(ValueError, match=r"iter=2: files"):
+        Checkpointer(spark, path, algorithm="cc").latest()
 
 
 def test_checkpoint_resume_after_torn_write(spark, tmp_path):

@@ -5,10 +5,11 @@ import math
 import pytest
 
 from networkit_spark.operators.corpus import decontaminate, tf_idf
+from networkit_spark.session import local_frame
 
 
 def _docs(spark, rows):
-    return spark.createDataFrame(rows, "doc_id long, text string")
+    return local_frame(spark, rows, "doc_id long, text string")
 
 
 def test_decontaminate(spark):
@@ -67,7 +68,7 @@ def test_pack_sequences(spark):
         (3, " ".join(["t"] * 10)),  # 10 > cap -> bin 3 alone
         (4, "a b"),            # 2 -> bin 4 (bin 3 'used'=10 full)
     ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    docs = local_frame(spark, rows, "doc_id long, text string")
     got = {
         r["doc_id"]: (r["bin"], r["n_tokens"])
         for r in pack_sequences(docs, capacity=8, shards=1).collect()

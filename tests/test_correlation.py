@@ -12,6 +12,7 @@ from networkit_spark.operators.correlation import (
     degree_assortativity,
     nominal_assortativity,
 )
+from networkit_spark.session import local_frame
 from tests.fixtures import erdos_renyi
 
 
@@ -66,7 +67,7 @@ def test_attribute_assortativity_custom(spark):
     edges = [(0, 1), (1, 2), (2, 3), (3, 0)]
     attr = {0: 1.0, 1: 2.0, 2: 1.0, 3: 2.0}
     g = Graph.from_pairs(spark, edges, directed=False)
-    attr_df = spark.createDataFrame(list(attr.items()), "id long, value double")
+    attr_df = local_frame(spark, list(attr.items()), "id long, value double")
     got = attribute_assortativity(g, attr_df)
     assert got == pytest.approx(_pearson_oracle(edges, attr), abs=1e-9)
 
@@ -75,8 +76,8 @@ def test_nominal_perfectly_assortative(spark):
     """Two cliques, labels = clique: every edge intra → r = 1."""
     edges = [(0, 1), (1, 2), (0, 2), (3, 4), (4, 5), (3, 5)]
     g = Graph.from_pairs(spark, edges, directed=False)
-    labels = spark.createDataFrame(
-        [(i, i // 3) for i in range(6)], "id long, label long"
+    labels = local_frame(
+        spark, [(i, i // 3) for i in range(6)], "id long, label long"
     )
     assert nominal_assortativity(g, labels) == pytest.approx(1.0)
 
@@ -89,7 +90,7 @@ def test_nominal_hand_mixing_matrix(spark):
     abSum = 50/36 → r = (12/36 − 50/36)/(36/36 − 50/36) = 19/7."""
     edges = [(u, v) for u in range(4) for v in range(u + 1, 4)]
     g = Graph.from_pairs(spark, edges, directed=False)
-    labels = spark.createDataFrame(
-        [(0, 0), (1, 0), (2, 1), (3, 1)], "id long, label long"
+    labels = local_frame(
+        spark, [(0, 0), (1, 0), (2, 1), (3, 1)], "id long, label long"
     )
     assert nominal_assortativity(g, labels) == pytest.approx(19.0 / 7.0)

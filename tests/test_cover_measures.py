@@ -13,6 +13,7 @@ from networkit_spark.operators.cover_measures import (
     cover_hub_dominance,
     overlapping_nmi_distance,
 )
+from networkit_spark.session import local_frame
 
 
 # ----------------------------------------------------------- py oracles
@@ -124,7 +125,7 @@ def _rand_cover(rng, nodes, k, extra_p):
 
 
 def _df(spark, rows):
-    return spark.createDataFrame([(int(u), int(c)) for u, c in rows],
+    return local_frame(spark, [(int(u), int(c)) for u, c in rows],
                                  "id long, c long")
 
 

@@ -10,6 +10,7 @@ from networkit_spark.sources.covers import (
     read_edge_list_partition,
     write_cover,
 )
+from networkit_spark.session import local_frame
 
 from tests.conftest import spark  # noqa: F401
 
@@ -119,8 +120,8 @@ def test_dgs_round_trip(spark, tmp_path):  # noqa: F811
         (2, 5, "NODE_RESTORATION", 0, None, None),
         (2, 1 << 20, "TIME_STEP", None, None, None),
     ]
-    ev = spark.createDataFrame(
-        rows, "step long, seq long, type string, u long, v long, weight double"
+    ev = local_frame(
+        spark, rows, "step long, seq long, type string, u long, v long, weight double"
     )
     f = tmp_path / "rt.dgs"
     write_dgs(ev, str(f))

@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 from networkit_spark.graph import Graph
 from networkit_spark.operators.flow import cut_clustering
 from networkit_spark.operators.quality import is_proper_clustering
+from networkit_spark.session import local_frame
 
 from tests.conftest import spark  # noqa: F401
 
@@ -19,7 +20,7 @@ def _two_cliques(spark):
             for j in range(i + 1, 5):
                 edges.append((base + i, base + j, 1.0))
     edges.append((0, 5, 1.0))  # weak bridge
-    e = spark.createDataFrame(edges, "src long, dst long, weight double")
+    e = local_frame(spark, edges, "src long, dst long, weight double")
     return Graph.from_edges(e, directed=False, vertices=spark.range(10))
 
 
@@ -90,8 +91,8 @@ def test_hierarchy_ranges_and_nesting(spark):  # noqa: F811
 def test_hierarchy_disconnected_has_whole_graph_entry(spark):  # noqa: F811
     from networkit_spark.operators.flow import cut_clustering_hierarchy
 
-    e = spark.createDataFrame(
-        [(0, 1, 1.0), (2, 3, 1.0)], "src long, dst long, weight double"
+    e = local_frame(
+        spark, [(0, 1, 1.0), (2, 3, 1.0)], "src long, dst long, weight double"
     )
     g = Graph.from_edges(e, directed=False, vertices=spark.range(4))
     h = cut_clustering_hierarchy(g)

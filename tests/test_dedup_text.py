@@ -18,6 +18,7 @@ from networkit_spark.operators.dedup import (
     ngram_jaccard,
     simhash,
 )
+from networkit_spark.session import local_frame
 
 DOCS = [
     (0, "the quick brown fox jumps over the lazy dog near the river bank today"),
@@ -31,7 +32,7 @@ DOCS = [
 
 @pytest.fixture(scope="module")
 def docs(spark):
-    df = spark.createDataFrame(DOCS, "doc_id long, text string").persist()
+    df = local_frame(spark, DOCS, "doc_id long, text string").persist()
     df.count()
     yield df
     df.unpersist()
@@ -65,7 +66,7 @@ def test_lsh_finds_exact_and_near_dups(docs):
 
 def test_jaccard_values(docs):
     spark = docs.sparkSession
-    pairs = spark.createDataFrame([(0, 1), (0, 3)], "doc_a long, doc_b long")
+    pairs = local_frame(spark, [(0, 1), (0, 3)], "doc_a long, doc_b long")
     j = {(r["doc_a"], r["doc_b"]): r["jaccard"] for r in ngram_jaccard(docs, pairs).collect()}
     assert j[(0, 1)] == 1.0
     assert j[(0, 3)] == 0.0
@@ -195,7 +196,7 @@ def test_dedup_clusters_transitive(spark):
         (12, base + " today now"),      # near dup of 10/11
         (13, "a completely different document about spark sql joins here"),
     ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    docs = local_frame(spark, rows, "doc_id long, text string")
     out = {r["doc_id"]: (r["cluster"], r["keep"])
            for r in dedup_clusters(docs, threshold=0.5).collect()}
     assert len(out) == 4                      # every doc labeled

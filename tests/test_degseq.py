@@ -14,13 +14,14 @@ from networkit_spark.operators.degseq import (
     havel_hakimi,
     is_realizable,
 )
+from networkit_spark.session import local_frame
 
 from tests.conftest import spark  # noqa: F401
 
 
 def _deg_df(spark, seq):
-    return spark.createDataFrame(
-        [(i, d) for i, d in enumerate(seq)], "id long, deg long"
+    return local_frame(
+        spark, [(i, d) for i, d in enumerate(seq)], "id long, deg long"
     )
 
 

@@ -22,6 +22,7 @@ from networkit_spark.operators.distances import (
     multi_source_bfs,
     neighborhood_function,
 )
+from networkit_spark.session import local_frame
 from tests.fixtures import F1_EDGES, F1_N, erdos_renyi
 from tests.oracle.dist import (
     closeness_oracle,
@@ -38,7 +39,7 @@ def _scores(df):
 
 def test_multi_source_bfs_directed(spark):
     g = Graph.from_pairs(spark, [(0, 1), (1, 2)], directed=True)
-    src = spark.createDataFrame([(0,), (2,)], "s long")
+    src = local_frame(spark, [(0,), (2,)], "s long")
     got = {
         (r["s"], r["id"]): r["dist"] for r in multi_source_bfs(g, src).collect()
     }
@@ -88,7 +89,7 @@ def test_closeness_sampled_sources(spark):
     """The sources argument (sampling at scale) restricts rows, not values."""
     edges = erdos_renyi(25, 0.15, seed=9)
     g = Graph.from_pairs(spark, edges, directed=False, n=25)
-    src = spark.createDataFrame([(0,), (7,)], "s long")
+    src = local_frame(spark, [(0,), (7,)], "s long")
     got = _scores(harmonic_closeness(g, sources=src))
     want = harmonic_oracle(25, edges)
     assert set(got) == {0, 7}

@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from networkit_spark.graph import Graph
 from networkit_spark.operators.dynapsp import apsp_state, update_apsp
+from networkit_spark.session import local_frame
 
 
 def _as_map(df, tol=None):
@@ -30,8 +31,8 @@ def _assert_same(repaired, fresh, weighted=False):
 
 def _batch(spark, pairs, weighted=False):
     if weighted:
-        return spark.createDataFrame(pairs, "src long, dst long, weight double")
-    return spark.createDataFrame(pairs, "src long, dst long")
+        return local_frame(spark, pairs, "src long, dst long, weight double")
+    return local_frame(spark, pairs, "src long, dst long")
 
 
 def test_unweighted_undirected_chained_batches(spark):
@@ -100,7 +101,7 @@ def test_restricted_sources_guard_and_repair(spark):
     # the inserted edges' endpoints are sources, loud otherwise
     pairs = [(i, i + 1) for i in range(9)]
     g = Graph.from_pairs(spark, pairs, directed=False, n=10)
-    srcs = spark.createDataFrame([(0,), (4,), (8,)], "s long")
+    srcs = local_frame(spark, [(0,), (4,), (8,)], "s long")
     state = apsp_state(g, sources=srcs)
     g1, s1 = update_apsp(g, state, _batch(spark, [(0, 8)]))
     _assert_same(s1, apsp_state(g1, sources=srcs))

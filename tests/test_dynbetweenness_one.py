@@ -14,6 +14,7 @@ from networkit_spark.operators.dynbetweenness_one import (
     one_node_state,
     update_one_node,
 )
+from networkit_spark.session import local_frame
 
 
 def _py_state(arcs, n, x, directed, weighted=False):
@@ -111,7 +112,7 @@ def test_update_equals_fresh_undirected(spark):
     st = one_node_state(g, x)
     batch = [(0, n - 1), (1, 8)]
     g1, st1 = update_one_node(
-        g, st, x, spark.createDataFrame(batch, "src long, dst long")
+        g, st, x, local_frame(spark, batch, "src long, dst long")
     )
     py = _py_state(arcs + batch, n, x, directed=False)
     _assert_state(_spark_state(st1), py)
@@ -119,7 +120,7 @@ def test_update_equals_fresh_undirected(spark):
     # chain a second batch on the repaired state
     batch2 = [(4, 10)]
     g2, st2 = update_one_node(
-        g1, st1, x, spark.createDataFrame(batch2, "src long, dst long")
+        g1, st1, x, local_frame(spark, batch2, "src long, dst long")
     )
     py2 = _py_state(arcs + batch + batch2, n, x, directed=False)
     _assert_state(_spark_state(st2), py2)
@@ -140,7 +141,7 @@ def test_update_directed_and_weight_decrease(spark):
     u0, v0, w0 = arcs[0]
     batch = [(0, n - 1, 0.5), (u0, v0, w0 / 2)]
     g1, st1 = update_one_node(
-        g, st, x, spark.createDataFrame(batch, "src long, dst long, weight double")
+        g, st, x, local_frame(spark, batch, "src long, dst long, weight double")
     )
     new_arcs = [(u, v, w) for u, v, w in arcs if (u, v) != (u0, v0)]
     new_arcs += [(0, n - 1, 0.5), (u0, v0, w0 / 2)]
@@ -155,6 +156,6 @@ def test_noop_insertion(spark):
     st = one_node_state(g, 1)
     # re-adding an existing edge must not double sigma
     g1, st1 = update_one_node(
-        g, st, 1, spark.createDataFrame([(0, 1)], "src long, dst long")
+        g, st, 1, local_frame(spark, [(0, 1)], "src long, dst long")
     )
     _assert_state(_spark_state(st1), _py_state(arcs, 3, 1, directed=False))

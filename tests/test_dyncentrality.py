@@ -16,12 +16,13 @@ from networkit_spark.operators.dyncentrality import (
     dyn_katz_centrality,
     dyn_top_harmonic_closeness,
 )
+from networkit_spark.session import local_frame
 
 from tests.conftest import spark  # noqa: F811, F401
 
 
 def _ev(spark, rows):
-    return spark.createDataFrame(rows, "type string, u long, v long, w double")
+    return local_frame(spark, rows, "type string, u long, v long, w double")
 
 
 def test_apply_events_upsert_nodes_and_guard(spark):  # noqa: F811

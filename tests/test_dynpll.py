@@ -16,6 +16,7 @@ from networkit_spark.operators.dynpll import (
     pll_index_query,
     update_pll,
 )
+from networkit_spark.session import local_frame
 
 
 def _bfs_all(arcs, n, directed):
@@ -42,8 +43,8 @@ def _bfs_all(arcs, n, directed):
 
 
 def _all_pairs(spark, n):
-    return spark.createDataFrame(
-        [(s, t) for s in range(n) for t in range(n)], "s long, t long"
+    return local_frame(
+        spark, [(s, t) for s in range(n) for t in range(n)], "s long, t long"
     )
 
 
@@ -66,11 +67,11 @@ def test_dynpll_undirected_chained(spark):
     idx = pll_index(g, batch_size=6)
 
     batch1 = [(0, n - 1), (3, 17)]
-    g1, idx1 = update_pll(g, idx, spark.createDataFrame(batch1, "src long, dst long"))
+    g1, idx1 = update_pll(g, idx, local_frame(spark, batch1, "src long, dst long"))
     _check(spark, idx1, arcs + batch1, n, directed=False)
 
     batch2 = [(1, 20), (5, 23)]
-    g2, idx2 = update_pll(g1, idx1, spark.createDataFrame(batch2, "src long, dst long"))
+    g2, idx2 = update_pll(g1, idx1, local_frame(spark, batch2, "src long, dst long"))
     _check(spark, idx2, arcs + batch1 + batch2, n, directed=False)
 
 
@@ -83,7 +84,7 @@ def test_dynpll_directed(spark):
     g = Graph.from_pairs(spark, arcs, directed=True, n=n)
     idx = pll_index(g, batch_size=6)
     batch = [(0, n - 1), (n - 1, 0), (4, 11)]
-    g1, idx1 = update_pll(g, idx, spark.createDataFrame(batch, "src long, dst long"))
+    g1, idx1 = update_pll(g, idx, local_frame(spark, batch, "src long, dst long"))
     _check(spark, idx1, arcs + batch, n, directed=True)
 
 
@@ -97,7 +98,7 @@ def test_dynpll_connects_components(spark):
     }
     assert (0, 5) not in got0
     g1, idx1 = update_pll(
-        g, idx, spark.createDataFrame([(2, 3)], "src long, dst long")
+        g, idx, local_frame(spark, [(2, 3)], "src long, dst long")
     )
     _check(spark, idx1, arcs + [(2, 3)], 6, directed=False)
 
@@ -110,13 +111,13 @@ def test_dynpll_weighted_raises(spark):
         update_pll(
             g,
             _fake_index(g),
-            g.edges.sparkSession.createDataFrame([(0, 1)], "src long, dst long"),
+            local_frame(g.edges.sparkSession, [(0, 1)], "src long, dst long"),
         )
 
 
 def _fake_index(g):
     from networkit_spark.operators.dynpll import PLLIndex
 
-    empty = g.edges.sparkSession.createDataFrame([], "id long, hub long, dist long")
-    ranks = g.edges.sparkSession.createDataFrame([], "id long, rank long")
+    empty = local_frame(g.edges.sparkSession, [], "id long, hub long, dist long")
+    ranks = local_frame(g.edges.sparkSession, [], "id long, rank long")
     return PLLIndex(ranks=ranks, labels_out=empty, labels_in=empty)

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 from networkit_spark.generators import erdos_renyi
 from networkit_spark.graph import Graph
 from networkit_spark.operators.dynsssp import sssp_state, update_sssp
+from networkit_spark.session import local_frame
 
 from tests.conftest import spark  # noqa: F401
 
@@ -79,11 +80,11 @@ def _check_fresh(spark, g, source, weighted):
 
 def _edit_and_check(spark, g, st, source, added, removed, weighted):
     add_df = (
-        spark.createDataFrame(added, "src long, dst long, weight double")
+        local_frame(spark, added, "src long, dst long, weight double")
         if added else None
     )
     rm_df = (
-        spark.createDataFrame(removed, "src long, dst long")
+        local_frame(spark, removed, "src long, dst long")
         if removed else None
     )
     g2, st2 = update_sssp(g, st, source, added=add_df, removed=rm_df)
@@ -130,7 +131,7 @@ def test_dynbfs_directed_reachability_change(spark):  # noqa: F811
     # a path 0→1→2→3 plus a shortcut; deleting the bridge disconnects,
     # re-adding elsewhere reconnects
     rows = [(0, 1, 1.0), (1, 2, 1.0), (2, 3, 1.0), (0, 4, 1.0), (4, 2, 1.0)]
-    edges = spark.createDataFrame(rows, "src long, dst long, weight double")
+    edges = local_frame(spark, rows, "src long, dst long, weight double")
     g = Graph.from_edges(edges, directed=True, vertices=spark.range(5))
     st = _check_fresh(spark, g, 0, weighted=False)
     g2, st2 = _edit_and_check(spark, g, st, 0, None, [(1, 2), (4, 2)],
@@ -152,10 +153,10 @@ def test_mixed_batch_added_edge_improves_deletion_cone(spark):
              (4, 7, 2.5)]
     g = Graph.from_pairs(spark, edges, directed=False, n=8, weighted=True)
     st = sssp_state(g, 0)
-    added = spark.createDataFrame(
-        [(1, 7, 2.0), (2, 6, 4.0)], "src long, dst long, weight double"
+    added = local_frame(
+        spark, [(1, 7, 2.0), (2, 6, 4.0)], "src long, dst long, weight double"
     )
-    removed = spark.createDataFrame([(0, 6), (1, 3)], "src long, dst long")
+    removed = local_frame(spark, [(0, 6), (1, 3)], "src long, dst long")
     _, st1 = update_sssp(g, st, 0, added=added, removed=removed)
     got = {r["id"]: round(float(r["dist"]), 9) for r in st1.collect()}
     assert got == {0: 0.0, 1: 1.5, 2: 5.5, 5: 3.5, 7: 3.5, 3: 7.5,

@@ -16,6 +16,7 @@ from networkit_spark.operators.edgescores import (
     prefix_jaccard_score,
     quadrangle_edge_score,
 )
+from networkit_spark.session import local_frame
 
 from tests.conftest import spark  # noqa: F401
 
@@ -109,8 +110,8 @@ def test_prefix_jaccard_parity(spark):  # noqa: F811
     )
     # attribute with deliberate ties: (u + v) % 4
     attr = {(u, v): (u + v) % 4 for (u, v) in und}
-    attr_df = spark.createDataFrame(
-        [(u, v, float(a)) for (u, v), a in attr.items()],
+    attr_df = local_frame(
+        spark, [(u, v, float(a)) for (u, v), a in attr.items()],
         "u long, v long, attr double",
     )
     want = _prefix_jaccard_py(adj, und, attr)
@@ -123,8 +124,8 @@ def test_prefix_jaccard_parity(spark):  # noqa: F811
 def test_geometric_mean_and_transforms(spark):  # noqa: F811
     pairs = [(0, 1), (1, 2), (0, 2), (2, 3)]
     g = Graph.from_pairs(spark, pairs, directed=False, n=4)
-    attr = spark.createDataFrame(
-        [(0, 1, 2.0), (1, 2, 1.0), (0, 2, 3.0), (2, 3, 0.0)],
+    attr = local_frame(
+        spark, [(0, 1, 2.0), (1, 2, 1.0), (0, 2, 3.0), (2, 3, 0.0)],
         "u long, v long, attr double",
     )
     gm = {(r["u"], r["v"]): r["score"]
@@ -148,8 +149,8 @@ def test_geometric_mean_and_transforms(spark):  # noqa: F811
     assert lin[(2, 3)] == 0.0 and lin[(0, 2)] == 1.0
     assert abs(lin[(1, 2)] - 1 / 3) < 1e-12
 
-    sel = spark.createDataFrame(
-        [(0, 1, True), (1, 2, False), (0, 2, True), (2, 3, False)],
+    sel = local_frame(
+        spark, [(0, 1, True), (1, 2, False), (0, 2, True), (2, 3, False)],
         "u long, v long, sel boolean",
     )
     other = scores.select("u", "v", (F.col("score") * 10).alias("score"))

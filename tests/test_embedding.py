@@ -23,6 +23,7 @@ from networkit_spark.operators.embedding import (
     node2vec,
     skipgram_pairs,
 )
+from networkit_spark.session import local_frame
 
 from tests.conftest import spark  # noqa: F401
 
@@ -108,7 +109,7 @@ def test_walks_deterministic_and_seed_sensitive(spark):  # noqa: F811
 def test_walks_shorten_at_dead_end(spark):  # noqa: F811
     # directed path 0→1→2: every walk from 0 is exactly [0,1,2]
     g = Graph.from_edges(
-        spark.createDataFrame([(0, 1), (1, 2)], "src long, dst long"), directed=True
+        local_frame(spark, [(0, 1), (1, 2)], "src long, dst long"), directed=True
     )
     got = _collect_walks(
         biased_random_walks(g, walk_length=10, walks_per_node=1, seed=1)
@@ -188,8 +189,8 @@ def test_node2vec_features_finite_and_structured(spark):  # noqa: F811
 
 
 def test_skipgram_pairs_window(spark):  # noqa: F811
-    walks = spark.createDataFrame(
-        [(0, 0, 10), (0, 1, 11), (0, 2, 12), (0, 3, 13)],
+    walks = local_frame(
+        spark, [(0, 0, 10), (0, 1, 11), (0, 2, 12), (0, 3, 13)],
         "walk long, pos int, node long",
     )
     got = {

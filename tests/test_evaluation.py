@@ -11,19 +11,20 @@ import pytest
 
 from networkit_spark.graph import Graph
 from networkit_spark.operators import evaluation as ev
+from networkit_spark.session import local_frame
 
 
 def _graph(spark, n, edges):
-    df = spark.createDataFrame(
-        [(u, v, 1.0) for u, v in edges], "src long, dst long, weight double"
+    df = local_frame(
+        spark, [(u, v, 1.0) for u, v in edges], "src long, dst long, weight double"
     )
-    verts = spark.createDataFrame([(i,) for i in range(n)], "id long")
+    verts = local_frame(spark, [(i,) for i in range(n)], "id long")
     return Graph.from_edges(df, directed=False, vertices=verts)
 
 
 def _labels(spark, lab):
-    return spark.createDataFrame(
-        [(u, l) for u, l in lab.items()], "id long, label long"
+    return local_frame(
+        spark, [(u, l) for u, l in lab.items()], "id long, label long"
     )
 
 

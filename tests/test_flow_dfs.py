@@ -13,6 +13,7 @@ import pytest
 from networkit_spark.graph import Graph
 from networkit_spark.operators.flow import max_flow
 from networkit_spark.operators.traversal import dfs_edges_from, dfs_from
+from networkit_spark.session import local_frame
 
 from tests.conftest import spark  # noqa: F401
 
@@ -102,7 +103,7 @@ def test_edmonds_karp_random_parity(spark):  # noqa: F811
             if u != v and rnd.random() < 0.25:
                 pairs.append((u, v, float(rnd.randint(1, 5))))
     g = Graph.from_edges(
-        spark.createDataFrame(pairs, "src long, dst long, weight double"),
+        local_frame(spark, pairs, "src long, dst long, weight double"),
         directed=True, weighted=True, vertices=spark.range(n),
     )
     want = _py_max_flow(pairs, n, 0, n - 1, directed=True)
@@ -152,7 +153,7 @@ def test_dfs_random_parity(spark):  # noqa: F811
     pairs = list({(rnd.randrange(n), rnd.randrange(n)) for _ in range(80)})
     pairs = [(u, v) for u, v in pairs if u != v]
     g = Graph.from_edges(
-        spark.createDataFrame(pairs, "src long, dst long"),
+        local_frame(spark, pairs, "src long, dst long"),
         directed=True, vertices=spark.range(n),
     )
     got = {r["dfs_order"]: r["id"] for r in dfs_from(g, 0).collect()}

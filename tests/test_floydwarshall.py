@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from networkit_spark.graph import Graph
 from networkit_spark.operators.floydwarshall import floyd_warshall
+from networkit_spark.session import local_frame
 
 from tests.conftest import spark  # noqa: F401
 
@@ -71,8 +72,8 @@ def _random_arcs(n, density, seed, wmin, wmax):
 
 
 def _run_spark(spark, n, arcs, directed=True):
-    edges = spark.createDataFrame(
-        [(u, v, float(w)) for u, v, w in arcs], "src long, dst long, weight double"
+    edges = local_frame(
+        spark, [(u, v, float(w)) for u, v, w in arcs], "src long, dst long, weight double"
     )
     g = Graph.from_edges(edges, directed=directed, weighted=True,
                          vertices=spark.range(n))
@@ -126,7 +127,7 @@ def test_fw_negative_cycle_tagging(spark):  # noqa: F811
 
 
 def test_fw_undirected_and_unweighted_raise(spark):  # noqa: F811
-    edges = spark.createDataFrame([(0, 1, 2.0), (1, 2, 3.0)],
+    edges = local_frame(spark, [(0, 1, 2.0), (1, 2, 3.0)],
                                   "src long, dst long, weight double")
     g = Graph.from_edges(edges, directed=False, weighted=True,
                          vertices=spark.range(3))

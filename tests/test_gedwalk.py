@@ -13,6 +13,7 @@ from networkit_spark.operators.gedwalk import (
     ged_walk_level_table,
     ged_walk_score,
 )
+from networkit_spark.session import local_frame
 
 # directed test graph: two hubs (0, 6) with distinct walk neighborhoods
 DI_EDGES = [
@@ -70,7 +71,7 @@ def _enumerate_ged(nodes, arcs, group, alpha, levels):
 def _graph(spark, arcs, directed):
     rows = [(s, d, float(w)) for s, d, *rest in arcs
             for w in [rest[0] if rest else 1.0]]
-    df = spark.createDataFrame(rows, "src long, dst long, weight double")
+    df = local_frame(spark, rows, "src long, dst long, weight double")
     return Graph.from_edges(df, directed=directed, weighted=True)
 
 

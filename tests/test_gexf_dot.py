@@ -11,6 +11,7 @@ from networkit_spark.sources.gexf import (
     write_gexf,
 )
 from networkit_spark.sources.gml import read_graph
+from networkit_spark.session import local_frame
 
 STATIC = """<?xml version="1.0" encoding="UTF-8"?>
 <gexf xmlns="http://www.gexf.net/1.2draft" version="1.2">
@@ -62,8 +63,8 @@ def test_read_static_gexf(spark, tmp_path):
 
 
 def test_static_round_trip(spark, tmp_path):
-    e = spark.createDataFrame(
-        [(0, 1, 1.5), (1, 2, 1.0), (2, 0, 0.5)], "src long, dst long, weight double"
+    e = local_frame(
+        spark, [(0, 1, 1.5), (1, 2, 1.0), (2, 0, 0.5)], "src long, dst long, weight double"
     )
     g = Graph.from_edges(e, directed=False, weighted=True)
     p = str(tmp_path / "rt.gexf")
@@ -95,8 +96,8 @@ def test_dynamic_gexf_events(spark, tmp_path):
 
 
 def test_dot_writer_reference_format(spark, tmp_path):
-    e = spark.createDataFrame(
-        [(1, 0, 1.0), (1, 2, 1.0)], "src long, dst long, weight double"
+    e = local_frame(
+        spark, [(1, 0, 1.0), (1, 2, 1.0)], "src long, dst long, weight double"
     )
     g = Graph.from_edges(e, directed=False)
     p = str(tmp_path / "g.dot")
@@ -111,14 +112,14 @@ def test_dot_partition_writer(spark, tmp_path):  # noqa: F811
     edge lines."""
     from networkit_spark.sources.gexf import write_dot_partition
 
-    e = spark.createDataFrame(
-        [(0, 1, 1.0), (1, 2, 1.0), (3, 0, 1.0)],
+    e = local_frame(
+        spark, [(0, 1, 1.0), (1, 2, 1.0), (3, 0, 1.0)],
         "src long, dst long, weight double",
     )
     # node 4 is isolated
     g = Graph.from_edges(e, directed=False, vertices=spark.range(5))
-    labels = spark.createDataFrame(
-        [(0, 10), (1, 10), (2, 20), (3, 20), (4, 30)], "id long, label long"
+    labels = local_frame(
+        spark, [(0, 10), (1, 10), (2, 20), (3, 20), (4, 30)], "id long, label long"
     )
     f = tmp_path / "p.dot"
     write_dot_partition(g, labels, str(f))

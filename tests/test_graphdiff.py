@@ -13,12 +13,13 @@ from networkit_spark.operators.graphdiff import (
     difference_summary,
     graph_difference,
 )
+from networkit_spark.session import local_frame
 
 
 def _g(spark, pairs, nodes=None, weighted=False):
     g = Graph.from_pairs(spark, pairs, directed=False, weighted=weighted)
     if nodes:
-        g = g.add_nodes(spark.createDataFrame([(int(x),) for x in nodes],
+        g = g.add_nodes(local_frame(spark, [(int(x),) for x in nodes],
                                               "id long"))
     return g
 

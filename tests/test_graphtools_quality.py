@@ -25,6 +25,7 @@ from networkit_spark.operators.quality import (
     is_proper_clustering,
     modularity,
 )
+from networkit_spark.session import local_frame
 
 
 def test_transpose(spark):
@@ -44,7 +45,7 @@ def test_to_undirected(spark):
 
 def test_subgraph(spark):
     g = Graph.from_pairs(spark, [(0, 1), (1, 2), (2, 3)], directed=False, n=5)
-    nodes = spark.createDataFrame([(0,), (1,), (2,)], "id long")
+    nodes = local_frame(spark, [(0,), (1,), (2,)], "id long")
     s = subgraph_from_nodes(g, nodes)
     assert s.num_vertices() == 3
     assert s.num_edges() == 2  # (0,1),(1,2); (2,3) dropped
@@ -85,8 +86,8 @@ def test_modularity_two_cliques(spark):
     m=7, intra=6, vols=(7,7) → Q = 6/7 − 2·(7/14)² = 6/7 − 1/2."""
     edges = [(0, 1), (0, 2), (1, 2), (3, 4), (3, 5), (4, 5), (2, 3)]
     g = Graph.from_pairs(spark, edges, directed=False, n=6)
-    labels = spark.createDataFrame(
-        [(i, 0 if i < 3 else 1) for i in range(6)], "id long, label long"
+    labels = local_frame(
+        spark, [(i, 0 if i < 3 else 1) for i in range(6)], "id long, label long"
     )
     assert abs(modularity(g, labels) - (6 / 7 - 0.5)) < 1e-12
     assert abs(coverage(g, labels) - 6 / 7) < 1e-12
@@ -97,16 +98,16 @@ def test_modularity_self_loop(spark):
     (Modularity.cpp:56)."""
     edges = [(0, 1), (1, 1)]
     g = Graph.from_pairs(spark, edges, directed=False, n=2)
-    labels = spark.createDataFrame([(0, 0), (1, 0)], "id long, label long")
+    labels = local_frame(spark, [(0, 0), (1, 0)], "id long, label long")
     # one cluster: coverage 1; m=2; vol = 1 + (1+2) = 4 → Q = 1 − (4/4)² = 0
     assert abs(modularity(g, labels) - 0.0) < 1e-12
 
 
 def test_equal_clusterings_relabel_invariant(spark):
     g = Graph.from_pairs(spark, [(0, 1), (2, 3)], directed=False, n=4)
-    a = spark.createDataFrame([(0, 7), (1, 7), (2, 9), (3, 9)], "id long, label long")
-    b = spark.createDataFrame([(0, 1), (1, 1), (2, 2), (3, 2)], "id long, label long")
-    c = spark.createDataFrame([(0, 1), (1, 2), (2, 2), (3, 2)], "id long, label long")
+    a = local_frame(spark, [(0, 7), (1, 7), (2, 9), (3, 9)], "id long, label long")
+    b = local_frame(spark, [(0, 1), (1, 1), (2, 2), (3, 2)], "id long, label long")
+    c = local_frame(spark, [(0, 1), (1, 2), (2, 2), (3, 2)], "id long, label long")
     assert equal_clusterings(g, a, b)
     assert not equal_clusterings(g, a, c)
     assert is_proper_clustering(g, a)
@@ -192,8 +193,8 @@ def test_dynamic_nmi_distance_overlap_restriction(spark):  # noqa: F811
     # old partition covers nodes 0..7; new partition covers 0..11
     old = [(i, i // 4) for i in range(8)]           # {0-3}, {4-7}
     new = [(i, i // 3) for i in range(12)]          # {0-2},{3-5},{6-8},{9-11}
-    old_df = spark.createDataFrame(old, "id long, label long")
-    new_df = spark.createDataFrame(new, "id long, label long")
+    old_df = local_frame(spark, old, "id long, label long")
+    new_df = local_frame(spark, new, "id long, label long")
 
     # pure-python reference formula over the intersection 0..7
     inter = [(dict(old)[u], dict(new)[u]) for u in range(8)]
@@ -219,6 +220,6 @@ def test_dynamic_nmi_distance_overlap_restriction(spark):  # noqa: F811
 
     # identical partitions -> distance 0; one-clusterings -> H_sum=0 -> 0
     assert dynamic_nmi_distance(new_df, new_df) < 1e-12
-    one = spark.createDataFrame([(i, 0) for i in range(5)],
+    one = local_frame(spark, [(i, 0) for i in range(5)],
                                 "id long, label long")
     assert dynamic_nmi_distance(one, one) == 0.0

@@ -8,6 +8,7 @@ import random
 
 from networkit_spark.graph import Graph
 from networkit_spark.operators.group import group_degree, score_of_group
+from networkit_spark.session import local_frame
 
 
 def _local_greedy(n, arcs, k, count_group_nodes):
@@ -43,10 +44,10 @@ def _opt(n, arcs, k):
 
 
 def _graph(spark, n, arcs, directed):
-    df = spark.createDataFrame(
-        [(u, v, 1.0) for u, v in arcs], "src long, dst long, weight double"
+    df = local_frame(
+        spark, [(u, v, 1.0) for u, v in arcs], "src long, dst long, weight double"
     )
-    verts = spark.createDataFrame([(v,) for v in range(n)], "id long")
+    verts = local_frame(spark, [(v,) for v in range(n)], "id long")
     return Graph.from_edges(df, directed=directed, vertices=verts)
 
 

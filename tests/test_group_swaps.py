@@ -9,6 +9,7 @@ from networkit_spark.graph import Graph
 from networkit_spark.operators.groupcentrality import (
     group_closeness_local_swaps,
 )
+from networkit_spark.session import local_frame
 
 EDGES = [
     (0, 1), (1, 2), (2, 3), (3, 4), (4, 5), (5, 6), (6, 7), (3, 8),
@@ -71,8 +72,8 @@ def _py_swaps(group, max_swaps):
 
 @pytest.fixture(scope="module")
 def tree_graph(spark):
-    df = spark.createDataFrame(
-        [(a, b, 1.0) for a, b in EDGES], "src long, dst long, weight double"
+    df = local_frame(
+        spark, [(a, b, 1.0) for a, b in EDGES], "src long, dst long, weight double"
     )
     return Graph.from_edges(df, directed=False, weighted=False)
 
@@ -108,8 +109,8 @@ def test_max_swaps_cap(tree_graph):
 
 
 def test_validation(spark, tree_graph):
-    ddf = spark.createDataFrame(
-        [(0, 1, 1.0)], "src long, dst long, weight double"
+    ddf = local_frame(
+        spark, [(0, 1, 1.0)], "src long, dst long, weight double"
     )
     dg = Graph.from_edges(ddf, directed=True)
     with pytest.raises(ValueError):
@@ -121,8 +122,8 @@ def test_validation(spark, tree_graph):
 def test_disconnected_components(spark):
     """Swaps stay inside reachable structure; unreached vertices are
     excluded from farness exactly as in the reference's BFSfrom sum."""
-    df = spark.createDataFrame(
-        [(0, 1, 1.0), (1, 2, 1.0), (10, 11, 1.0)],
+    df = local_frame(
+        spark, [(0, 1, 1.0), (1, 2, 1.0), (10, 11, 1.0)],
         "src long, dst long, weight double",
     )
     g = Graph.from_edges(df, directed=False)

@@ -11,7 +11,8 @@ from networkit_spark.operators.quality import (
     is_proper_clustering,
     modularity,
 )
-from tests.fixtures import F5_EDGES, F5_N, erdos_renyi, planted_cliques
+from networkit_spark.session import local_frame
+from tests.fixtures import F5_EDGES, F5_N, assert_same_history, erdos_renyi, planted_cliques
 from tests.oracle.plp import plp_oracle
 
 
@@ -22,8 +23,8 @@ def test_planted_cliques_recovered(spark):
     g = Graph.from_pairs(spark, edges, directed=False, n=60)
     res = label_propagation(g)
     assert res.number_of_communities() == 3
-    planted_df = spark.createDataFrame(
-        [(v, l) for v, l in planted.items()], "id long, label long"
+    planted_df = local_frame(
+        spark, [(v, l) for v, l in planted.items()], "id long, label long"
     )
     assert equal_clusterings(g, res.labels, planted_df)
 
@@ -91,8 +92,8 @@ def test_base_clustering(spark):
     planted partition, PLP keeps it."""
     edges, planted = planted_cliques(30, 3)
     g = Graph.from_pairs(spark, edges, directed=False, n=30)
-    base = spark.createDataFrame(
-        [(v, l) for v, l in planted.items()], "id long, label long"
+    base = local_frame(
+        spark, [(v, l) for v, l in planted.items()], "id long, label long"
     )
     res = label_propagation(g, base_labels=base)
     labels = {r["id"]: r["label"] for r in res.labels.collect()}
@@ -105,8 +106,8 @@ def test_checkpoint_resume_plp(spark, tmp_path):
 
     edges, _ = planted_cliques(40, 4)
     g = Graph.from_pairs(spark, edges, directed=False, n=40)
-    straight = {r["id"]: r["label"]
-                for r in label_propagation(g).labels.collect()}
+    full = label_propagation(g)
+    straight = {r["id"]: r["label"] for r in full.labels.collect()}
     path = str(tmp_path / "plp_ckpt")
     ck1 = Checkpointer(spark, path, algorithm="plp")
     partial = label_propagation(g, checkpointer=ck1, max_iterations=1)
@@ -115,6 +116,24 @@ def test_checkpoint_resume_plp(spark, tmp_path):
     resumed = label_propagation(g, checkpointer=ck2, resume=True)
     got = {r["id"]: r["label"] for r in resumed.labels.collect()}
     assert got == straight
+    metas = ck2.history()
+    assert resumed.iterations > 1
+    assert all(m["metrics"]["rows"] == 40 and "updated" in m["metrics"] for m in metas)
+    assert [m["metrics"] for m in metas] == resumed.history
+    assert_same_history(resumed.history, full.history)
+
+
+def test_fixed_sweeps_report_updates(spark):
+    """update_threshold=-1 never stops on the count, yet every sweep's
+    record carries its real number of relabelled vertices."""
+    edges, _ = planted_cliques(20, 4)
+    g = Graph.from_pairs(spark, edges, directed=False, n=20)
+    res = label_propagation(g, update_threshold=-1, max_iterations=3,
+                            use_active_set=False)
+    assert res.iterations == 3
+    assert [r["iteration"] for r in res.history] == [1, 2, 3]
+    assert res.history[0]["updated"] > 0 and res.history[-1]["updated"] == 0
+    assert all(r["rows"] == 20 for r in res.history)
 
 
 @pytest.mark.parametrize("use_active_set", [True, False])

@@ -5,6 +5,7 @@ from networkit_spark.graph import Graph
 from networkit_spark.operators.labelprop import label_propagation
 from networkit_spark.operators.labelprop_async import label_propagation_async
 from networkit_spark.operators.quality import equal_clusterings, is_proper_clustering
+from networkit_spark.session import local_frame
 from tests.fixtures import erdos_renyi, planted_cliques
 
 
@@ -13,8 +14,8 @@ def test_planted_cliques(spark):
     g = Graph.from_pairs(spark, edges, directed=False, n=60)
     res = label_propagation_async(g)
     assert res.number_of_communities() == 3
-    planted_df = spark.createDataFrame(
-        [(v, l) for v, l in planted.items()], "id long, label long"
+    planted_df = local_frame(
+        spark, [(v, l) for v, l in planted.items()], "id long, label long"
     )
     assert equal_clusterings(g, res.labels, planted_df)
 

@@ -12,15 +12,16 @@ from networkit_spark.operators.centrality import (
     laplacian_centrality,
     permanence_centrality,
 )
+from networkit_spark.session import local_frame
 
 
 def _graph(spark, n, edges, weights=None):
     w = weights or [1.0] * len(edges)
-    df = spark.createDataFrame(
-        [(u, v, float(x)) for (u, v), x in zip(edges, w)],
+    df = local_frame(
+        spark, [(u, v, float(x)) for (u, v), x in zip(edges, w)],
         "src long, dst long, weight double",
     )
-    verts = spark.createDataFrame([(v,) for v in range(n)], "id long")
+    verts = local_frame(spark, [(v,) for v in range(n)], "id long")
     return Graph.from_edges(
         df, directed=False, weighted=weights is not None, vertices=verts
     )
@@ -95,8 +96,8 @@ def test_permanence_random(spark):
     ]
     label = {u: u % 3 for u in range(n)}
     g = _graph(spark, n, edges)
-    part = spark.createDataFrame(
-        [(u, label[u]) for u in range(n)], "id long, label long"
+    part = local_frame(
+        spark, [(u, label[u]) for u in range(n)], "id long, label long"
     )
     got = {r["id"]: r["permanence"] for r in permanence_centrality(g, part).collect()}
     exp = _perm_replica(n, edges, label)
@@ -119,15 +120,15 @@ def test_local_partition_coverage(spark):
     from networkit_spark.operators.centrality import local_partition_coverage
 
     # weighted: 0-1 (w=2, same part), 0-2 (w=1, other), isolated 3
-    df = spark.createDataFrame(
-        [(0, 1, 2.0), (0, 2, 1.0)], "src long, dst long, weight double"
+    df = local_frame(
+        spark, [(0, 1, 2.0), (0, 2, 1.0)], "src long, dst long, weight double"
     )
-    verts = spark.createDataFrame([(i,) for i in range(4)], "id long")
+    verts = local_frame(spark, [(i,) for i in range(4)], "id long")
     from networkit_spark.graph import Graph
 
     g = Graph.from_edges(df, directed=False, weighted=True, vertices=verts)
-    part = spark.createDataFrame(
-        [(0, 0), (1, 0), (2, 1), (3, 1)], "id long, label long"
+    part = local_frame(
+        spark, [(0, 0), (1, 0), (2, 1), (3, 1)], "id long, label long"
     )
     got = {r["id"]: r["score"] for r in local_partition_coverage(g, part).collect()}
     assert got == {0: pytest.approx(2.0 / 3.0), 1: 1.0, 2: 0.0, 3: 0.0}

@@ -14,6 +14,7 @@ from networkit_spark.operators.quality import (
     is_proper_clustering,
     modularity,
 )
+from networkit_spark.session import local_frame
 from tests.fixtures import erdos_renyi, planted_cliques
 
 KARATE = "/root/reference/input/karate.graph"
@@ -47,8 +48,8 @@ def _communities_connected(spark, g: Graph, labels) -> bool:
 def test_leiden_planted_cliques_both_paths(spark):
     edges, planted = planted_cliques(48, 4)
     g = Graph.from_pairs(spark, edges, directed=False, n=48)
-    planted_df = spark.createDataFrame(
-        [(v, l) for v, l in planted.items()], "id long, label long"
+    planted_df = local_frame(
+        spark, [(v, l) for v, l in planted.items()], "id long, label long"
     )
     for threshold in (0, 100_000):
         res = leiden(g, local_threshold=threshold)

@@ -10,6 +10,7 @@ import pytest
 
 from networkit_spark.graph import Graph
 from networkit_spark.operators.lfm import lfm_cover
+from networkit_spark.session import local_frame
 
 
 def _fitness(w, c, alpha):
@@ -49,7 +50,7 @@ def _run(spark, nodes, edges, alpha=1.0):
                          directed=False)
     if nodes:
         g = g.add_nodes(
-            spark.createDataFrame([(int(x),) for x in nodes], "id long"))
+            local_frame(spark, [(int(x),) for x in nodes], "id long"))
     rows = lfm_cover(g, alpha=alpha).collect()
     cover = {}
     for r in rows:

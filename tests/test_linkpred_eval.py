@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from networkit_spark.generators import erdos_renyi
 from networkit_spark.graph import Graph
+from networkit_spark.session import local_frame
 from tests.conftest import spark  # noqa: F401
 
 
@@ -114,7 +115,7 @@ def test_thresholders_match_python(spark):  # noqa: F811
         (0, 1, 3.0), (0, 2, 1.0), (1, 2, 3.0), (2, 3, 0.5),
         (1, 3, 2.0), (0, 3, 1.0), (2, 4, 4.0),
     ]
-    preds = spark.createDataFrame(rows, "u long, v long, score double")
+    preds = local_frame(spark, rows, "u long, v long, score double")
     ordered = sorted(rows, key=lambda r: (-r[2], r[0], r[1]))
     got = {tuple(r) for r in link_thresholder_by_score(preds, 2.0).collect()}
     assert got == {(u, v) for u, v, s in rows if s >= 2.0}
@@ -149,8 +150,8 @@ def test_perfect_predictor_auc_is_one(spark):  # noqa: F811
 
     _, _, _, preds, full, pred_rows, test_set = _scored_fixture(spark)
     # score 1 for true links, 0 otherwise
-    flag = spark.createDataFrame(
-        [(a, b) for a, b in test_set], "u long, v long"
+    flag = local_frame(
+        spark, [(a, b) for a, b in test_set], "u long, v long"
     ).withColumn("pos", F.lit(1.0))
     perfect = preds.join(flag, ["u", "v"], "left").select(
         "u", "v", F.coalesce("pos", F.lit(0.0)).alias("score")

@@ -11,6 +11,7 @@ from networkit_spark.operators.linkprediction import (
     link_prediction_scores,
     missing_links,
 )
+from networkit_spark.session import local_frame
 
 # karate-club-ish small fixture: two clusters + bridge + pendant chain
 EDGES = [
@@ -49,8 +50,8 @@ def _missing_at(k):
 
 @pytest.fixture(scope="module")
 def g(spark):
-    e = spark.createDataFrame(
-        [(a, b, 1.0) for a, b in EDGES], "src long, dst long, weight double"
+    e = local_frame(
+        spark, [(a, b, 1.0) for a, b in EDGES], "src long, dst long, weight double"
     )
     return Graph.from_edges(e, directed=False)
 
@@ -81,7 +82,7 @@ def test_index_values(g):
 
 def test_scores_on_pair_without_common_neighbors(g, spark):
     # (0, 8): far apart — every common-neighbor index must be 0, PA not
-    pairs = spark.createDataFrame([(0, 8)], "u long, v long")
+    pairs = local_frame(spark, [(0, 8)], "u long, v long")
     r = link_prediction_scores(g, pairs).collect()[0]
     assert r["common_neighbors"] == 0
     assert r["jaccard"] == 0.0

@@ -16,15 +16,16 @@ from networkit_spark.operators.mapequation import (
     louvain_map_equation,
     map_equation,
 )
+from networkit_spark.session import local_frame
 
 
 def _graph(spark, n, edges, weights=None):
     w = weights or [1.0] * len(edges)
-    df = spark.createDataFrame(
-        [(u, v, float(x)) for (u, v), x in zip(edges, w)],
+    df = local_frame(
+        spark, [(u, v, float(x)) for (u, v), x in zip(edges, w)],
         "src long, dst long, weight double",
     )
-    verts = spark.createDataFrame([(v,) for v in range(n)], "id long")
+    verts = local_frame(spark, [(v,) for v in range(n)], "id long")
     return Graph.from_edges(
         df, directed=False, weighted=weights is not None, vertices=verts
     )

@@ -11,17 +11,18 @@ from networkit_spark.operators.traversal import (
     shortest_paths,
     topological_sort,
 )
+from networkit_spark.session import local_frame
 
 
 def test_add_remove_edges(spark):
     g = Graph.from_pairs(spark, [(0, 1)], directed=True, n=3)
-    g2 = g.add_edges(spark.createDataFrame([(1, 2)], "src long, dst long"))
+    g2 = g.add_edges(local_frame(spark, [(1, 2)], "src long, dst long"))
     assert g2.num_edges() == 2
     # multi-edge kept by default (Graph.cpp:478-480), deduped on request
-    g3 = g2.add_edges(spark.createDataFrame([(0, 1)], "src long, dst long"))
+    g3 = g2.add_edges(local_frame(spark, [(0, 1)], "src long, dst long"))
     assert g3.num_edges() == 3
     assert g3.remove_multi_edges().num_edges() == 2
-    g4 = g2.remove_edges(spark.createDataFrame([(0, 1)], "src long, dst long"))
+    g4 = g2.remove_edges(local_frame(spark, [(0, 1)], "src long, dst long"))
     assert g4.num_edges() == 1
 
 
@@ -45,7 +46,7 @@ def test_undirected_weight_update_mirrors(spark):
 
 def test_node_ops(spark):
     g = Graph.from_pairs(spark, [(0, 1), (1, 2)], directed=False, n=3)
-    g2 = g.add_nodes(spark.createDataFrame([(7,)], "id long"))
+    g2 = g.add_nodes(local_frame(spark, [(7,)], "id long"))
     assert g2.num_vertices() == 4 and g2.has_node(7)
     g3 = g2.remove_node(1)
     assert g3.num_vertices() == 3 and g3.num_edges() == 0  # incident edges gone

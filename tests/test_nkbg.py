@@ -27,6 +27,7 @@ from networkit_spark.sources.nkbg import (
     zigzag_decode,
     zigzag_encode,
 )
+from networkit_spark.session import local_frame
 
 V3 = "/root/reference/input/foodweb-baydry.nkbg003"
 V2 = "/root/reference/input/foodweb-baydry.nkbg002"
@@ -247,9 +248,9 @@ def test_deleted_nodes_flag_bit(spark, tmp_path):
     # the reader removes it (Reader.cpp:103-110).
     import pyspark.sql.functions as F
 
-    e = spark.createDataFrame([(0, 1, 1.0), (1, 3, 1.0)],
+    e = local_frame(spark, [(0, 1, 1.0), (1, 3, 1.0)],
                               "src long, dst long, weight double")
-    v = spark.createDataFrame([(0,), (1,), (3,)], "id long")
+    v = local_frame(spark, [(0,), (1,), (3,)], "id long")
     g = Graph.from_edges(e, directed=True, vertices=v)
     path = str(tmp_path / "del.nkbg")
     write_networkit_binary(g, path)
@@ -262,8 +263,8 @@ def test_deleted_nodes_flag_bit(spark, tmp_path):
 def test_edge_ids_roundtrip(spark, tmp_path, directed):
     pairs = [(0, 1), (1, 2), (2, 3), (1, 3)]
     g = Graph.from_pairs(spark, pairs, directed=directed, n=4)
-    ids = spark.createDataFrame(
-        [(u, v, 10 + i) for i, (u, v) in enumerate(pairs)],
+    ids = local_frame(
+        spark, [(u, v, 10 + i) for i, (u, v) in enumerate(pairs)],
         "src long, dst long, eid long",
     )
     path = str(tmp_path / "ids.nkbg")

@@ -9,6 +9,7 @@ from networkit_spark.graph import Graph
 from networkit_spark.operators.overlap import hashing_overlapper
 from networkit_spark.operators.reachability import reachable_nodes
 from networkit_spark.operators.simulation import epidemic_seir
+from networkit_spark.session import local_frame
 
 from tests.fixtures import F1_EDGES, F1_N, erdos_renyi
 
@@ -97,7 +98,7 @@ def test_overlap_two_clusterings(spark):
     c1 = {v: v % 4 for v in range(n)}
     c2 = {v: v % 3 for v in range(n)}
     dfs = [
-        spark.createDataFrame(list(c.items()), "id long, label long")
+        local_frame(spark, list(c.items()), "id long, label long")
         for c in (c1, c2)
     ]
     got = {r.id: r.label for r in hashing_overlapper(g, dfs).collect()}
@@ -110,7 +111,7 @@ def test_overlap_three_clusterings(spark):
     g = Graph.from_pairs(spark, erdos_renyi(n, 0.1, seed=4), directed=False, n=n)
     cs = [{v: v % k for v in range(n)} for k in (2, 3, 5)]
     dfs = [
-        spark.createDataFrame(list(c.items()), "id long, label long") for c in cs
+        local_frame(spark, list(c.items()), "id long, label long") for c in cs
     ]
     got = {r.id: r.label for r in hashing_overlapper(g, dfs).collect()}
     assert got == _overlap_py(n, cs)
@@ -120,7 +121,7 @@ def test_overlap_single_and_empty(spark):
     n = 10
     g = Graph.from_pairs(spark, [(0, 1)], directed=False, n=n)
     c1 = {v: (v * 7) % 3 + 100 for v in range(n)}
-    df = spark.createDataFrame(list(c1.items()), "id long, label long")
+    df = local_frame(spark, list(c1.items()), "id long, label long")
     got = {r.id: r.label for r in hashing_overlapper(g, [df]).collect()}
     assert got == _compact_py(c1)
     one = {r.label for r in hashing_overlapper(g, []).collect()}

@@ -12,12 +12,15 @@ from networkit_spark.operators.pagerank import (
     DISTRIBUTE_SINKS,
     NO_SINK_HANDLING,
     pagerank,
+    pagerank_fixed,
 )
 from tests.fixtures import (
     F3_EDGES_DIRECTED,
     F3_N,
     F3_NORMALIZED_DIRECTED,
     F3_NORMALIZED_UNDIRECTED,
+    assert_same_history,
+    erdos_renyi,
 )
 from tests.oracle.pagerank import pagerank_oracle
 
@@ -141,9 +144,14 @@ def test_checkpoint_resume(spark, tmp_path):
     got = _scores_list(resumed, F3_N)
     want = _scores_list(full, F3_N)
     assert np.allclose(got, want, atol=1e-12)
-    # snapshot metadata carries per-iteration lineage
+    # snapshot metadata carries per-iteration lineage and the superstep's
+    # measures; the resumed run reports the uninterrupted run's history
     metas = ck2.history()
-    assert metas and all("files" in m and m["files"] for m in metas)
+    assert [m["iteration"] for m in metas] == list(range(1, full.iterations + 1))
+    assert all("files" in m and m["files"] for m in metas)
+    assert all(m["metrics"]["rows"] == F3_N and m["metrics"]["diff"] > 0 for m in metas)
+    assert [m["metrics"] for m in metas] == resumed.history
+    assert_same_history(resumed.history, full.history)
 
 
 def test_checkpoint_resume_pagerank(spark, tmp_path):
@@ -168,3 +176,22 @@ def test_checkpoint_resume_pagerank(spark, tmp_path):
     b = _scores_list(resumed, F3_N)
     assert np.allclose(a, b, atol=1e-12)
     assert resumed.iterations == straight.iterations
+    assert_same_history(resumed.history, straight.history)
+
+
+def test_fixed_mode_plan_stats_stay_real(spark):
+    """Twelve materialized supersteps keep the scores' plan statistics at
+    the cached size: a bare localCheckpoint carries each superstep's
+    join estimate into the next, and the product passes 2^40 bytes within
+    ten supersteps."""
+    n, arcs = 60, erdos_renyi(60, 0.08, seed=5)
+    g = Graph.from_pairs(spark, arcs, directed=True, n=n)
+    scores = pagerank_fixed(g, 12)
+    size = scores._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    assert int(str(size)) < 2**40
+    want, it = pagerank_oracle(n, [(u, v, 1.0) for u, v in arcs], tol=0.0,
+                               distribute_sinks=DISTRIBUTE_SINKS,
+                               max_iterations=12, directed=True)
+    assert it == 12
+    rows = {r["id"]: r["score"] for r in scores.collect()}
+    assert np.allclose([rows[i] for i in range(n)], want, atol=1e-6)

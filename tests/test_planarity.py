@@ -15,6 +15,7 @@ from networkit_spark.operators.planarity import (
     is_planar,
     lr_planarity_check,
 )
+from networkit_spark.session import local_frame
 
 from tests.conftest import spark  # noqa: F401
 
@@ -116,13 +117,13 @@ def test_distributed_block_pipeline(spark):  # noqa: F811
     grid = [(u + 4, v + 4) for u, v in _grid(3, 3)]  # shares node 4
     tree = [(0, 100), (100, 101), (100, 102)]
     edges = k5 + grid + tree
-    e = spark.createDataFrame(
-        [(u, v, 1.0) for u, v in edges], "src long, dst long, weight double"
+    e = local_frame(
+        spark, [(u, v, 1.0) for u, v in edges], "src long, dst long, weight double"
     )
     ids = sorted({x for p in edges for x in p})
     g = Graph.from_edges(
         e, directed=False,
-        vertices=spark.createDataFrame([(i,) for i in ids], "id long"),
+        vertices=local_frame(spark, [(i,) for i in ids], "id long"),
     )
     rows = block_planarity(g).collect()
     verdicts = sorted((r["n_nodes"], r["is_planar"]) for r in rows)
@@ -133,13 +134,13 @@ def test_distributed_block_pipeline(spark):  # noqa: F811
     assert verdicts.count((2, True)) == 3
     assert is_planar(g) is False
     # remove the K5 block -> planar overall
-    e2 = spark.createDataFrame(
-        [(u, v, 1.0) for u, v in grid + tree], "src long, dst long, weight double"
+    e2 = local_frame(
+        spark, [(u, v, 1.0) for u, v in grid + tree], "src long, dst long, weight double"
     )
     ids2 = sorted({x for p in grid + tree for x in p})
     g2 = Graph.from_edges(
         e2, directed=False,
-        vertices=spark.createDataFrame([(i,) for i in ids2], "id long"),
+        vertices=local_frame(spark, [(i,) for i in ids2], "id long"),
     )
     assert is_planar(g2) is True
 
@@ -147,8 +148,8 @@ def test_distributed_block_pipeline(spark):  # noqa: F811
 def test_euler_fast_reject(spark):  # noqa: F811
     # dense graph: whole-graph Euler criterion fires without any python
     edges = _k(12)
-    e = spark.createDataFrame(
-        [(u, v, 1.0) for u, v in edges], "src long, dst long, weight double"
+    e = local_frame(
+        spark, [(u, v, 1.0) for u, v in edges], "src long, dst long, weight double"
     )
     g = Graph.from_edges(e, directed=False, vertices=spark.range(12))
     assert is_planar(g) is False

@@ -9,6 +9,7 @@ from networkit_spark.operators.pagerank import pagerank
 from networkit_spark.operators.components import connected_components
 from networkit_spark.operators.triangles import total_triangles
 from networkit_spark.sources.tables import derive_web_edges
+from networkit_spark.session import local_frame
 
 
 def _physical(df) -> str:
@@ -42,14 +43,14 @@ def test_filter_pushdown_reaches_scan(spark):
 
 # ------------------------------------------------------------- edge cases
 def test_pagerank_empty_graph_raises(spark):
-    e = spark.createDataFrame([], "src long, dst long, weight double")
+    e = local_frame(spark, [], "src long, dst long, weight double")
     g = Graph.from_edges(e, directed=True)
     with pytest.raises(ValueError, match="empty"):
         pagerank(g, max_iterations=1)
 
 
 def test_cc_singleton_only(spark):
-    e = spark.createDataFrame([], "src long, dst long, weight double")
+    e = local_frame(spark, [], "src long, dst long, weight double")
     v = spark.range(3)
     g = Graph.from_edges(e, directed=False, vertices=v)
     res = connected_components(g)
@@ -57,7 +58,7 @@ def test_cc_singleton_only(spark):
 
 
 def test_triangles_edgeless(spark):
-    e = spark.createDataFrame([], "src long, dst long, weight double")
+    e = local_frame(spark, [], "src long, dst long, weight double")
     v = spark.range(4)
     g = Graph.from_edges(e, directed=False, vertices=v)
     assert total_triangles(g) == 0
@@ -85,6 +86,41 @@ def test_no_unbounded_global_windows():
                 if "bounded-window" not in context:
                     offenders.append(f"{path.name}:{i + 1}: {line.strip()}")
     assert not offenders, f"unjustified global windows: {offenders}"
+
+
+def test_no_bare_local_checkpoint():
+    """Iterative state is materialized only through plans/iterative.py:
+    no `localCheckpoint(` anywhere else in the package (a bare one carries
+    compounding plan estimates and skips the one-action measures)."""
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "networkit_spark"
+    offenders = [
+        f"{path.relative_to(pkg)}:{i + 1}"
+        for path in pkg.rglob("*.py")
+        if path.relative_to(pkg).as_posix() != "plans/iterative.py"
+        for i, line in enumerate(path.read_text().splitlines())
+        if "localCheckpoint(" in line
+    ]
+    assert not offenders, f"bare localCheckpoint: {offenders}"
+
+
+def test_no_python_rdd_frames():
+    """Driver-side rows become DataFrames only through
+    `session.local_frame`: no `createDataFrame(` anywhere else in the
+    package (over a Python list it is a Python RDD that every job re-reads
+    through a Python worker)."""
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "networkit_spark"
+    offenders = [
+        f"{path.relative_to(pkg)}:{i + 1}"
+        for path in pkg.rglob("*.py")
+        if path.relative_to(pkg).as_posix() != "session.py"
+        for i, line in enumerate(path.read_text().splitlines())
+        if "createDataFrame(" in line
+    ]
+    assert not offenders, f"createDataFrame outside local_frame: {offenders}"
 
 
 def test_two_phase_rank_matches_global_window(spark):

@@ -11,6 +11,7 @@ from networkit_spark.operators.pll import (
     pll_query,
     pruned_landmark_labeling,
 )
+from networkit_spark.session import local_frame
 
 from tests.conftest import spark  # noqa: F401
 
@@ -39,8 +40,8 @@ def _bfs_all(rows, n, directed):
 
 
 def _pairs_df(spark, n):
-    return spark.createDataFrame(
-        [(s, t) for s in range(0, n, 3) for t in range(0, n, 4)],
+    return local_frame(
+        spark, [(s, t) for s in range(0, n, 3) for t in range(0, n, 4)],
         "s long, t long",
     )
 
@@ -114,8 +115,8 @@ def test_pll_directed_regression_one_sided_pruning(spark):  # noqa: F811
         (r["s"], r["t"]): r["dist"]
         for r in pll_query(
             labels_in, labels_out,
-            spark.createDataFrame(
-                [(s, t) for s in range(n) for t in range(n)], "s long, t long"
+            local_frame(
+                spark, [(s, t) for s in range(n) for t in range(n)], "s long, t long"
             ),
         ).collect()
     }

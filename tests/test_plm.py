@@ -18,6 +18,7 @@ from networkit_spark.operators.quality import (
     is_proper_clustering,
     modularity,
 )
+from networkit_spark.session import local_frame
 from tests.fixtures import erdos_renyi, planted_cliques
 
 KARATE = "/root/reference/input/karate.graph"
@@ -33,8 +34,8 @@ def test_coarsen_hand_fixture(spark):
         directed=False,
         weighted=True,
     )
-    labels = spark.createDataFrame(
-        [(0, 10), (1, 10), (2, 20), (3, 20)], "id long, label long"
+    labels = local_frame(
+        spark, [(0, 10), (1, 10), (2, 20), (3, 20)], "id long, label long"
     )
     coarse, mapping = coarsen(g, labels)
 
@@ -56,8 +57,8 @@ def test_coarsen_preserves_modularity(spark):
     # add a few inter-clique edges so the partition is non-trivial
     edges = edges + [(0, 1), (2, 3), (5, 10)]
     g = Graph.from_pairs(spark, edges, directed=False, n=36)
-    labels = spark.createDataFrame(
-        [(v, l) for v, l in planted.items()], "id long, label long"
+    labels = local_frame(
+        spark, [(v, l) for v, l in planted.items()], "id long, label long"
     )
     coarse, _ = coarsen(g, labels)
     singletons = coarse.vertices().select("id", F.col("id").alias("label"))
@@ -69,7 +70,7 @@ def test_coarsen_preserves_modularity(spark):
 def test_coarsen_isolated_vertex_kept(spark):
     """A subset whose nodes have no edges still yields a coarse vertex."""
     g = Graph.from_pairs(spark, [(0, 1)], directed=False, n=3)  # node 2 isolated
-    labels = spark.createDataFrame([(0, 7), (1, 7), (2, 9)], "id long, label long")
+    labels = local_frame(spark, [(0, 7), (1, 7), (2, 9)], "id long, label long")
     coarse, mapping = coarsen(g, labels)
     assert coarse.num_vertices() == 2
     assert {r["coarse_id"] for r in mapping.collect()} == {0, 1}
@@ -78,8 +79,8 @@ def test_coarsen_isolated_vertex_kept(spark):
 def test_prolong_roundtrip(spark):
     edges, planted = planted_cliques(20, 4)
     g = Graph.from_pairs(spark, edges, directed=False, n=20)
-    labels = spark.createDataFrame(
-        [(v, l) for v, l in planted.items()], "id long, label long"
+    labels = local_frame(
+        spark, [(v, l) for v, l in planted.items()], "id long, label long"
     )
     coarse, mapping = coarsen(g, labels)
     # identity partition on the coarse graph prolongs back to the original
@@ -99,8 +100,8 @@ def test_plm_two_triangles_distributed(spark):
     )
     res = plm(g, local_threshold=0)
     assert res.number_of_communities() == 2
-    expected = spark.createDataFrame(
-        [(0, 0), (1, 0), (2, 0), (3, 1), (4, 1), (5, 1)], "id long, label long"
+    expected = local_frame(
+        spark, [(0, 0), (1, 0), (2, 0), (3, 1), (4, 1), (5, 1)], "id long, label long"
     )
     assert equal_clusterings(g, res.labels, expected)
 
@@ -112,8 +113,8 @@ def test_plm_planted_cliques_both_paths(spark):
     the planted cliques exactly."""
     edges, planted = planted_cliques(48, 4)
     g = Graph.from_pairs(spark, edges, directed=False, n=48)
-    planted_df = spark.createDataFrame(
-        [(v, l) for v, l in planted.items()], "id long, label long"
+    planted_df = local_frame(
+        spark, [(v, l) for v, l in planted.items()], "id long, label long"
     )
     for threshold in (0, 100_000):  # distributed / local
         res = plm(g, local_threshold=threshold)

@@ -4,18 +4,19 @@ cluster palette, grey cross-cluster edges, torus wrapping."""
 
 from networkit_spark.graph import Graph
 from networkit_spark.sources.postscript import write_postscript
+from networkit_spark.session import local_frame
 
 from tests.conftest import spark  # noqa: F401
 
 
 def _square(spark):
-    e = spark.createDataFrame(
-        [(0, 1, 1.0), (1, 2, 1.0), (2, 3, 1.0), (0, 3, 1.0)],
+    e = local_frame(
+        spark, [(0, 1, 1.0), (1, 2, 1.0), (2, 3, 1.0), (0, 3, 1.0)],
         "src long, dst long, weight double",
     )
     g = Graph.from_edges(e, directed=False, vertices=spark.range(4))
-    coords = spark.createDataFrame(
-        [(0, 0.0, 0.0), (1, 2.0, 0.0), (2, 2.0, 2.0), (3, 0.0, 2.0)],
+    coords = local_frame(
+        spark, [(0, 0.0, 0.0), (1, 2.0, 0.0), (2, 2.0, 2.0), (3, 0.0, 2.0)],
         "id long, x double, y double",
     )
     return g, coords
@@ -44,8 +45,8 @@ def test_postscript_structure_and_scaling(spark, tmp_path):  # noqa: F811
 
 def test_postscript_clusters_and_torus(spark, tmp_path):  # noqa: F811
     g, coords = _square(spark)
-    clustering = spark.createDataFrame(
-        [(0, 0), (1, 0), (2, 1), (3, 1)], "id long, label long"
+    clustering = local_frame(
+        spark, [(0, 0), (1, 0), (2, 1), (3, 1)], "id long, label long"
     )
     f = tmp_path / "c.eps"
     write_postscript(g, coords, str(f), clustering=clustering, torus=True)

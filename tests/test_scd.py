@@ -16,6 +16,7 @@ from networkit_spark.operators.scd import (
     page_rank_nibble,
     set_conductance,
 )
+from networkit_spark.session import local_frame
 
 from tests.conftest import spark  # noqa: F401
 
@@ -90,5 +91,5 @@ def test_nibble_community_connected(spark):  # noqa: F811
 def test_set_conductance_hand_value(spark):  # noqa: F811
     # path 0-1-2-3: S = {0,1} → cut 1, vol(S) 3, vol rest 3 → 1/3
     g = Graph.from_pairs(spark, [(0, 1), (1, 2), (2, 3)], directed=False, n=4)
-    s = spark.createDataFrame([(0,), (1,)], "id long")
+    s = local_frame(spark, [(0,), (1,)], "id long")
     assert set_conductance(g, s) == pytest.approx(1.0 / 3.0)

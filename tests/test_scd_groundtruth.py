@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from networkit_spark.generators import erdos_renyi
 from networkit_spark.graph import Graph
 from networkit_spark.operators.scd import scd_ground_truth_comparison
+from networkit_spark.session import local_frame
 
 from tests.conftest import spark  # noqa: F811,F401
 
@@ -52,9 +53,9 @@ def test_formula_replica(spark):  # noqa: F811
     ]
     found = {s: set(rng.sample(range(n), rng.randint(3, 12))) | {s}
              for s in range(0, 12, 2)}
-    gt_df = spark.createDataFrame(gt, "id long, c long")
-    fnd_df = spark.createDataFrame(
-        [(s, u) for s, ms in found.items() for u in ms], "seed long, id long"
+    gt_df = local_frame(spark, gt, "id long, c long")
+    fnd_df = local_frame(
+        spark, [(s, u) for s, ms in found.items() for u in ms], "seed long, id long"
     )
     for ignore in (False, True):
         want = _replica(set(range(n)), gt, found, ignore)
@@ -72,11 +73,11 @@ def test_formula_replica(spark):  # noqa: F811
 
 def test_missing_seed_raises(spark):  # noqa: F811
     g = Graph.from_edges(
-        spark.createDataFrame([(0, 1, 1.0)], "src long, dst long, weight double"),
+        local_frame(spark, [(0, 1, 1.0)], "src long, dst long, weight double"),
         directed=False, vertices=spark.range(2),
     )
-    gt = spark.createDataFrame([(0, 0), (1, 0)], "id long, c long")
-    fnd = spark.createDataFrame([(99, 0), (99, 1)], "seed long, id long")
+    gt = local_frame(spark, [(0, 0), (1, 0)], "id long, c long")
+    fnd = local_frame(spark, [(99, 0), (99, 1)], "seed long, id long")
     with pytest.raises(ValueError):
         scd_ground_truth_comparison(g, gt, fnd, ignore_seeds=False)
     # ignore_seeds skips the guard (reference parity)

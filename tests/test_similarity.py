@@ -11,6 +11,7 @@ from networkit_spark.operators.similarity import (
     lsh_buckets,
     lsh_topk,
 )
+from networkit_spark.session import local_frame
 
 DIMS = 16
 N = 80
@@ -32,7 +33,7 @@ def _make_vectors():
 def emb(spark):
     vecs = _make_vectors()
     rows = [(i, [float(x) for x in vecs[i]]) for i in range(N)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>").persist()
+    df = local_frame(spark, rows, "vec_id long, embedding array<float>").persist()
     df.count()
     yield df
     df.unpersist()

@@ -12,6 +12,7 @@ from networkit_spark.operators.sparsification import (
     simmelian_jaccard_scores,
     simmelian_overlap_scores,
 )
+from networkit_spark.session import local_frame
 
 from tests.conftest import spark  # noqa: F401
 
@@ -67,8 +68,8 @@ REF_EDGES = [(4, 5), (4, 6), (5, 6), (4, 8), (4, 7), (7, 8), (4, 9), (8, 9)]
 
 
 def _graph(spark, edge_list, n):
-    e = spark.createDataFrame(
-        [(u, v, 1.0) for u, v in edge_list], "src long, dst long, weight double"
+    e = local_frame(
+        spark, [(u, v, 1.0) for u, v in edge_list], "src long, dst long, weight double"
     )
     return Graph.from_edges(e, directed=False, vertices=spark.range(n))
 

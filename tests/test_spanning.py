@@ -12,6 +12,7 @@ from networkit_spark.operators.spanning import (
     maximum_spanning_forest,
     spanning_forest,
 )
+from networkit_spark.session import local_frame
 from tests.fixtures import erdos_renyi
 
 
@@ -160,7 +161,7 @@ def test_random_spanning_forest_contract(spark):
     assert f1 <= {(min(u, v), max(u, v)) for u, v in edges}
     # connectivity preserved
     fg = Graph.from_edges(
-        spark.createDataFrame(sorted(f1), "src long, dst long"),
+        local_frame(spark, sorted(f1), "src long, dst long"),
         directed=False, vertices=g.vertices(),
     )
     cc_g = {tuple(r) for r in connected_components(g).labels.collect()}

@@ -19,15 +19,16 @@ from networkit_spark.streaming.edge_stream import (
     incremental_connected_components,
     windowed_edge_counts,
 )
+from networkit_spark.session import local_frame
 
 
 def test_warm_start_cc(spark):
     """initial_labels from a previous fixed point converges to the same
     labels as a cold run after new edges merge components."""
-    e1 = spark.createDataFrame([(0, 1), (2, 3)], "src long, dst long")
+    e1 = local_frame(spark, [(0, 1), (2, 3)], "src long, dst long")
     g1 = Graph.from_edges(e1, directed=False)
     r1 = connected_components(g1)
-    e2 = spark.createDataFrame([(0, 1), (2, 3), (1, 2), (4, 5)], "src long, dst long")
+    e2 = local_frame(spark, [(0, 1), (2, 3), (1, 2), (4, 5)], "src long, dst long")
     g2 = Graph.from_edges(e2, directed=False)
     warm = connected_components(g2, initial_labels=r1.labels)
     cold = connected_components(g2)
@@ -39,10 +40,10 @@ def test_warm_start_cc(spark):
 def test_incremental_cc_batches(spark):
     """Drive the foreachBatch sink directly with micro-batches."""
     icc = incremental_connected_components(spark)
-    b1 = spark.createDataFrame([(0, 1), (2, 3)], "src long, dst long")
+    b1 = local_frame(spark, [(0, 1), (2, 3)], "src long, dst long")
     icc(b1, 0)
     assert icc.labels.select("label").distinct().count() == 2
-    b2 = spark.createDataFrame([(1, 2)], "src long, dst long")
+    b2 = local_frame(spark, [(1, 2)], "src long, dst long")
     icc(b2, 1)
     labels = {r["id"]: r["label"] for r in icc.labels.collect()}
     assert labels == {0: 0, 1: 0, 2: 0, 3: 0}
@@ -52,7 +53,7 @@ def test_incremental_cc_batches(spark):
 def test_incremental_cc_streaming_end_to_end(spark, tmp_path):
     """Real readStream → foreachBatch → incremental labels."""
     src_dir = str(tmp_path / "stream_in")
-    spark.createDataFrame([(0, 1), (2, 3)], "src long, dst long").write.parquet(
+    local_frame(spark, [(0, 1), (2, 3)], "src long, dst long").write.parquet(
         src_dir, mode="overwrite"
     )
     stream = spark.readStream.schema("src long, dst long").parquet(src_dir)
@@ -66,7 +67,7 @@ def test_incremental_cc_streaming_end_to_end(spark, tmp_path):
 def test_windowed_edge_counts_batch(spark):
     rows = [("2025-01-01 00:10:00", 1, 2, 1.0), ("2025-01-01 00:40:00", 1, 3, 1.0),
             ("2025-01-01 01:10:00", 2, 3, 1.0)]
-    ev = spark.createDataFrame(rows, "ts string, src long, dst long, weight double")
+    ev = local_frame(spark, rows, "ts string, src long, dst long, weight double")
     ev = ev.withColumn("ts", F.col("ts").cast("timestamp"))
     got = {(str(r["window_start"]), r["src"]): r["n_events" if False else "n_edges"]
            for r in windowed_edge_counts(ev).collect()}
@@ -120,8 +121,8 @@ def test_incremental_cc_deletions_split(spark):
     untouched components keep their labels (localized recompute)."""
     icc = incremental_connected_components(spark)
     # path 0-1-2-3 plus separate component {7,8}
-    b1 = spark.createDataFrame(
-        [(0, 1, "add"), (1, 2, "add"), (2, 3, "add"), (7, 8, "add")],
+    b1 = local_frame(
+        spark, [(0, 1, "add"), (1, 2, "add"), (2, 3, "add"), (7, 8, "add")],
         "src long, dst long, op string",
     )
     icc(b1, 0)
@@ -129,7 +130,7 @@ def test_incremental_cc_deletions_split(spark):
         0: 0, 1: 0, 2: 0, 3: 0, 7: 7, 8: 7,
     }
     # delete the 1-2 bridge (given in reverse orientation on purpose)
-    b2 = spark.createDataFrame([(2, 1, "del")], "src long, dst long, op string")
+    b2 = local_frame(spark, [(2, 1, "del")], "src long, dst long, op string")
     icc(b2, 1)
     labels = {r["id"]: r["label"] for r in icc.labels.collect()}
     assert labels == {0: 0, 1: 0, 2: 2, 3: 2, 7: 7, 8: 7}
@@ -139,13 +140,13 @@ def test_incremental_cc_deletion_no_split_and_mixed_batch(spark):
     """Deleting a cycle edge keeps the component; a batch can mix adds
     and deletes."""
     icc = incremental_connected_components(spark)
-    b1 = spark.createDataFrame(
-        [(0, 1, "add"), (1, 2, "add"), (2, 0, "add")],
+    b1 = local_frame(
+        spark, [(0, 1, "add"), (1, 2, "add"), (2, 0, "add")],
         "src long, dst long, op string",
     )
     icc(b1, 0)
-    b2 = spark.createDataFrame(
-        [(0, 1, "del"), (3, 0, "add")], "src long, dst long, op string"
+    b2 = local_frame(
+        spark, [(0, 1, "del"), (3, 0, "add")], "src long, dst long, op string"
     )
     icc(b2, 1)
     labels = {r["id"]: r["label"] for r in icc.labels.collect()}
@@ -188,8 +189,8 @@ def test_streaming_dedup_first_seen(spark, tmp_path):
     src_dir = str(tmp_path / "docs_in")
     out_dir = str(tmp_path / "docs_out")
     ckpt = str(tmp_path / "ckpt")
-    spark.createDataFrame(
-        [(1, "alpha"), (2, "alpha"), (3, "beta")], "doc_id long, text string"
+    local_frame(
+        spark, [(1, "alpha"), (2, "alpha"), (3, "beta")], "doc_id long, text string"
     ).write.parquet(src_dir, mode="overwrite")
 
     def run_available():
@@ -210,8 +211,8 @@ def test_streaming_dedup_first_seen(spark, tmp_path):
     assert got == {1: 1, 3: 0}  # alpha kept doc 1 (min), one dup; beta unique
 
     # batch 2: repeat alpha (must NOT re-emit), add gamma (must emit)
-    spark.createDataFrame(
-        [(9, "alpha"), (4, "gamma")], "doc_id long, text string"
+    local_frame(
+        spark, [(9, "alpha"), (4, "gamma")], "doc_id long, text string"
     ).write.mode("append").parquet(src_dir)
     run_available()
     got = {r["doc_id"]: r["n_dups"] for r in spark.read.parquet(out_dir).collect()}
@@ -225,7 +226,7 @@ def test_streaming_running_degrees(spark, tmp_path):
     src_dir = str(tmp_path / "edges_in")
     out_dir = str(tmp_path / "deg_out")
     ckpt = str(tmp_path / "deg_ckpt")
-    spark.createDataFrame([(0, 1), (1, 2)], "src long, dst long").write.parquet(
+    local_frame(spark, [(0, 1), (1, 2)], "src long, dst long").write.parquet(
         src_dir, mode="overwrite"
     )
 
@@ -243,7 +244,7 @@ def test_streaming_running_degrees(spark, tmp_path):
         q.awaitTermination(120)
 
     run_available()
-    spark.createDataFrame([(1, 3)], "src long, dst long").write.mode(
+    local_frame(spark, [(1, 3)], "src long, dst long").write.mode(
         "append"
     ).parquet(src_dir)
     run_available()
@@ -284,13 +285,13 @@ def test_incremental_triangle_count(spark):
     current: list = []
     for b, batch in enumerate(batches):
         current += batch
-        df = spark.createDataFrame(batch, "src long, dst long")
+        df = local_frame(spark, batch, "src long, dst long")
         itc(df, b)
         assert itc.total == brute(current), f"after add batch {b}"
 
     # delete a batch (with op column), re-check
     dels = [(u, v, "del") for u, v in batches[1]]
-    df = spark.createDataFrame(dels, "src long, dst long, op string")
+    df = local_frame(spark, dels, "src long, dst long, op string")
     itc(df, 99)
     remaining = [e for e in current if e not in batches[1]]
     assert itc.total == brute(remaining), "after delete batch"

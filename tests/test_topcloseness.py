@@ -14,6 +14,7 @@ from networkit_spark.operators.distances import (
     harmonic_closeness,
 )
 from networkit_spark.operators.topcloseness import top_closeness
+from networkit_spark.session import local_frame
 
 
 def _full_topk(df, k, ascending_far=False):
@@ -25,7 +26,7 @@ def _full_topk(df, k, ascending_far=False):
 def _graph(spark, edges, extra_nodes=()):
     g = Graph.from_pairs(spark, [(u, v, 1.0) for u, v in edges], directed=False)
     if extra_nodes:
-        g = g.add_nodes(spark.createDataFrame([(int(x),) for x in extra_nodes],
+        g = g.add_nodes(local_frame(spark, [(int(x),) for x in extra_nodes],
                                               "id long"))
     return g
 
