@@ -15,16 +15,19 @@ Reference surface (networkit/cpp/distance/):
 
 Spark shapes:
 - Unweighted: ONE frontier DataFrame keyed by (s, id) runs every
-  source's BFS simultaneously (operators/distances.multi_source_bfs) —
-  supersteps = eccentricity bound, rows per shuffle scale with |S|.
+  source's BFS simultaneously (the BFS level kernel,
+  operators/distances._bfs_levels) — supersteps = eccentricity bound,
+  rows per shuffle scale with |S|.
 - Weighted: multi-source Bellman-Ford on the same (s, id) state — per
   superstep one arcs join + (s, id) min-aggregation (map-side partial),
   frontier = strictly-improved rows only, so settled subtrees drop out
   of the shuffle exactly like the reference's Dijkstra settles them.
+  That round is `_relax`, the one weighted kernel: every Dijkstra-parity
+  search here (multi-target, ball, bidirectional) is a loop over it.
   Converges in ≤ (max hop count of a min-weight path) supersteps; a
-  negative cycle reachable from a source never quiesces, so the n-round
-  cap raises (the reference's Dijkstra forbids negative weights
-  outright).
+  negative cycle reachable from a source never quiesces, so a round that
+  still improves once there are no more reached vertices than rounds
+  raises (the reference's Dijkstra forbids negative weights outright).
 - BidirectionalBFS keeps both balls as DataFrames and expands the
   smaller frontier per superstep; the meeting test is one inner join.
   Exactness: with completed levels (i, j) and best meeting value mu =
@@ -37,12 +40,12 @@ Spark shapes:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.storagelevel import StorageLevel
 
 from networkit_spark.graph import Graph
-from networkit_spark.operators.distances import multi_source_bfs, _all_sources
-from networkit_spark.plans.iterative import materialize, truncate
+from networkit_spark.operators.distances import _all_sources, _bfs_step, multi_source_bfs
+from networkit_spark.plans.iterative import materialize, truncate, unpersist
 from networkit_spark.session import local_frame
 
 
@@ -62,61 +65,76 @@ def _weighted_arcs(graph: Graph) -> DataFrame:
     return graph.edges.select("src", "dst", "weight")
 
 
+def _relax(arcs: DataFrame, frontier: DataFrame, state: DataFrame,
+           keys=(), keep: Column | None = None) -> tuple[DataFrame, DataFrame, dict]:
+    """One weighted relaxation round: the frontier's (*keys, id, dist) rows
+    relaxed over `arcs(src, dst, weight)`, min-aggregated on (*keys, id)
+    and filtered by `keep` (a bound on the candidate dist), keep the rows
+    that improve `state`. Those rows are materialized by one action,
+    whose record carries their `rows` and `fmin` = min(dist), then merged
+    into `state` (a second action, only when there are any; the record
+    then also carries the merged state's `reached` rows). Returns
+    (improved, state, record); improved is the next frontier."""
+    keys = list(keys)
+    cand = (
+        frontier.join(arcs, frontier.id == arcs.src)
+        .select(*keys, F.col("dst").alias("id"),
+                (frontier.dist + arcs.weight).alias("dist"))
+        .groupBy(*keys, "id")
+        .agg(F.min("dist").alias("dist"))
+    )
+    if keep is not None:
+        cand = cand.filter(keep)
+    improved = (
+        cand.join(state.select(*keys, "id", F.col("dist").alias("old")),
+                  [*keys, "id"], "left")
+        .filter(F.col("old").isNull() | (F.col("dist") < F.col("old")))
+        .select(*keys, "id", "dist")
+    )
+    improved, seen = materialize(improved, {"fmin": F.min("dist")}, release=frontier)
+    if seen["rows"]:
+        merged = (
+            state.unionByName(improved)
+            .groupBy(*keys, "id")
+            .agg(F.min("dist").alias("dist"))
+        )
+        state, kept = materialize(merged, release=state)
+        seen["reached"] = kept["rows"]
+    return improved, state, seen
+
+
 def multi_source_bellman_ford(
     graph: Graph, sources: DataFrame, max_rounds: int | None = None
 ) -> DataFrame:
     """(s, id, dist) weighted shortest-path distances from every source
     — the Dijkstra-parity path of APSP/SPSP (identical fixed point; the
-    reference's own BFS/Dijkstra swap is the same substitution). Raises
-    on a reachable negative cycle (no quiescence within n rounds)."""
-    arcs = _weighted_arcs(graph).persist(StorageLevel.MEMORY_AND_DISK)
-    arcs.count()
-    n = graph.num_vertices()
-    cap = max_rounds if max_rounds is not None else n + 1
+    reference's own BFS/Dijkstra swap is the same substitution).
+    `max_rounds` stops early, with every distance the shortest over paths
+    of at most that many arcs.
 
+    Without it, raises on a reachable negative cycle: with none, a row
+    that improves in round k ends a k-arc simple path, so k + 1 of its
+    source's vertices are reached; round k improving while at most k
+    (s, id) rows are reached can only come from a negative cycle (the
+    reference's Dijkstra forbids negative weights outright)."""
+    arcs = _weighted_arcs(graph).persist(StorageLevel.MEMORY_AND_DISK)
     state = truncate(
         sources.select("s", F.col("s").alias("id"), F.lit(0.0).alias("dist"))
     )
     frontier = state
     rounds = 0
-    while True:
+    while max_rounds is None or rounds < max_rounds:
         rounds += 1
-        if rounds > cap:
-            arcs.unpersist()
-            if max_rounds is None:
-                raise ValueError(
-                    "no quiescence after n rounds — negative cycle reachable "
-                    "from a source (FloydWarshall handles those; Dijkstra "
-                    "semantics forbid them)"
-                )
-            break
-        cand = (
-            frontier.join(arcs, frontier.id == arcs.src)
-            .select("s", F.col("dst").alias("id"),
-                    (frontier.dist + arcs.weight).alias("dist"))
-            .groupBy("s", "id")
-            .agg(F.min("dist").alias("dist"))
-        )
-        improved = (
-            cand.join(
-                state.select("s", "id", F.col("dist").alias("old")),
-                ["s", "id"], "left",
-            )
-            .filter(F.col("old").isNull() | (F.col("dist") < F.col("old")))
-            .select("s", "id", "dist")
-        )
-        improved, seen = materialize(improved, release=frontier)
+        frontier, state, seen = _relax(arcs, frontier, state, keys=("s",))
         if seen["rows"] == 0:
-            improved.unpersist()
             break
-        merged = (
-            state.unionByName(improved)
-            .groupBy("s", "id")
-            .agg(F.min("dist").alias("dist"))
-        )
-        state = truncate(merged, release=state)
-        frontier = improved
-    arcs.unpersist()
+        if max_rounds is None and rounds >= seen["reached"]:
+            unpersist(frontier, arcs)
+            raise ValueError(
+                "no quiescence — negative cycle reachable from a source "
+                "(FloydWarshall handles those; Dijkstra semantics forbid them)"
+            )
+    unpersist(frontier, arcs)
     return state
 
 
@@ -171,46 +189,22 @@ def multi_target_bfs(graph: Graph, source: int, targets) -> DataFrame:
         graph.edges.select("src", "dst", F.lit(1.0).alias("weight"))
     )
     arcs = arcs.persist(StorageLevel.MEMORY_AND_DISK)
-    arcs.count()
 
     state = truncate(
         local_frame(spark, [(int(source), 0.0)], "id long, dist double")
     )
     frontier = state
     while True:
-        cand = (
-            frontier.join(arcs, frontier.id == arcs.src)
-            .select(F.col("dst").alias("id"),
-                    (frontier.dist + arcs.weight).alias("dist"))
-            .groupBy("id")
-            .agg(F.min("dist").alias("dist"))
-        )
-        improved = (
-            cand.join(
-                state.select("id", F.col("dist").alias("old")), "id", "left"
-            )
-            .filter(F.col("old").isNull() | (F.col("dist") < F.col("old")))
-            .select("id", "dist")
-        )
-        improved, seen = materialize(improved, release=frontier)
+        frontier, state, seen = _relax(arcs, frontier, state)
         if seen["rows"] == 0:
-            improved.unpersist()
             break
-        state = truncate(
-            state.unionByName(improved).groupBy("id")
-            .agg(F.min("dist").alias("dist")),
-            release=state,
-        )
-        frontier = improved
         # early termination on the target set
         hit = state.join(F.broadcast(tgt), "id", "left_semi")
         agg = hit.agg(
             F.count(F.lit(1)).alias("k"), F.max("dist").alias("tmax")
         ).first()
-        if agg["k"] == n_targets:
-            fmin = frontier.agg(F.min("dist")).first()[0]
-            if fmin is None or fmin >= agg["tmax"]:
-                break
+        if agg["k"] == n_targets and seen["fmin"] >= agg["tmax"]:
+            break
     out = (
         state.join(F.broadcast(tgt), "id", "left_semi")
         .select(
@@ -220,13 +214,7 @@ def multi_target_bfs(graph: Graph, source: int, targets) -> DataFrame:
         )
     )
     out = truncate(out)
-    for df in (state, frontier):
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-    arcs.unpersist()
-    tgt.unpersist()
+    unpersist(state, frontier, arcs, tgt)
     return out
 
 
@@ -252,23 +240,16 @@ def bidirectional_bfs(graph: Graph, source: int, target: int) -> int | None:
     if source == target:
         return 0
     spark = graph.edges.sparkSession
-    out_arcs = (
-        graph.edges.select("src", "dst") if graph.directed
-        else graph.symmetrized_edges().select("src", "dst")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    out_arcs.count()
+    out_arcs = graph.edges.select("src", "dst").persist(StorageLevel.MEMORY_AND_DISK)
     in_arcs = (
         out_arcs.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         if graph.directed else out_arcs
     )
 
     def _ball(node):
-        return truncate(
-            local_frame(spark, [(int(node), 0)], "id long, d int")
-        )
+        return local_frame(spark, [(int(node), 0)], "id long, dist long")
 
     vis = {"s": _ball(source), "t": _ball(target)}
-    frontier = {"s": vis["s"], "t": vis["t"]}
     fsize = {"s": 1, "t": 1}
     done = {"s": 0, "t": 0}  # completed levels per side
     arcs_of = {"s": out_arcs, "t": in_arcs}
@@ -283,33 +264,18 @@ def bidirectional_bfs(graph: Graph, source: int, target: int) -> int | None:
             if fsize[side] == 0:
                 break
         other = "t" if side == "s" else "s"
-        d = done[side] + 1
-        nxt = (
-            frontier[side].join(arcs_of[side], frontier[side].id == arcs_of[side].src)
-            .select(F.col("dst").alias("id"))
-            .distinct()
-            .join(vis[side].select("id"), "id", "left_anti")
-            .withColumn("d", F.lit(d).cast("int"))
-        )
-        nxt = truncate(nxt, release=frontier[side])
-        done[side] = d
-        fsize[side] = nxt.count()
-        vis[side] = truncate(vis[side].unionByName(nxt), release=vis[side])
-        frontier[side] = nxt
+        done[side] += 1
+        vis[side], fsize[side] = _bfs_step(arcs_of[side], vis[side], done[side])
         meet = (
-            vis[side].select("id", F.col("d").alias("d1"))
-            .join(vis[other].select("id", F.col("d").alias("d2")), "id")
+            vis[side].filter(F.col("dist") == done[side])
+            .select("id", F.col("dist").alias("d1"))
+            .join(vis[other].select("id", F.col("dist").alias("d2")), "id")
             .agg(F.min(F.col("d1") + F.col("d2")).alias("mu"))
             .first()[0]
         )
         if meet is not None:
             best = meet if best is None else min(best, meet)
-    for df in (vis["s"], vis["t"], frontier["s"], frontier["t"]):
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-    out_arcs.unpersist()
+    unpersist(vis["s"], vis["t"], out_arcs)
     return None if best is None else int(best)
 
 
@@ -326,8 +292,8 @@ def dijkstra_within(
     given, truncated to dist ≤ radius (the reference is consumed
     lazily via next() until the caller's distance bound; the batch form
     prunes frontier rows past the bound instead — every settled value ≤
-    radius is identical). Per superstep one arcs join + min-agg, the
-    multi_source_bellman_ford step with two extra pushed-down filters."""
+    radius is identical). Per superstep one `_relax` round, bounded by
+    the radius, over arcs that skip `excluded`."""
     spark = graph.edges.sparkSession
     if isinstance(sources, DataFrame):
         src = sources.select(F.col("s").cast("long").alias("id")).distinct()
@@ -343,38 +309,15 @@ def dijkstra_within(
             excl.withColumnRenamed("id", "dst"), "dst", "left_anti"
         ).join(excl.withColumnRenamed("id", "src"), "src", "left_anti")
     arcs = arcs.persist(StorageLevel.MEMORY_AND_DISK)
-    arcs.count()
 
     state = truncate(src.select("id", F.lit(0.0).alias("dist")))
     frontier = state
+    keep = None if radius is None else F.col("dist") <= F.lit(float(radius))
     while True:
-        cand = (
-            frontier.join(arcs, frontier.id == arcs.src)
-            .select(F.col("dst").alias("id"),
-                    (frontier.dist + arcs.weight).alias("dist"))
-            .groupBy("id")
-            .agg(F.min("dist").alias("dist"))
-        )
-        if radius is not None:
-            cand = cand.filter(F.col("dist") <= F.lit(float(radius)))
-        improved = (
-            cand.join(
-                state.select("id", F.col("dist").alias("old")), "id", "left"
-            )
-            .filter(F.col("old").isNull() | (F.col("dist") < F.col("old")))
-            .select("id", "dist")
-        )
-        improved, seen = materialize(improved, release=frontier)
+        frontier, state, seen = _relax(arcs, frontier, state, keep=keep)
         if seen["rows"] == 0:
-            improved.unpersist()
             break
-        state = truncate(
-            state.unionByName(improved).groupBy("id")
-            .agg(F.min("dist").alias("dist")),
-            release=state,
-        )
-        frontier = improved
-    arcs.unpersist()
+    unpersist(frontier, arcs)
     if excluded is not None:
         excl.unpersist()
     return state
@@ -390,8 +333,8 @@ def bidirectional_dijkstra(
     The reference (BidirectionalDijkstra.cpp:14-123) settles one heap
     node per step and stops when a settled node lands in the other
     ball, taking min(d1+d2) over the stab set. The batched form relaxes
-    a WHOLE frontier per superstep (one arcs join + min-agg per side,
-    the multi_source_bellman_ford step) and keeps the running meeting
+    a WHOLE frontier per superstep (one `_relax` round per side, bounded
+    by dist < best) and keeps the running meeting
     value best = min over discovered id of d1(id) + d2(id). Exactness:
     weights must be positive (Dijkstra's own precondition), so a node
     whose tentative one-sided distance is already >= best can never lie
@@ -405,7 +348,6 @@ def bidirectional_dijkstra(
         return 0.0
     spark = graph.edges.sparkSession
     out_arcs = _weighted_arcs(graph).persist(StorageLevel.MEMORY_AND_DISK)
-    out_arcs.count()
     in_arcs = (
         out_arcs.select(
             F.col("dst").alias("src"), F.col("src").alias("dst"), "weight"
@@ -427,38 +369,13 @@ def bidirectional_dijkstra(
         side = "s" if fsize["s"] <= fsize["t"] else "t"
         if fsize[side] == 0:
             side = "t" if side == "s" else "s"
-        other = "t" if side == "s" else "s"
-        cand = (
-            frontier[side]
-            .join(arcs_of[side], frontier[side].id == arcs_of[side].src)
-            .select(
-                F.col("dst").alias("id"),
-                (frontier[side].dist + arcs_of[side].weight).alias("dist"),
-            )
-            .groupBy("id")
-            .agg(F.min("dist").alias("dist"))
+        keep = None if best is None else F.col("dist") < F.lit(best)
+        frontier[side], state[side], seen = _relax(
+            arcs_of[side], frontier[side], state[side], keep=keep
         )
-        improved = (
-            cand.join(
-                state[side].select("id", F.col("dist").alias("old")),
-                "id", "left",
-            )
-            .filter(F.col("old").isNull() | (F.col("dist") < F.col("old")))
-            .select("id", "dist")
-        )
-        if best is not None:
-            improved = improved.filter(F.col("dist") < F.lit(best))
-        improved = truncate(improved, release=frontier[side])
-        fsize[side] = improved.count()
-        frontier[side] = improved
+        fsize[side] = seen["rows"]
         if fsize[side] == 0:
             continue
-        merged = (
-            state[side].unionByName(improved)
-            .groupBy("id")
-            .agg(F.min("dist").alias("dist"))
-        )
-        state[side] = truncate(merged, release=state[side])
         meet = (
             state["s"].select("id", F.col("dist").alias("d1"))
             .join(state["t"].select("id", F.col("dist").alias("d2")), "id")
@@ -467,12 +384,7 @@ def bidirectional_dijkstra(
         )
         if meet is not None:
             best = float(meet) if best is None else min(best, float(meet))
-    for df in (state["s"], state["t"], frontier["s"], frontier["t"]):
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-    out_arcs.unpersist()
+    unpersist(state["s"], state["t"], frontier["s"], frontier["t"], out_arcs)
     return best
 
 

@@ -38,50 +38,26 @@ from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.storagelevel import StorageLevel
 
 from networkit_spark.graph import Graph
+from networkit_spark.operators.distances import _bfs_levels
 from networkit_spark.plans.iterative import materialize, truncate
 from networkit_spark.session import local_frame
 
 
 def _forward_sssp(graph: Graph, sources: DataFrame):
-    """Batched BFS with path counts: (s, id, dist, sigma) for every
-    reachable pair; sigma = number of shortest s→id paths."""
-    sym = graph.symmetrized_edges().select("src", "dst")
-    if graph.directed:
-        sym = graph.edges.select("src", "dst")
-    sym = sym.persist(StorageLevel.MEMORY_AND_DISK)
-    sym.count()
-
-    level0 = truncate(
+    """Batched BFS with path counts: (s, id, sigma, dist) for every
+    reachable pair, sigma = number of shortest s→id paths (the BFS level
+    kernel summing the frontier's sigma into each new vertex), plus the
+    cached arcs and the BFS depth."""
+    sym = graph.edges.select("src", "dst").persist(StorageLevel.MEMORY_AND_DISK)
+    seeds = (
         sources.select(F.col("s").cast("long").alias("s"))
         .distinct()
-        .select(
-            "s",
-            F.col("s").alias("id"),
-            F.lit(0).cast("long").alias("dist"),
-            F.lit(1.0).alias("sigma"),
-        )
+        .select("s", F.col("s").alias("id"), F.lit(1.0).alias("sigma"))
     )
-    # union of per-level checkpoints: shallow lineage, no re-truncation
-    # (see multi_source_bfs)
-    visited = level0
-    frontier = level0
-    depth = 0
-    while True:
-        depth += 1
-        nxt = (
-            frontier.join(sym, frontier.id == sym.src)
-            .groupBy("s", F.col("dst").alias("id"))
-            .agg(F.sum("sigma").alias("sigma"))
-            .join(visited.select("s", "id"), ["s", "id"], "left_anti")
-            .withColumn("dist", F.lit(depth).cast("long"))
-            .select("s", "id", "dist", "sigma")
-        )
-        nxt, seen = materialize(nxt)
-        if seen["rows"] == 0:
-            break
-        visited = visited.unionByName(nxt)
-        frontier = nxt
-    return visited, sym
+    visited, depth = _bfs_levels(
+        sym, seeds, keys=("s",), aggs=(F.sum("sigma").alias("sigma"),)
+    )
+    return visited, sym, depth
 
 
 def _dependency_scores(
@@ -92,14 +68,11 @@ def _dependency_scores(
     """Σ_s δ_s(t) per node t — the common core of exact and estimated
     betweenness. distance_weighted adds the (dist(p)/dist(t)) factor
     (EstimateBetweenness.cpp:78-80)."""
-    spark = graph.edges.sparkSession
-    visited, sym = _forward_sssp(graph, sources)
-    visited = visited.persist(StorageLevel.MEMORY_AND_DISK)
-    max_l = visited.agg(F.max("dist")).first()[0] or 0
+    visited, sym, max_l = _forward_sssp(graph, sources)
 
     delta_next: DataFrame | None = None  # (s, id, delta) for current level
     score_pieces: list[DataFrame] = []
-    for level in range(int(max_l), 0, -1):
+    for level in range(max_l, 0, -1):
         t_rows = visited.filter(F.col("dist") == level).select(
             "s", "id", "sigma"
         )
@@ -371,21 +344,20 @@ def approx_betweenness_rk(
         .select("i", "s", "t")
     )
     samples = truncate(samples)
-    sp, sym = _forward_sssp(graph, samples.select("s"))
-    sp = truncate(sp)
+    sp, sym, _ = _forward_sssp(graph, samples.select("s"))
 
     # reachable targets start the backward walk at their (s,t) distance
-    cur = truncate(
+    walking = {"active": F.count_if(F.col("dist") > 0)}
+    cur, seen = materialize(
         samples.join(
             sp.select("s", F.col("id").alias("t"), "dist"), ["s", "t"]
-        ).select("i", "s", F.col("t").alias("node"), "dist")
+        ).select("i", "s", F.col("t").alias("node"), "dist"),
+        walking,
     )
     picks = []
     step = 0
-    while True:
+    while seen["active"]:
         active = cur.filter(F.col("dist") > 0)
-        if active.limit(1).count() == 0:
-            break
         step += 1
         preds = (
             active.join(sym, active.node == sym.dst)
@@ -408,9 +380,8 @@ def approx_betweenness_rk(
             .filter(F.col("rn") == 1)
             .select("i", "s", F.col("p").alias("node"), F.col("pd").alias("dist"))
         )
-        chosen = truncate(chosen, release=cur)
-        cur = chosen
-        picks.append(chosen.filter(F.col("node") != F.col("s")).select("node"))
+        cur, seen = materialize(chosen, walking, release=cur)
+        picks.append(cur.filter(F.col("node") != F.col("s")).select("node"))
     if picks:
         allp = picks[0]
         for p in picks[1:]:
@@ -487,20 +458,19 @@ def approx_group_betweenness(
         .select("i", "s", "t")
     )
     smp = truncate(smp)
-    sp, sym = _forward_sssp(graph, smp.select("s"))
-    sp = truncate(sp)
+    sp, sym, _ = _forward_sssp(graph, smp.select("s"))
 
-    cur = truncate(
+    walking = {"active": F.count_if(F.col("dist") > 0)}
+    cur, seen = materialize(
         smp.join(
             sp.select("s", F.col("id").alias("t"), "dist"), ["s", "t"]
-        ).select("i", "s", F.col("t").alias("node"), "dist")
+        ).select("i", "s", F.col("t").alias("node"), "dist"),
+        walking,
     )
     picks = []
     step = 0
-    while True:
+    while seen["active"]:
         active = cur.filter(F.col("dist") > 0)
-        if active.limit(1).count() == 0:
-            break
         step += 1
         preds = (
             active.join(sym, active.node == sym.dst)
@@ -526,10 +496,9 @@ def approx_group_betweenness(
             .select("i", "s", F.col("p").alias("node"),
                     F.col("pd").alias("dist"))
         )
-        chosen = truncate(chosen, release=cur)
-        cur = chosen
+        cur, seen = materialize(chosen, walking, release=cur)
         picks.append(
-            chosen.filter(F.col("node") != F.col("s")).select("i", "node")
+            cur.filter(F.col("node") != F.col("s")).select("i", "node")
         )
 
     if picks:

@@ -14,7 +14,8 @@ efficient parallel biconnectivity algorithm" (SIAM J. Comput. 1985),
 which works over an ARBITRARY rooted spanning forest:
 
   1. BFS spanning forest, parent = MIN neighbor in the previous
-     frontier (deterministic; one shuffle join + min-agg per level).
+     frontier (deterministic; the engine's BFS level kernel with a
+     min-agg, one Spark action per level).
   2. Tree functionals by level sweeps (each sweep is a lazily chained
      join+agg per level, lineage-truncated every few levels):
        - nd(v)   subtree size           (bottom-up)
@@ -55,7 +56,8 @@ from pyspark.storagelevel import StorageLevel
 
 from networkit_spark.graph import Graph
 from networkit_spark.operators.components import connected_components
-from networkit_spark.plans.iterative import Checkpointer, truncate
+from networkit_spark.operators.distances import _bfs_levels
+from networkit_spark.plans.iterative import truncate, unpersist
 
 _TRUNCATE_EVERY = 8  # sweep levels chained lazily between lineage cuts
 
@@ -96,34 +98,6 @@ class BiconnectedResult:
         )
 
 
-def _bfs_forest(spark, sym: DataFrame, roots: DataFrame, ckpt: Checkpointer):
-    """Multi-root BFS. Returns (visited(id, parent, level), depth).
-    parent = min neighbor in the previous frontier (deterministic)."""
-    visited = truncate(
-        roots.select("id", F.lit(None).cast("long").alias("parent"),
-                     F.lit(0).cast("long").alias("level"))
-    )
-    frontier = visited
-    depth = 0
-    while True:
-        depth += 1
-        nxt = (
-            frontier.join(sym, frontier.id == sym.src)
-            .groupBy(sym.dst.alias("nid"))
-            .agg(F.min(sym.src).alias("parent"))
-            .select(F.col("nid").alias("id"), "parent",
-                    F.lit(depth).cast("long").alias("level"))
-            .join(visited.select("id"), "id", "left_anti")
-        )
-        nxt = ckpt.save(nxt, depth, None)
-        if nxt.limit(1).count() == 0:
-            depth -= 1
-            break
-        visited = truncate(visited.unionByName(nxt), release=visited)
-        frontier = nxt
-    return visited, depth
-
-
 def biconnected_components(graph: Graph) -> BiconnectedResult:
     """Tarjan–Vishkin biconnected components. Undirected graphs only,
     like the reference (BiconnectedComponents.cpp:16-19)."""
@@ -131,9 +105,6 @@ def biconnected_components(graph: Graph) -> BiconnectedResult:
         raise ValueError(
             "biconnected components cannot be computed on directed graphs"
         )
-    spark = graph.edges.sparkSession
-    ckpt = Checkpointer(spark, None, algorithm="biconnected")
-
     und = graph.simple_undirected_edges().persist(StorageLevel.MEMORY_AND_DISK)
     sym = (
         und.select(F.col("u").alias("src"), F.col("v").alias("dst"))
@@ -144,8 +115,12 @@ def biconnected_components(graph: Graph) -> BiconnectedResult:
     # --- spanning forest rooted at each component's min node id --------
     cc = connected_components(graph)
     roots = cc.labels.filter(F.col("id") == F.col("label")).select("id")
-    visited, depth = _bfs_forest(spark, sym, roots, ckpt)
-    visited = visited.persist(StorageLevel.MEMORY_AND_DISK)
+    # parent = min neighbor in the previous level (deterministic)
+    forest, depth = _bfs_levels(
+        sym, roots.withColumn("parent", F.lit(None).cast("long")),
+        aggs=(F.min("src").alias("parent"),),
+    )
+    visited = forest.withColumnRenamed("dist", "level")
     tree = visited.filter(F.col("parent").isNotNull()) \
                   .persist(StorageLevel.MEMORY_AND_DISK)
     tree_lvl = {  # per-level child tables, reused by both sweeps
@@ -277,12 +252,7 @@ def biconnected_components(graph: Graph) -> BiconnectedResult:
         .distinct()
     )
 
-    for df in (und, sym, visited, tree, sizes, pre, nontree, info):
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-    ckpt.close()
+    unpersist(und, sym, forest, tree, sizes, pre, nontree, info)
     return BiconnectedResult(edge_blocks=edge_blocks, node_blocks=node_blocks,
                              levels=depth)
 

@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.storagelevel import StorageLevel
 
 from networkit_spark.graph import Graph
-from networkit_spark.plans.iterative import Checkpointer, truncate
+from networkit_spark.plans.iterative import Checkpointer, materialize, truncate
 
 
 def degree_centrality(graph: Graph, normalized: bool = False) -> DataFrame:
@@ -60,12 +60,15 @@ def katz_centrality(
                 "old",
             )
         )
-        snap = ckpt.save(new, it, None)
-        diff = snap.agg(F.sqrt(F.sum(F.pow(F.col("score") - F.col("old"), 2)))).first()[0]
+        snap = ckpt.save(new, it, {
+            "diff": F.sqrt(F.sum(F.pow(F.col("score") - F.col("old"), 2))),
+            "norm": F.sqrt(F.sum(F.pow("score", 2))),
+        })
+        diff = ckpt.records[-1]["diff"]
         x = snap.select("id", "score")
         if diff is not None and diff <= tol:
             break
-    norm = x.agg(F.sqrt(F.sum(F.pow("score", 2)))).first()[0] or 1.0
+    norm = (ckpt.records[-1]["norm"] if ckpt.records else None) or 1.0
     out = x.select("id", (F.col("score") / F.lit(norm)).alias("score"))
     ckpt.close()
     return out
@@ -80,12 +83,12 @@ def core_decomposition(graph: Graph, max_iterations: int = 10000) -> DataFrame:
     spark = graph.edges.sparkSession
     ckpt = Checkpointer(spark, None, algorithm="kcore")
     und = graph.simple_undirected_edges().persist(StorageLevel.MEMORY_AND_DISK)
-    remaining_v = graph.vertices().transform(truncate)
+    remaining_v, left = materialize(graph.vertices())
     remaining_e = und
     out = None
     k = 0
     it = 0
-    while remaining_v.limit(1).count() > 0 and it < max_iterations:
+    while left["rows"] > 0 and it < max_iterations:
         it += 1
         deg = (
             remaining_e.select(F.col("u").alias("id"))
@@ -99,12 +102,12 @@ def core_decomposition(graph: Graph, max_iterations: int = 10000) -> DataFrame:
         peel = degs.filter(F.col("d") <= k).select("id").withColumn(
             "core", F.lit(k).cast("long")
         )
-        peel = ckpt.save(peel, it, None)
-        if peel.limit(1).count() == 0:
+        peel = ckpt.save(peel, it)
+        if ckpt.records[-1]["rows"] == 0:
             k += 1
             continue
         out = peel if out is None else truncate(out.unionByName(peel), release=out)
-        remaining_v = truncate(
+        remaining_v, left = materialize(
             remaining_v.join(peel.select("id"), "id", "left_anti"), release=remaining_v
         )
         remaining_e = truncate(
@@ -146,8 +149,8 @@ def eigenvector_centrality(
             "id",
             (F.col("raw") / F.lit(norm)).alias("score"),
         ).join(x.withColumnRenamed("score", "old"), "id")
-        snap = ckpt.save(new, _ + 1, None)
-        diff = snap.agg(F.max(F.abs(F.col("score") - F.col("old")))).first()[0]
+        snap = ckpt.save(new, _ + 1, {"diff": F.max(F.abs(F.col("score") - F.col("old")))})
+        diff = ckpt.records[-1]["diff"]
         x = snap.select("id", "score")
         if diff is not None and diff <= tol:
             break

@@ -80,14 +80,13 @@ def connected_components(
     resume: bool = False,
     max_iterations: int | None = None,
     initial_labels: DataFrame | None = None,
-    shortcut: bool = True,
 ) -> ComponentsResult:
     """initial_labels (id, label): warm start — valid whenever every given
     label is the id of SOME vertex in the same component (e.g. the fixed
     point of a previous run on a subgraph, used by streaming incremental
     CC); hash-min converges to the same fixed point from any such seed.
 
-    shortcut=True adds pointer-doubling per superstep (label ←
+    Every superstep adds pointer doubling (label ←
     min(label, label[label]) — one extra self-join): supersteps drop from
     O(diameter) to O(log diameter) on chain-heavy graphs, the standard
     large-star/small-star-class optimization (Kiveris et al., SoCC'14);
@@ -132,20 +131,19 @@ def connected_components(
             .groupBy("id")
             .agg(F.min("label").alias("new_label"))
         )
-        if shortcut:
-            # pointer doubling: follow one more hop through the label table
-            hop = new.select(
-                F.col("id").alias("label_id"), F.col("new_label").alias("hop_label")
+        # pointer doubling: follow one more hop through the label table
+        hop = new.select(
+            F.col("id").alias("label_id"), F.col("new_label").alias("hop_label")
+        )
+        new = (
+            new.join(hop, new.new_label == hop.label_id, "left")
+            .select(
+                "id",
+                F.least(
+                    F.col("new_label"), F.coalesce("hop_label", F.col("new_label"))
+                ).alias("new_label"),
             )
-            new = (
-                new.join(hop, new.new_label == hop.label_id, "left")
-                .select(
-                    "id",
-                    F.least(
-                        F.col("new_label"), F.coalesce("hop_label", F.col("new_label"))
-                    ).alias("new_label"),
-                )
-            )
+        )
         merged = (
             state.select("id", F.col("label").alias("old_label"))
             .join(new, "id")

@@ -46,7 +46,62 @@ from networkit_spark.plans.iterative import materialize, truncate
 from networkit_spark.session import local_frame
 
 
-# --------------------------------------------------------- multi-source BFS
+# --------------------------------------------------------- BFS kernel
+def _bfs_step(arcs: DataFrame, visited: DataFrame, depth: int,
+              keys=(), aggs=()) -> tuple[DataFrame, int]:
+    """One BFS level in ONE Spark action. The frontier is visited's
+    level depth - 1; its out-neighbours over `arcs(src, dst)`, grouped by
+    (*keys, id) with `aggs` (or distinct), minus visited on (*keys, id),
+    tagged dist = depth, are materialized together with visited as the
+    new visited set (the old one is released). Returns (visited, rows
+    of the new level)."""
+    keys = list(keys)
+    frontier = visited.filter(F.col("dist") == depth - 1)
+    hop = frontier.join(arcs, frontier.id == arcs.src)
+    if aggs:
+        level = hop.groupBy(*keys, F.col("dst").alias("id")).agg(*aggs)
+    else:
+        level = hop.select(*keys, F.col("dst").alias("id")).distinct()
+    level = (
+        level.join(visited.select(*keys, "id"), [*keys, "id"], "left_anti")
+        .withColumn("dist", F.lit(depth).cast("long"))
+    )
+    # coalesce: the union would otherwise add the level's partitions to
+    # visited's at every level
+    width = int(visited.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    visited, seen = materialize(
+        visited.unionByName(level).coalesce(width),
+        {"new": F.count_if(F.col("dist") == depth)},
+        release=visited,
+    )
+    return visited, seen["new"]
+
+
+def _bfs_levels(arcs: DataFrame, seeds: DataFrame, keys=(), aggs=(),
+                max_depth: int | None = None) -> tuple[DataFrame, int]:
+    """Level-synchronous BFS from `seeds(*keys, id, *aggs)` over the cached
+    `arcs(src, dst)`: every traversal in the engine is this loop (SURVEY.md
+    §2.4, "BFS = repeated frontier semi-join"). `keys` run independent
+    searches side by side (one per source s, or per root); `aggs` fold
+    the frontier rows that reach a vertex (path counts, a parent), over
+    the join of frontier and arc columns. Returns (visited, depth):
+    visited = (*keys, id, *aggs, dist) for every reached vertex, one
+    cached frame; depth = the last non-empty level.
+
+    visited is re-materialized with each level in that level's one
+    action, so its plan stays flat (one cached scan) however deep the
+    search goes; a union of per-level caches would instead add a scan,
+    and its tasks, per level."""
+    visited = truncate(seeds.withColumn("dist", F.lit(0).cast("long")))
+    depth = 0
+    while max_depth is None or depth < max_depth:
+        visited, rows = _bfs_step(arcs, visited, depth + 1, keys, aggs)
+        if rows == 0:
+            break
+        depth += 1
+    return visited, depth
+
+
 def multi_source_bfs(
     graph: Graph,
     sources: DataFrame,
@@ -54,40 +109,17 @@ def multi_source_bfs(
 ) -> DataFrame:
     """(s, id, dist) hop distances from every source in `sources(s)` to
     every reachable vertex. Unreached pairs are absent (reference SSSP
-    marks them infinity). One superstep per BFS level for ALL sources."""
-    sym = graph.symmetrized_edges().select("src", "dst")
-    if graph.directed:
-        sym = graph.edges.select("src", "dst")
-    sym = sym.persist(StorageLevel.MEMORY_AND_DISK)
-    sym.count()
-
-    level0 = truncate(
+    marks them infinity). One superstep per BFS level for ALL sources.
+    Undirected edges are stored both ways, so `graph.edges` is the arc
+    table for either kind of graph."""
+    arcs = graph.edges.select("src", "dst").persist(StorageLevel.MEMORY_AND_DISK)
+    seeds = (
         sources.select(F.col("s").cast("long").alias("s"))
         .distinct()
-        .select("s", F.col("s").alias("id"), F.lit(0).cast("long").alias("dist"))
+        .select("s", F.col("s").alias("id"))
     )
-    # visited = plain union of the per-level checkpoints: each level is
-    # already truncated, so the union's lineage stays shallow (≤ diameter
-    # cached scans) and needs no re-materialization of its own — halves
-    # the per-level job count vs truncating the union too.
-    visited = level0
-    frontier = level0
-    depth = 0
-    while max_depth is None or depth < max_depth:
-        depth += 1
-        nxt = (
-            frontier.join(sym, frontier.id == sym.src)
-            .select("s", F.col("dst").alias("id"))
-            .distinct()
-            .join(visited.select("s", "id"), ["s", "id"], "left_anti")
-            .withColumn("dist", F.lit(depth).cast("long"))
-        )
-        nxt, seen = materialize(nxt)
-        if seen["rows"] == 0:
-            break
-        visited = visited.unionByName(nxt)
-        frontier = nxt
-    sym.unpersist()
+    visited, _ = _bfs_levels(arcs, seeds, keys=("s",), max_depth=max_depth)
+    arcs.unpersist()
     return visited
 
 

@@ -54,7 +54,7 @@ from networkit_spark.operators.pll import (
     pll_query,
     pruned_landmark_labeling,
 )
-from networkit_spark.plans.iterative import materialize, truncate
+from networkit_spark.plans.iterative import materialize, truncate, unpersist
 from networkit_spark.session import local_frame
 
 
@@ -145,11 +145,7 @@ def _dyn_pruned_bfs(
     for df in out[1:]:
         res = res.unionByName(df)
     res = truncate(res)
-    for df in keep:
-        try:
-            df.unpersist()
-        except Exception:
-            pass
+    unpersist(*keep)
     return res
 
 

@@ -106,7 +106,6 @@ def label_propagation_async(
     labels = vertices.select("id", F.col("id").alias("label")).transform(truncate)
     iterations = 0
     n_updated = n
-    history: list[dict] = []
     while n_updated > threshold and iterations < max_iterations:
         nbr_labels = labels.select(
             F.col("id").alias("nbr"), F.col("label").alias("nbr_label")
@@ -128,14 +127,14 @@ def label_propagation_async(
             )
         )
         iterations += 1
-        snap = ckpt.save(merged, iterations, None)
-        n_updated = snap.filter("changed").count()
-        history.append({"iteration": iterations, "updated": int(n_updated)})
+        snap = ckpt.save(merged, iterations, {"updated": F.count_if("changed")})
+        n_updated = ckpt.records[-1]["updated"]
         labels = snap.select("id", "label")
 
     sym.unpersist()
     ckpt.close()
-    return AsyncPLPResult(labels=labels, iterations=iterations, history=history)
+    return AsyncPLPResult(labels=labels, iterations=iterations,
+                          history=ckpt.log(iterations))
 
 
 def _degree_sweep(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -216,7 +215,6 @@ def lp_degree_ordered(
     labels = vertices.select("id", F.col("id").alias("label")).transform(truncate)
     iterations = 0
     n_updated = n
-    history: list[dict] = []
     while n_updated > threshold and iterations < max_iterations:
         nbr_labels = labels.select(
             F.col("id").alias("nbr"), F.col("label").alias("nbr_label")
@@ -238,11 +236,11 @@ def lp_degree_ordered(
             )
         )
         iterations += 1
-        snap = ckpt.save(merged, iterations, None)
-        n_updated = snap.filter("changed").count()
-        history.append({"iteration": iterations, "updated": int(n_updated)})
+        snap = ckpt.save(merged, iterations, {"updated": F.count_if("changed")})
+        n_updated = ckpt.records[-1]["updated"]
         labels = snap.select("id", "label")
 
     sym.unpersist()
     ckpt.close()
-    return AsyncPLPResult(labels=labels, iterations=iterations, history=history)
+    return AsyncPLPResult(labels=labels, iterations=iterations,
+                          history=ckpt.log(iterations))

@@ -162,8 +162,8 @@ def _expand_batch(spark, sym, wdeg, seeds, alpha, max_supersteps, ckpt):
                  .alias("best"))
             .select("community", (-F.col("best.nid")).alias("id"))
         )
-        picks = ckpt.save(picks, step, None)
-        if picks.limit(1).count() == 0:
+        picks = ckpt.save(picks, step)
+        if ckpt.records[-1]["rows"] == 0:
             break
         member = truncate(member.unionByName(picks), release=member)
         member = _removal_loop(member, sym, wdeg, alpha, ckpt, step,
@@ -205,8 +205,8 @@ def _removal_loop(member, sym, wdeg, alpha, ckpt, step, max_inner):
                  .alias("best"))
             .select("community", (-F.col("best.nid")).alias("id"))
         )
-        drops = ckpt.save(drops, step, None)
-        if drops.limit(1).count() == 0:
+        drops = ckpt.save(drops, step)
+        if ckpt.records[-1]["rows"] == 0:
             return member
         member = truncate(member.join(drops, ["community", "id"], "left_anti"),
                           release=member)

@@ -43,7 +43,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.storagelevel import StorageLevel
 
 from networkit_spark.graph import Graph
-from networkit_spark.plans.iterative import Checkpointer
+from networkit_spark.plans.iterative import Checkpointer, unpersist
 
 NO_SINK_HANDLING = "no_sink_handling"
 DISTRIBUTE_SINKS = "distribute_sinks"
@@ -128,13 +128,7 @@ class PreparedPageRank:
         return self._n_sinks
 
     def unpersist(self):
-        for df in (self.vertices, self.edges_norm, self._sinks):
-            if df is None:
-                continue
-            try:
-                df.unpersist()
-            except Exception:
-                pass
+        unpersist(self.vertices, self.edges_norm, self._sinks)
 
 
 def pagerank(

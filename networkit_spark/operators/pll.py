@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.storagelevel import StorageLevel
 
 from networkit_spark.graph import Graph
-from networkit_spark.plans.iterative import materialize, truncate
+from networkit_spark.plans.iterative import materialize, truncate, unpersist
 from networkit_spark.plans.ranking import global_ranks_score_desc
 from networkit_spark.session import local_frame
 
@@ -159,13 +159,6 @@ def pruned_landmark_labeling(
 
     spark = fwd.sparkSession
 
-    def _release(snapshots) -> None:
-        for df in snapshots:
-            try:
-                df.unpersist()
-            except Exception:
-                pass
-
     def _roots(b0: int) -> DataFrame:
         # No frame-level broadcast hint: one consumer is the frontier
         # INIT (a plain select, no join), where the hint is unusable and
@@ -181,7 +174,7 @@ def pruned_landmark_labeling(
         for b0 in range(0, n, batch_size):
             batch, snapshots = _pruned_batch_bfs(fwd, labels, labels, _roots(b0))
             labels = truncate(labels.unionByName(batch), release=labels)
-            _release(snapshots)
+            unpersist(*snapshots)
         fwd.unpersist()
         return labels
 
@@ -199,8 +192,8 @@ def pruned_landmark_labeling(
         batch_in, snaps_r = _pruned_batch_bfs(rev, labels_out, labels_in, roots)
         labels_out = truncate(labels_out.unionByName(batch_out), release=labels_out)
         labels_in = truncate(labels_in.unionByName(batch_in), release=labels_in)
-        _release(snaps_f)
-        _release(snaps_r)
+        unpersist(*snaps_f)
+        unpersist(*snaps_r)
     fwd.unpersist()
     return labels_out, labels_in
 

@@ -32,7 +32,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, functions as F
 
 from networkit_spark.graph import Graph
-from networkit_spark.plans.iterative import Checkpointer, truncate
+from networkit_spark.operators.distances import _bfs_levels
+from networkit_spark.plans.iterative import Checkpointer, materialize, truncate, unpersist
 
 
 @dataclass
@@ -98,8 +99,8 @@ def _propagate_max_color(vertices: DataFrame, edges: DataFrame,
             .select("id", F.col("new_color").alias("color"),
                     (F.col("new_color") != F.col("old")).alias("changed"))
         )
-        snap = ckpt.save(merged, tag * 1000 + it, None)
-        changed = snap.filter("changed").limit(1).count()
+        snap = ckpt.save(merged, tag * 1000 + it, {"changed": F.count_if("changed")})
+        changed = ckpt.records[-1]["changed"]
         colors = snap.select("id", "color")
     # expose the class id (the root vertex) — downstream only needs it
     return colors.select("id", F.col("color")["cid"].alias("color"))
@@ -111,7 +112,7 @@ def strongly_connected_components(graph: Graph, max_rounds: int = 1000) -> SCCRe
                          "connected_components for undirected")
     spark = graph.edges.sparkSession
     ckpt = Checkpointer(spark, None, algorithm="scc")
-    remaining_v = truncate(graph.vertices())
+    remaining_v, left = materialize(graph.vertices())
     remaining_e = truncate(
         graph.edges.select("src", "dst")
         .filter(F.col("src") != F.col("dst"))
@@ -120,7 +121,7 @@ def strongly_connected_components(graph: Graph, max_rounds: int = 1000) -> SCCRe
     out = None
     rounds = 0
     history: list[dict] = []
-    while remaining_v.limit(1).count() > 0 and rounds < max_rounds:
+    while left["rows"] > 0 and rounds < max_rounds:
         rounds += 1
         # bulk-peel trivial SCCs: no in-edges or no out-edges in remainder
         has_out = remaining_e.select(F.col("src").alias("id")).distinct()
@@ -131,11 +132,11 @@ def strongly_connected_components(graph: Graph, max_rounds: int = 1000) -> SCCRe
         trivial = remaining_v.join(nontrivial, "id", "left_anti").select(
             "id", F.col("id").alias("label")
         )
-        trivial = ckpt.save(trivial, rounds * 100000, None)
-        n_trivial = trivial.count()
+        trivial = ckpt.save(trivial, rounds * 100000)
+        n_trivial = ckpt.records[-1]["rows"]
         if n_trivial:
             out = trivial if out is None else truncate(out.unionByName(trivial), release=out)
-            remaining_v = truncate(
+            remaining_v, left = materialize(
                 remaining_v.join(trivial.select("id"), "id", "left_anti"),
                 release=remaining_v,
             )
@@ -145,14 +146,15 @@ def strongly_connected_components(graph: Graph, max_rounds: int = 1000) -> SCCRe
                 .select("src", "dst"),
                 release=remaining_e,
             )
-            if remaining_v.limit(1).count() == 0:
+            if left["rows"] == 0:
                 history.append({"round": rounds, "trivial": int(n_trivial), "scc": 0})
                 break
 
         # 1. forward color propagation (max id wins)
         colors = _propagate_max_color(remaining_v, remaining_e, ckpt, rounds)
 
-        # 2. backward min-reach to the root within each color class
+        # 2. backward reach to the root within each color class: the BFS
+        # level kernel keyed by root over the reversed same-color arcs
         csrc = colors.select(F.col("id").alias("src"), F.col("color").alias("c_src"))
         cdst = colors.select(F.col("id").alias("dst"), F.col("color").alias("c_dst"))
         same_color_rev = truncate(
@@ -160,33 +162,21 @@ def strongly_connected_components(graph: Graph, max_rounds: int = 1000) -> SCCRe
             .filter(F.col("c_src") == F.col("c_dst"))
             .select(F.col("dst").alias("src"), F.col("src").alias("dst"))  # reversed
         )
-        # frontier = roots; propagate membership backward
-        member = colors.filter(F.col("id") == F.col("color")).select(
-            "id", F.col("color").alias("root")
+        roots = colors.filter(F.col("id") == F.col("color")).select(
+            F.col("color").alias("root"), "id"
         )
-        frontier = member
-        while True:
-            nxt = (
-                frontier.join(same_color_rev, frontier.id == same_color_rev.src)
-                .select(F.col("dst").alias("id"), "root")
-                .distinct()
-                .join(member.select("id"), "id", "left_anti")
-            )
-            nxt = ckpt.save(nxt, rounds * 100000 + 50000, None)
-            if nxt.limit(1).count() == 0:
-                break
-            member = truncate(member.unionByName(nxt), release=member)
-            frontier = nxt
+        member, _ = _bfs_levels(same_color_rev, roots, keys=("root",))
 
         scc = member.groupBy("root").agg(F.min("id").alias("label")).join(
             member, "root"
         ).select("id", "label")
-        scc = ckpt.save(scc, rounds * 100000 + 99999, None)
-        n_scc = scc.count()
+        scc = ckpt.save(scc, rounds * 100000 + 99999)
+        n_scc = ckpt.records[-1]["rows"]
         history.append({"round": rounds, "trivial": int(n_trivial), "scc": int(n_scc)})
+        unpersist(same_color_rev, member)
 
         out = scc if out is None else truncate(out.unionByName(scc), release=out)
-        remaining_v = truncate(
+        remaining_v, left = materialize(
             remaining_v.join(scc.select("id"), "id", "left_anti"), release=remaining_v
         )
         remaining_e = truncate(

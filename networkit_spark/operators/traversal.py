@@ -1,4 +1,4 @@
-"""Single-source traversals as iterative frontier programs.
+"""Single-source traversals on the engine's two frontier kernels.
 
 Reference surface: Traversal.BFSfrom/DijkstraFrom callbacks
 (networkit/traversal.pyx:76-111, include/networkit/graph/BFS.hpp) and the
@@ -7,9 +7,14 @@ The Spark translation (SURVEY.md §2.4): BFS = repeated frontier
 semi-join; Dijkstra's priority queue has no distributed analog, so
 weighted SSSP is Bellman-Ford-style relaxation (same fixed point,
 O(longest-shortest-path-hops) supersteps) — the standard Pregel SSSP.
+Both are written once: the BFS level in `distances._bfs_levels` (one
+Spark action per level) and the relaxation round in
+`apsp._relax`; a single source is the one-row case of their
+multi-source form.
 
-Also here: isBipartite (2-coloring from BFS parity) and topologicalSort
-(distributed Kahn peeling) — GraphTools.hpp:423-438,574.
+Also here: isBipartite (2-coloring from BFS parity), topologicalSort
+(distributed Kahn peeling) — GraphTools.hpp:423-438,574 — and the
+DFS orders, replayed locally over the reachable component.
 """
 
 from __future__ import annotations
@@ -18,7 +23,9 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.storagelevel import StorageLevel
 
 from networkit_spark.graph import Graph
-from networkit_spark.plans.iterative import Checkpointer, truncate
+from networkit_spark.operators.apsp import multi_source_bellman_ford
+from networkit_spark.operators.distances import _bfs_levels, multi_source_bfs
+from networkit_spark.plans.iterative import Checkpointer, truncate, unpersist
 from networkit_spark.session import local_frame
 
 
@@ -26,116 +33,50 @@ def bfs_distances(graph: Graph, source: int, max_iterations: int | None = None) 
     """(id, distance) hop counts from source; unreachable vertices are
     absent (reference marks them none/infinity)."""
     spark = graph.edges.sparkSession
-    ckpt = Checkpointer(spark, None, algorithm="bfs")
-    sym = graph.edges.select("src", "dst")
-    if not graph.directed:
-        sym = graph.symmetrized_edges().select("src", "dst")
-    sym = sym.persist(StorageLevel.MEMORY_AND_DISK)
-
-    visited = local_frame(spark, [(source, 0)], "id long, distance long")
-    frontier = visited
-    depth = 0
-    while max_iterations is None or depth < max_iterations:
-        depth += 1
-        nxt = (
-            frontier.join(sym, frontier.id == sym.src)
-            .select(F.col("dst").alias("id"), F.lit(depth).cast("long").alias("distance"))
-            .distinct()
-            .join(visited.select("id"), "id", "left_anti")
-        )
-        nxt = ckpt.save(nxt, depth, None)
-        if nxt.limit(1).count() == 0:
-            break
-        visited = truncate(visited.unionByName(nxt), release=visited)
-        frontier = nxt
-    sym.unpersist()
-    ckpt.close()
-    return visited
+    seeds = local_frame(spark, [(int(source),)], "s long")
+    return multi_source_bfs(graph, seeds, max_depth=max_iterations).select(
+        "id", F.col("dist").alias("distance")
+    )
 
 
 def shortest_paths(graph: Graph, source: int,
                    max_iterations: int | None = None) -> DataFrame:
     """(id, distance) weighted shortest-path distances from source —
-    Bellman-Ford relaxation loop (DijkstraFrom parity at the fixed point;
-    requires non-negative weights like the reference's Dijkstra)."""
+    Bellman-Ford relaxation (DijkstraFrom parity at the fixed point;
+    requires non-negative weights like the reference's Dijkstra). After
+    k rounds every distance is the shortest over paths of at most k
+    arcs, so `max_iterations` gives that partial result."""
     spark = graph.edges.sparkSession
-    ckpt = Checkpointer(spark, None, algorithm="sssp")
-    edges = graph.symmetrized_edges() if not graph.directed else graph.edges
-    edges = edges.persist(StorageLevel.MEMORY_AND_DISK)
-
-    dist = local_frame(spark, [(source, 0.0)], "id long, distance double")
-    changed, it = 1, 0
-    while changed and (max_iterations is None or it < max_iterations):
-        it += 1
-        relaxed = (
-            dist.join(edges, dist.id == edges.src)
-            .select(F.col("dst").alias("id"),
-                    (F.col("distance") + F.col("weight")).alias("distance"))
-        )
-        new = (
-            dist.unionByName(relaxed)
-            .groupBy("id")
-            .agg(F.min("distance").alias("distance"))
-        )
-        merged = new.join(
-            dist.withColumnRenamed("distance", "old"), "id", "left"
-        ).select(
-            "id", "distance",
-            (F.col("old").isNull() | (F.col("distance") < F.col("old"))).alias("improved"),
-        )
-        snap = ckpt.save(merged, it, None)
-        changed = snap.filter("improved").limit(1).count()
-        dist = snap.select("id", "distance")
-    edges.unpersist()
-    ckpt.close()
-    return dist
+    seeds = local_frame(spark, [(int(source),)], "s long")
+    return multi_source_bellman_ford(graph, seeds, max_rounds=max_iterations).select(
+        "id", F.col("dist").alias("distance")
+    )
 
 
 def is_bipartite(graph: Graph) -> bool:
     """GraphTools::isBipartite (GraphTools.hpp:574): 2-colorable ⇔ no
-    edge joins two vertices of equal BFS parity. Runs one BFS per
-    component via the hash-min component structure: color = parity of
-    distance from the component's min-id vertex."""
+    edge joins two vertices of equal BFS parity. One BFS from every
+    component root (the hash-min component's min-id vertex) at once over
+    the symmetrized arcs (direction plays no part in 2-coloring);
+    color = parity of the distance from the root. A self-loop joins a
+    vertex to itself, so it fails the same check."""
     from networkit_spark.operators.components import connected_components
 
     comps = connected_components(graph).labels  # (id, label=min id of comp)
-    sym = graph.symmetrized_edges().select("src", "dst")
-
-    # multi-source BFS: all component roots at distance 0 simultaneously
-    spark = graph.edges.sparkSession
-    ckpt = Checkpointer(spark, None, algorithm="bipartite")
-    visited = comps.filter(F.col("id") == F.col("label")).select(
-        "id", F.lit(0).cast("long").alias("parity")
+    sym = graph.symmetrized_edges().select("src", "dst").persist(
+        StorageLevel.MEMORY_AND_DISK
     )
-    frontier = visited
-    depth = 0
-    while True:
-        depth += 1
-        nxt = (
-            frontier.join(sym, frontier.id == sym.src)
-            .select(F.col("dst").alias("id"),
-                    F.lit(depth % 2).cast("long").alias("parity"))
-            .distinct()
-            .join(visited.select("id"), "id", "left_anti")
-            .dropDuplicates(["id"])  # reachable at both parities → pick one; the edge check below catches the conflict
-        )
-        nxt = ckpt.save(nxt, depth, None)
-        if nxt.limit(1).count() == 0:
-            break
-        visited = truncate(visited.unionByName(nxt), release=visited)
-        frontier = nxt
-    pu = visited.select(F.col("id").alias("src"), F.col("parity").alias("pu"))
-    pv = visited.select(F.col("id").alias("dst"), F.col("parity").alias("pv"))
-    bad = (
-        sym.filter(F.col("src") != F.col("dst"))
-        .join(pu, "src").join(pv, "dst")
+    roots = comps.filter(F.col("id") == F.col("label")).select("id")
+    visited, _ = _bfs_levels(sym, roots)
+    pu = visited.select(F.col("id").alias("src"), (F.col("dist") % 2).alias("pu"))
+    pv = visited.select(F.col("id").alias("dst"), (F.col("dist") % 2).alias("pv"))
+    bipartite = (
+        sym.join(pu, "src").join(pv, "dst")
         .filter(F.col("pu") == F.col("pv"))
-        .limit(1)
-        .count()
+        .isEmpty()
     )
-    has_loop = graph.number_of_self_loops() > 0
-    ckpt.close()
-    return bad == 0 and not has_loop
+    unpersist(sym, visited)
+    return bipartite
 
 
 def topological_sort(graph: Graph) -> DataFrame:
@@ -157,9 +98,8 @@ def topological_sort(graph: Graph) -> DataFrame:
         zero_in = remaining_v.join(with_in, "id", "left_anti").withColumn(
             "level", F.lit(level).cast("long")
         )
-        zero_in = ckpt.save(zero_in, level + 1, None)
-        n_zero = zero_in.count()
-        if n_zero == 0:
+        zero_in = ckpt.save(zero_in, level + 1)
+        if ckpt.records[-1]["rows"] == 0:
             if remaining_v.limit(1).count() > 0:
                 edges.unpersist()
                 raise ValueError("graph has a cycle — no topological order")

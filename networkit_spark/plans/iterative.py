@@ -41,12 +41,15 @@ def _aggregates(measures: dict[str, Column] | None) -> list[Column]:
     return [F.count(F.lit(1)).alias("rows")] + [c.alias(k) for k, c in (measures or {}).items()]
 
 
-def _unpersist(df: DataFrame | None) -> None:
-    if df is not None:
-        try:
-            df.unpersist()
-        except Exception:
-            pass
+def unpersist(*dfs: DataFrame | None) -> None:
+    """Unpersist each frame given; None entries and failures are skipped
+    (a frame whose session or cache is already gone needs no release)."""
+    for df in dfs:
+        if df is not None:
+            try:
+                df.unpersist()
+            except Exception:
+                pass
 
 
 def materialize(df: DataFrame, measures: dict[str, Column] | None = None,
@@ -77,10 +80,10 @@ def materialize(df: DataFrame, measures: dict[str, Column] | None = None,
         # accurate: it IS the materialized relation).
         if "key not found" not in str(e):
             raise
-        _unpersist(out)
+        unpersist(out)
         out = df.localCheckpoint(eager=False)
         row = out.agg(*aggs).first()
-    _unpersist(release)
+    unpersist(release)
     return out, row.asDict()
 
 
@@ -190,5 +193,5 @@ class Checkpointer:
         return [by_iteration.get(k, {"iteration": k}) for k in range(1, iterations + 1)]
 
     def close(self):
-        _unpersist(self._state)
+        unpersist(self._state)
         self._state = None

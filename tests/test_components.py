@@ -213,15 +213,12 @@ def test_twophase_directed_and_isolated(spark):
 
 
 def test_cc_shortcut_fewer_supersteps_on_chain(spark):
-    """Path graph P_65: plain hash-min needs ~diameter supersteps; pointer
-    doubling needs O(log)."""
+    """Path graph P_65: plain hash-min would need ~diameter (64)
+    supersteps; pointer doubling needs O(log)."""
     edges = [(i, i + 1) for i in range(64)]
     g = Graph.from_pairs(spark, edges, directed=False, n=65)
-    fast = connected_components(g, shortcut=True)
+    fast = connected_components(g)
     assert fast.number_of_components() == 1
     labels = {r["id"]: r["label"] for r in fast.labels.collect()}
     assert set(labels.values()) == {0}
-    slow = connected_components(g, shortcut=False)
-    assert slow.number_of_components() == 1
-    assert fast.iterations < slow.iterations
     assert fast.iterations <= 10

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 from networkit_spark.graph import Graph
 from networkit_spark.operators.distances import (
     GENERALIZED,
+    _bfs_levels,
     closeness_centrality,
     diameter_double_sweep,
     diameter_exact,
@@ -24,6 +25,7 @@ from networkit_spark.operators.distances import (
 )
 from networkit_spark.session import local_frame
 from tests.fixtures import F1_EDGES, F1_N, erdos_renyi
+from tests.oracle.brandes import path_counts_oracle
 from tests.oracle.dist import (
     closeness_oracle,
     effective_diameter_oracle,
@@ -44,6 +46,28 @@ def test_multi_source_bfs_directed(spark):
         (r["s"], r["id"]): r["dist"] for r in multi_source_bfs(g, src).collect()
     }
     assert got == {(0, 0): 0, (0, 1): 1, (0, 2): 2, (2, 2): 0}
+
+
+def test_bfs_levels_keyed_path_counts_vs_brandes(spark):
+    """The BFS level kernel keyed by source with sum(sigma): every reached
+    (s, id) carries the oracle's hop distance and shortest-path count,
+    and the returned depth is the deepest level."""
+    n = 60
+    edges = erdos_renyi(n, 0.08)
+    g = Graph.from_pairs(spark, edges, directed=False, n=n)
+    sources = [0, 7, 23, 59]
+    seeds = local_frame(spark, [(s, s, 1.0) for s in sources], "s long, id long, sigma double")
+    arcs = g.edges.select("src", "dst")
+    visited, depth = _bfs_levels(
+        arcs, seeds, keys=("s",), aggs=(F.sum("sigma").alias("sigma"),)
+    )
+    got = {(r["s"], r["id"]): (r["dist"], r["sigma"]) for r in visited.collect()}
+    want = path_counts_oracle(n, edges, sources)
+    assert got.keys() == want.keys()
+    for key, (d, sigma) in want.items():
+        assert got[key][0] == d
+        assert got[key][1] == pytest.approx(sigma, rel=1e-12)
+    assert depth == max(d for d, _ in want.values())
 
 
 def test_closeness_path_graph(spark):

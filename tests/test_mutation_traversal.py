@@ -75,6 +75,19 @@ def test_shortest_paths_weighted(spark):
     assert d == {0: 0.0, 2: 1.0, 1: 2.0}
 
 
+def test_shortest_paths_partial_rounds(spark):
+    # 0→1 w5 directly, 0→2→1 at w2: one round sees only one-arc paths,
+    # the second finds the cheaper two-arc path
+    edges = [(0, 1, 5.0), (0, 2, 1.0), (2, 1, 1.0)]
+    g = Graph.from_pairs(spark, edges, directed=True, n=3, weighted=True)
+
+    def dist(k):
+        return {r["id"]: r["distance"] for r in shortest_paths(g, 0, max_iterations=k).collect()}
+
+    assert dist(1) == {0: 0.0, 1: 5.0, 2: 1.0}
+    assert dist(2) == {0: 0.0, 1: 2.0, 2: 1.0}
+
+
 def test_bipartite(spark):
     even_cycle = Graph.from_pairs(spark, [(0, 1), (1, 2), (2, 3), (3, 0)],
                                   directed=False, n=4)
@@ -97,3 +110,28 @@ def test_topological_sort_cycle_raises(spark):
     g = Graph.from_pairs(spark, [(0, 1), (1, 0)], directed=True, n=2)
     with pytest.raises(ValueError, match="cycle"):
         topological_sort(g)
+
+
+def test_bipartite_directed(spark):
+    # 2-coloring ignores direction: arcs into and out of the same side
+    bipartite = Graph.from_pairs(spark, [(0, 1), (2, 1), (2, 3), (0, 3)],
+                                 directed=True, n=4)
+    assert is_bipartite(bipartite)
+    odd_cycle = Graph.from_pairs(spark, [(0, 1), (1, 2), (2, 0)],
+                                 directed=True, n=3)
+    assert not is_bipartite(odd_cycle)
+    # an odd cycle that is not a directed cycle
+    odd_mixed = Graph.from_pairs(spark, [(0, 1), (0, 2), (1, 2)],
+                                 directed=True, n=3)
+    assert not is_bipartite(odd_mixed)
+
+
+def test_bipartite_two_components(spark):
+    even = [(0, 1), (1, 2), (2, 3), (3, 0)]
+    odd = [(4, 5), (5, 6), (6, 4)]
+    assert is_bipartite(Graph.from_pairs(spark, even + [(4, 5), (5, 6)],
+                                         directed=False, n=7))
+    assert not is_bipartite(Graph.from_pairs(spark, even + odd,
+                                             directed=False, n=7))
+    assert not is_bipartite(Graph.from_pairs(spark, odd + [(0, 1)],
+                                             directed=False, n=7))
